@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import scala.util.control.NonFatal
 
@@ -207,18 +206,23 @@ object Bench {
     hi < 1000L || hi.toDouble <= 1.5 * lo.max(1L).toDouble
   }
 
-  /** Per-query priors from the last BENCH_DETAIL.json (committed each
-    * round): the `queries` map only, and only when that record was taken
-    * at the SAME scale factor — an sf0.001 detail file must not make every
-    * sf0.1 time look like a 3× stall. Parsed as real JSON (Jackson rides
-    * Spark's classpath) — round 8's string/regex match silently loaded
-    * nothing against a pretty-printed detail file, so the retry layer
-    * never engaged on the one run that needed it. Paths are normalized
-    * before comparing so `/root/testdata/sf0.1` and `/root/testdata/sf0.1/`
-    * are the same scale factor. Absent or unparsable priors disable the
-    * retry trigger, never the run. */
+  /** Priors from the last BENCH_DETAIL.json: per-query seconds
+    * (`queries`) and byte counters (`queries_bytes`, round 15). */
+  private[graft] case class Priors(times: Map[String, Double],
+      bytes: Map[String, IoBytes])
+
+  /** Priors from the last BENCH_DETAIL.json (committed each round), taken
+    * only when that record was at the SAME scale factor — an sf0.001
+    * detail file must not make every sf0.1 time look like a 3× stall.
+    * Parsed as real JSON (Jackson rides Spark's classpath) — round 8's
+    * string/regex match silently loaded nothing against a pretty-printed
+    * detail file, so the retry layer never engaged on the one run that
+    * needed it. Paths are normalized before comparing so `<dir>/sf0.1`
+    * and `<dir>/sf0.1/` are the same scale factor. `queries_bytes` is absent on pre-round-15 detail files, in
+    * which case the retry trigger falls back to time-only. Absent or
+    * unparsable priors disable the retry trigger, never the run. */
   private[graft] def loadPriors(sfDir: String,
-      detailPath: String = "BENCH_DETAIL.json"): Map[String, Double] =
+      detailPath: String = "BENCH_DETAIL.json"): Priors =
     try {
       import scala.jdk.CollectionConverters._
       def norm(p: String): String =
@@ -227,7 +231,6 @@ object Bench {
         .readTree(java.nio.file.Files.readString(
           java.nio.file.Paths.get(detailPath)))
       val recordedSf = Option(root.get("sf")).map(_.asText()).getOrElse("")
-      val queries = root.get("queries")
       // a query that FAILED in the prior run recorded a fail-fast stand-in
       // time (~10 ms), not a real measurement — using it as a prior would
       // stamp every healed successor a >3x "stall" and burn retries on
@@ -236,48 +239,28 @@ object Bench {
         .filter(_.isArray)
         .map(_.elements().asScala.map(_.asText()).toSet)
         .getOrElse(Set.empty)
-      if (norm(recordedSf) != norm(sfDir) || queries == null || !queries.isObject)
-        Map.empty
-      else queries.fields().asScala
-        .filter(e => e.getValue.isNumber && !failedThen.contains(e.getKey))
+      def entries(key: String) =
+        Option(root.get(key))
+          .filter(q => q.isObject && norm(recordedSf) == norm(sfDir))
+          .map(_.fields().asScala.filterNot(e => failedThen.contains(e.getKey)).toSeq)
+          .getOrElse(Nil)
+      val times = entries("queries")
+        .filter(_.getValue.isNumber)
         .map(e => e.getKey -> e.getValue.asDouble()).toMap
-    } catch { case NonFatal(_) => Map.empty }
-
-  /** Byte-counter priors from the last committed BENCH_DETAIL.json
-    * (`queries_bytes`, round 15) — same SF gate and failure discipline as
-    * [[loadPriors]]. Absent on pre-round-15 detail files, in which case the
-    * retry trigger falls back to time-only (never blocks the run). */
-  private[graft] def loadBytesPriors(sfDir: String,
-      detailPath: String = "BENCH_DETAIL.json"): Map[String, IoBytes] =
-    try {
-      import scala.jdk.CollectionConverters._
-      def norm(p: String): String =
-        java.nio.file.Paths.get(p).normalize().toString
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(detailPath)))
-      val recordedSf = Option(root.get("sf")).map(_.asText()).getOrElse("")
-      val qb = root.get("queries_bytes")
-      val failedThen: Set[String] = Option(root.get("failed"))
-        .filter(_.isArray)
-        .map(_.elements().asScala.map(_.asText()).toSet)
-        .getOrElse(Set.empty)
-      if (norm(recordedSf) != norm(sfDir) || qb == null || !qb.isObject)
-        Map.empty
-      else qb.fields().asScala
-        .filter(e => e.getValue.isObject && !failedThen.contains(e.getKey))
+      val bytes = entries("queries_bytes")
+        .filter(_.getValue.isObject)
         .map { e =>
-          def n(k: String): Long =
-            Option(e.getValue.get(k)).filter(_.isNumber).map(_.asLong()).getOrElse(0L)
+          def n(k: String, absent: Long): Long =
+            Option(e.getValue.get(k)).filter(_.isNumber).map(_.asLong()).getOrElse(absent)
           // cpu_ms: ABSENT (pre-r16 detail file) parses as -1, not 0 — a
           // prior that recorded no CPU must never ground a "provably
           // external" upgrade (cpuFlat's hi<1s branch would accept any
           // sub-second current CPU against a fake 0)
-          def nOpt(k: String): Long =
-            Option(e.getValue.get(k)).filter(_.isNumber).map(_.asLong()).getOrElse(-1L)
-          e.getKey -> IoBytes(n("shuffle"), n("spill"), n("input"), nOpt("cpu_ms"))
+          e.getKey -> IoBytes(n("shuffle", 0L), n("spill", 0L), n("input", 0L),
+            n("cpu_ms", -1L))
         }.toMap
-    } catch { case NonFatal(_) => Map.empty }
+      Priors(times, bytes)
+    } catch { case NonFatal(_) => Priors(Map.empty, Map.empty) }
 
   /** One timed execution: wall seconds, success flag, and the task-level
     * byte counters the run produced. */
@@ -360,7 +343,7 @@ object Bench {
     val tMax = if (anySuccess) attempts.filter(_.ok).map(_.sec).max
                else attempts.map(_.sec).max
     // a query with NO successful attempt measured nothing: record
-    // cpu_ms = -1 (the ABSENT sentinel loadBytesPriors already honors)
+    // cpu_ms = -1 (the ABSENT sentinel loadPriors already honors)
     // rather than 0, so a later round can never stamp a byte-flat
     // excursion "provably external" against a prior that measured
     // nothing (ADVICE r16 — belt to the `failed`-filter suspenders)
@@ -373,19 +356,13 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val priors = loadPriors(sfDir)
-    val bytesPriors = loadBytesPriors(sfDir)
     val (loadBefore, quietWait) = awaitQuietWindow(() => loadAvg())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // ERROR logging (Sessions.local), not WARN: shutdown-time WARN spam
+    // (e.g. DAGScheduler "Failed to cancel job group") lands in the 4 KB
+    // stdout tail right around the JSON line and crowds it out
+    val spark = Sessions.local(s"local[$cpus]")
     val byteCounter = new TaskBytesListener
     spark.sparkContext.addSparkListener(byteCounter)
-    // ERROR, not WARN: shutdown-time WARN spam (e.g. DAGScheduler "Failed
-    // to cancel job group") lands in the driver's 4 KB stdout tail right
-    // around the JSON line and crowds it out
-    spark.sparkContext.setLogLevel("ERROR")
     // Session warmup outside the timed region: first-scan/first-shuffle/
     // codegen JIT costs land here instead of on whichever query sorts first.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -417,9 +394,9 @@ object Bench {
             after.spill - before.spill, after.input - before.input,
             after.cpuMs - before.cpuMs))
         }
-        val m = measureOne(name, runs, priors.get(name), () => attempt(),
+        val m = measureOne(name, runs, priors.times.get(name), () => attempt(),
           loaded = loadBefore > LoadedSampleThreshold,
-          bytesPrior = bytesPriors.get(name))
+          bytesPrior = priors.bytes.get(name))
         (name, m)
       }
     val loadAfter = loadAvg()

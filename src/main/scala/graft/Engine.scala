@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
-/** Session tuning applied at the top of every query. The driver owns the
-  * SparkSession (Bench.scala/Verify.scala create it), so we only touch
-  * runtime-settable SQL confs here, never builder-time ones.
+/** Session tuning, applied once by `SparkEntry.queries` (before each
+  * registered builder runs) and `Sessions.local` (at session creation).
+  * The caller owns the SparkSession, so we only touch runtime-settable SQL
+  * confs here, never builder-time ones.
   *
   * Rationale (100 TB posture, tested at local[32]):
   *  - AQE on: runtime shuffle-partition coalescing, skew-join splitting and

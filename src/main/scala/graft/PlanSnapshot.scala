@@ -68,12 +68,7 @@ object PlanSnapshot {
       .mkString("{\n", ",\n", "\n}\n")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("local[8]")
     Files.writeString(Paths.get(SnapshotPath), render(digests(spark)))
     println(s"wrote $SnapshotPath")
     spark.stop()

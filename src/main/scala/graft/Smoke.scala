@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Developer smoke main: drives the driver contract the way the harness
@@ -8,12 +7,7 @@ import scala.util.control.NonFatal
   * prints what a user sees. `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("local[4]")
 
     val e = SparkEntry.entry(spark)
     println(s"ENTRY ROWS: ${e.count()}")

@@ -22,13 +22,7 @@ object SoakBasket {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/graft_soak")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"local[$cpus]")
     val bytes = new TaskBytesListener
     spark.sparkContext.addSparkListener(bytes)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Decade-scale soak for the CATALOG TABLE's maintenance claims (round
   * 17 continuation): every DML face promises cost proportional to the
   * FILES IT TOUCHES, never to table size — the difference between a
@@ -44,13 +42,7 @@ import org.apache.spark.sql.SparkSession
 object SoakCatalog {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"local[$cpus]")
     val bytes = new TaskBytesListener
     spark.sparkContext.addSparkListener(bytes)
 

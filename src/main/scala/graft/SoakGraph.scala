@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale soak for the TOP-SHUFFLE graph-mining family (round 16, VERDICT
   * r15 #5): the full fuzzy-dedup pipeline — MinHash signatures → banded
   * LSH buckets → capped candidate self-join → iterative min-label
@@ -21,13 +19,7 @@ object SoakGraph {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/graft_soak")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"local[$cpus]")
 
     // 1×/3×/10× of the sf0.1 document count, rounded up to the planted-
     // cluster period (32)

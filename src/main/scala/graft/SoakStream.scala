@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Decade-scale soak for the STREAMING family (round 16): the
   * registered watermarked append aggregate (`stream_hourly_append` —
   * [[graft.streaming.StreamingOps.hourlyAppend]], the canonical
@@ -32,13 +30,7 @@ object SoakStream {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/graft_soak")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"local[$cpus]")
 
     // 1x/3x/10x the sf0.1 event count (100k), rounded to whole hours
     val scales = Seq(108000L, 324000L, 1080000L) // 30 / 90 / 300 hours

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Soak probe for the TopKPerGroup DEGRADED path (plans/TopKPerGroup.scala):
   * when per-partition group cardinality exceeds `spark.graft.topk
   * .hashGroupLimit`, the exec abandons the bounded-heap map and hands the
@@ -21,12 +19,7 @@ object SoakTopK {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"local[$cpus]")
 
     def run(): Double = {
       val t0 = System.nanoTime()

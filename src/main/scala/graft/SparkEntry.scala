@@ -19,12 +19,16 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the §2.9 canonical dataflow end-to-end (scan → tokenize →
     * explode → grouped count → ordered output). */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Engine.tune(spark)
     EmojiQueries.q1Top(spark, "/root/testdata/sf0.001")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    EmojiQueries.queries ++
+  /** One entry per implemented operator from SURVEY.md §2. Each builder
+    * runs after [[Engine.tune]] on the caller's session, so the bodies
+    * carry no session policy of their own. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (EmojiQueries.queries ++
       TweetQueries.queries ++
       EventQueries.queries ++
       RelationalQueries.queries ++
@@ -33,7 +37,9 @@ object SparkEntry {
       TextAnalysis.queries ++
       Multimodal.queries ++
       Formats.queries ++
-      StreamingOps.queries
+      StreamingOps.queries).map { case (name, f) =>
+      name -> ((s: SparkSession, d: String) => { Engine.tune(s); f(s, d) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -19,7 +19,7 @@ object Tables {
     * were regenerated, as timestamp[us] with no timezone annotation, which
     * Spark reads as TIMESTAMP_NTZ. Event-time operators (unix_micros,
     * window, watermark) want TIMESTAMP_LTZ; with the session timezone
-    * pinned to UTC (Engine.scala:32) the NTZ→LTZ cast is value-preserving
+    * pinned to UTC (Engine.tune) the NTZ→LTZ cast is value-preserving
     * and agrees with how DuckDB reads the same file for the oracle. */
   def normalizeEvents(df: DataFrame): DataFrame =
     if (!df.schema.fieldNames.contains("ts")) df

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 import graft.functions.VectorOps
 import graft.similarity.Similarity
 
@@ -30,7 +30,6 @@ object Dedup {
 
   /** Exact-dup summary: total / distinct / duplicate text counts. */
   def exactSummary(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("text")).as("n_distinct"))
@@ -56,7 +55,6 @@ object Dedup {
   val MaxBucket = 10
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // Signatures AND band keys in ONE per-row kernel call
     // (functions.MinHashSignature with bandWidth=2): the stage reads the
     // scan and posexplodes 6 band keys per doc with NO exchange and no
@@ -158,7 +156,6 @@ object Dedup {
   }
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sh = sampledRareShingles(spark, dir)
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = sh.alias("x")
@@ -189,7 +186,6 @@ object Dedup {
     * sample is needed at any scale — and each direction scores
     * independently, so (a→b) can clear the floor while (b→a) does not. */
   def containment(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sh = sampledRareShingles(spark, dir, mod = 1)
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = sh.alias("x")
@@ -214,7 +210,6 @@ object Dedup {
     * trade the MaxBucket cap and band geometry buy. Cost: the two
     * composed plans plus one candidate-sized left join. */
   def recallEval(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val truth = ngramJaccard(spark, dir)
     val cand = minhashLsh(spark, dir)
     truth.join(cand,
@@ -230,7 +225,6 @@ object Dedup {
     * no exchange in the signature stage. [[simhashSpec]] keeps the
     * aggregate spelling (bit-identical, pinned in DedupSpec). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sigCol = org.apache.spark.sql.GraftBridge.column(
       graft.functions.SimHash48(
         org.apache.spark.sql.GraftBridge.expression(col("text"))))
@@ -244,7 +238,6 @@ object Dedup {
     * token, 48 vote columns in one aggregate pass — no per-bit row
     * explosion (the naive explode shuffles 48×|doc,token| rows). */
   def simhashSpec(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     def voteExpr(j: Int): Column = {
       val mask = 1 << (j % 4)
       sum(expr(
@@ -297,7 +290,6 @@ object Dedup {
     * pipeline, and a production job would persist the labeling to a table
     * rather than hold it in session state). */
   private def labelsFor(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val pairs = minhashLsh(spark, dir)
     componentLabels(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -328,7 +320,6 @@ object Dedup {
     * artifact via read_parquet, so the gate covers the persisted
     * bytes, not a recluster. */
   def keepServed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     graft.similarity.IndexStore.ensure(spark, dir, "dedup_labels")(
         labelsFor(spark, dir))
       .select(col("doc").as("doc_id"), col("root").as("rep"),
@@ -420,7 +411,6 @@ object Dedup {
     * the pair list back to the 12-component signatures; both joins are
     * doc-keyed equi-joins on candidate-sized inputs. */
   def minhashEstimate(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sigs = minhashSignaturesSpec(spark, dir)
     val matches = (0 until 12)
       .map(i => when(col(s"a.h$i") === col(s"b.h$i"), 1).otherwise(0))
@@ -466,7 +456,6 @@ object Dedup {
   }
 
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val d = incrementalSplit(spark, dir)
     val bandsCol = org.apache.spark.sql.GraftBridge.column(
       graft.functions.MinHashSignature(
@@ -514,7 +503,6 @@ object Dedup {
     * touches only the sketch bytes (an aggregate-sized result, same
     * class as any collected aggregate), never data rows. */
   def incrementalBloomDedup(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.GraftBridge
     val d = incrementalSplit(spark, dir)
     val corpus = d.filter(!col("incoming"))
@@ -540,7 +528,6 @@ object Dedup {
     * the self-join instead of per candidate pair (3× fewer flops in the
     * dominant stage). */
   def embeddingPairs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val bv = Similarity.buckets(spark, dir, 10).join(emb, "vec_id")
       .withColumn("nrm", sqrt(VectorOps.norm2("embedding")))
@@ -572,7 +559,6 @@ object Dedup {
     * count; here the five count branches share one logical subtree and
     * the posture is identical. */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = Tables(spark, dir, "documents")
     val q1 = graft.text.TextAnalysis.quality(spark, dir)
       .filter(col("quality") === 1).select("doc_id")
@@ -613,7 +599,6 @@ object Dedup {
     * DedupSpec pins `queryExecution.observedMetrics` equal to the
     * result rows. */
   def curationFunnelObserved(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val docs = Tables(spark, dir, "documents")
     val q1 = graft.text.TextAnalysis.quality(spark, dir)
@@ -662,7 +647,6 @@ object Dedup {
     * Streams are the registered operators' own (shared code), so the
     * ladder cannot disagree with text_line_dedup / text_dup_spans. */
   def dedupLadder(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = Tables(spark, dir, "documents")
     val kept = docs.groupBy(md5(col("text")).as("h"))
       .agg(min("doc_id").as("doc_id")).select("doc_id")
@@ -705,7 +689,6 @@ object Dedup {
   val SemTau = 0.4
 
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val cells = Similarity.cellAssignments(spark, dir)
     val bv = emb.join(cells, "vec_id")
@@ -744,7 +727,6 @@ object Dedup {
   val MaxHamming = 3
 
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sh = simhash(spark, dir)
     val bandStructs = (0 until 4).map(b =>
       struct(lit(b).as("band"),
@@ -775,7 +757,6 @@ object Dedup {
     * the fingerprint, one per-source aggregate — all hash-partitioned on
     * the fingerprint/source keys, linear at any corpus size. */
   def crossSourceProfile(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val f = Tables(spark, dir, "documents")
       .select(col("source"),
         md5(concat_ws(" ",
@@ -806,7 +787,6 @@ object Dedup {
     * registered [[minhashLsh]] shape (kernel banding, bounded buckets,
     * never all-pairs), so the sweep costs |geometries| LSH passes. */
   def bandingSweep(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     def candPairs(w: Int): DataFrame = {
       val bandsCol = org.apache.spark.sql.GraftBridge.column(
         graft.functions.MinHashSignature(
@@ -877,7 +857,6 @@ object Dedup {
     * bump their revision. The oracle re-derives hashes (DuckDB md5 ==
     * Spark md5) and the changed set from the id arithmetic. */
   def contentUpsert(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.corpus2")
     spark.sql(
@@ -916,7 +895,6 @@ object Dedup {
     * rev 1 where it is snapshot-new. The oracle re-derives that state
     * from the id arithmetic. */
   def mirrorSync(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.mirror")
     spark.sql(
@@ -965,7 +943,6 @@ object Dedup {
     * table — cost O(changed rows) per sync); the oracle re-derives every
     * version interval from the documents parquet cross-engine. */
   def scd2Mirror(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.scd")
     spark.sql(
@@ -1010,7 +987,6 @@ object Dedup {
   }
 
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.corpus")
     spark.sql(
@@ -1051,7 +1027,6 @@ object Dedup {
     * hash, shingle model, pack budget), so the funnel is the
     * integration gate across all five families it touches. */
   def pretrainFunnel(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.text.TextAnalysis.{ContamNgram, withSplit, PackBudget}
     val docs = Tables(spark, dir, "documents")
     val q1 = graft.text.TextAnalysis.quality(spark, dir)

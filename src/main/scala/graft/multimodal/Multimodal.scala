@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 
 /** A record carrying an opaque binary media payload plus typed metadata —
   * the multimodal-column pattern: media stays an opaque `binary` column,
@@ -101,7 +101,6 @@ object Multimodal {
     * batches to its throughput knee, and the stub body swaps for the
     * real encoder without touching the plan. */
   def mediaEmbed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     val media = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
@@ -115,7 +114,6 @@ object Multimodal {
   /** documents.text cast to a binary payload column → per-media metadata,
     * all column expressions (whole-stage codegen, no JVM object round-trip). */
   def mediaMeta(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val n = length(col("text").cast("binary")).cast("long")
     Tables(spark, dir, "documents")
       .select(col("doc_id"), n.as("byte_len"),
@@ -231,7 +229,7 @@ object Multimodal {
         val b = java.nio.ByteBuffer.allocate(37 + pad)
         b.put(0xff.toByte).put(0xd8.toByte)                // SOI
         b.put(0xff.toByte).put(0xe0.toByte).putShort(16)   // APP0, len 16
-        b.put("JFIF ".getBytes("US-ASCII")).position(b.position() + 9)
+        b.put("JFIF\u0000".getBytes("US-ASCII")).position(b.position() + 9)
         b.put(0xff.toByte).put(0xfe.toByte)                // COM, variable len
         b.putShort((2 + pad).toShort).position(b.position() + pad)
         b.put(0xff.toByte).put(0xc0.toByte).putShort(11)   // SOF0
@@ -250,7 +248,6 @@ object Multimodal {
     * the census equals this rolled up, and sharing the pipeline makes
     * that equality structural, not coincidental. */
   private def decodedHeaders(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     val media = Tables(spark, dir, "documents")
       .select(col("doc_id")).as[Long]
@@ -291,7 +288,6 @@ object Multimodal {
   val FrameStep = 100L
 
   def mediaFrames(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val n = length(col("text").cast("binary")).cast("long")
     Tables(spark, dir, "documents")
       .select(col("doc_id"), n.as("byte_len"))
@@ -311,7 +307,6 @@ object Multimodal {
   val TargetPx = 224L
 
   def mediaResize(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val n = length(col("text").cast("binary")).cast("long")
     val w = stubWidth(n)
     val h = stubHeight(n)
@@ -329,7 +324,6 @@ object Multimodal {
     * decode needed — one window shuffle on the digest; the canonical
     * copy is the min doc_id of each content group. */
   def mediaDedup(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("content_hash")
     Tables(spark, dir, "documents")
       .select(col("doc_id"), md5(col("text").cast("binary")).as("content_hash"))
@@ -365,7 +359,6 @@ object Multimodal {
   }
 
   def mediaAhash(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("ahash")
     ahashFrame(spark, dir)
       .withColumn("n_same", count(lit(1)).over(w))
@@ -392,7 +385,6 @@ object Multimodal {
     * decoder the fingerprint input would be downscaled luma per frame;
     * the stub slices the text-as-payload fixture, arithmetic unchanged. */
   def sceneCuts(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // frame layout in CHARACTERS, not bytes: the fingerprint samples
     // code points (substring + the kernel's code-point walk), so a
     // byte-offset grid would desynchronize slicing from sampling on any
@@ -447,7 +439,6 @@ object Multimodal {
   }
 
   def mediaPhash(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("phash")
     phashFrame(spark, dir)
       .withColumn("n_same", count(lit(1)).over(w))
@@ -460,7 +451,6 @@ object Multimodal {
     * candidate generation, over the brightness/contrast-robust
     * fingerprint instead of the sample-domain one. */
   def mediaPhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     bandedHashPairs(phashFrame(spark, dir), "phash", 4, 16)
   }
 
@@ -476,7 +466,6 @@ object Multimodal {
     * dedup_components: edges are banded/bucket-capped, the loop carries
     * node-sized labels with per-round localCheckpoint. */
   def phashComponents(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     graft.dedup.Dedup.componentClusters(
         mediaPhashPairs(spark, dir)
           .select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -494,7 +483,6 @@ object Multimodal {
     * image-near-dup sweep of a multimodal curation pipeline, runnable
     * before any decode. */
   def mediaAhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     bandedHashPairs(ahashFrame(spark, dir), "ahash", 4, 12)
   }
 
@@ -529,7 +517,6 @@ object Multimodal {
     * precedent: one codegen'd per-row kernel call vs a 48-lambda
     * transform/aggregate chain). */
   def mediaAhashSpec(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val n = AhashBits
     Tables(spark, dir, "documents")
       .filter(length(col("text")) > 0)
@@ -559,7 +546,6 @@ object Multimodal {
     * |probes|·3 rows cross the exchange, never a sorted corpus
     * partition per probe. */
   def mediaPhashTopK(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ph = phashFrame(spark, dir)
     val q = ph.filter(col("doc_id") % PhashQueryMod === 1L)
       .select(col("doc_id").as("qid"), col("phash").as("qhash"))
@@ -582,7 +568,6 @@ object Multimodal {
     * per query. Row-for-row [[mediaPhashTopK]] (spec-pinned); the
     * oracle reads the SAME artifact via read_parquet. */
   def mediaPhashServed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ph = graft.similarity.IndexStore.ensure(spark, dir, "phash_index")(
       phashFrame(spark, dir))
     val q = ph.filter(col("doc_id") % PhashQueryMod === 1L)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 
 /** The reference's seven questions (SURVEY.md §2.9 canonical dataflow:
   * source → project → filter → tokenize → explode → filter → groupBy/count →
@@ -25,7 +25,6 @@ object EmojiQueries {
     * Mirrors reference T3+G1 (q1:106-107); the emoji-class variant of the
     * tokenizer is exercised in unit tests on the A.4 corpus (FIXTURES.md). */
   private def tokens(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         explode(split(col("text"), " ")).as("token"))
@@ -65,7 +64,6 @@ object EmojiQueries {
   // ---- q4: double-explode (dimension × token) pair counts (reference G2, q4:116-121)
 
   def q4DimToken(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(explode(array(col("lang"), col("source"))).as("dim"), col("text"))
       .select(col("dim"), explode(split(col("text"), " ")).as("token"))
@@ -95,7 +93,6 @@ object EmojiQueries {
   /** A5 analog: group by an *array-typed* key (reference q6:109-118 groups by
     * the un-exploded country array). Output stringified for the oracle. */
   def q6ArrayKey(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .groupBy(array(col("lang"), col("source")).as("dims"))
       .agg(count(lit(1)).as("cnt"))
@@ -107,7 +104,6 @@ object EmojiQueries {
   //      proper timestamp semantics instead of directory-as-era)
 
   def q7Era(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .withColumn("era",
         when(col("ts") < lit("2024-01-11").cast("timestamp"), "early")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 
 /** Event-table queries: semi-structured JSON prop extraction (the fixture
   * analog of the reference's nested-JSON path access, SURVEY.md §1.2) and
@@ -14,7 +14,6 @@ object EventQueries {
   /** Nested-prop extraction via regexp (engine-portable; the library also
     * offers from_json, exercised in tests). One scan, one shuffle. */
   def jsonExtract(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .filter(col("props").contains("\"k\""))
       .withColumn("k",
@@ -37,7 +36,6 @@ object EventQueries {
     * Delta/Iceberg Z-ORDER property; pinned with file-level evidence in
     * ZOrderSpec). */
   def zorder(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .select(pmod(col("user_id"), lit(256L)).as("x"),
         pmod(floor(col("value")).cast("long"), lit(256L)).as("y"))
@@ -58,7 +56,6 @@ object EventQueries {
     * over the tiny aggregated hourly frame (|hours| rows), not the
     * corpus. */
   def anomaly(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val hourly = Tables(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hr"))
       .agg(count(lit(1)).as("n_events"))
@@ -85,7 +82,6 @@ object EventQueries {
   /** Tumbling 1-hour event-time buckets — batch twin of
     * graft.streaming.StreamingOps.hourlyCounts. */
   def hourlyAgg(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -104,7 +100,6 @@ object EventQueries {
     * breaks the row). Sums ride the same decimal(18,2) quantization as
     * ev_hourly_agg, so addition order cannot move the result. */
   def reaggregate(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val hourly = Tables(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -120,7 +115,6 @@ object EventQueries {
   /** JSON-path prop extraction via get_json_object (the JSON-function
     * analog of the regexp path above; FIXTURES.md §C role map). */
   def jsonPath(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .select(get_json_object(col("props"), "$.k").cast("long").as("k"))
       .filter(col("k").isNotNull)
@@ -137,7 +131,6 @@ object EventQueries {
     * the PERMISSIVE-mode analog for semi-structured columns. Output is
     * plain typed columns, so the oracle is engine-neutral. */
   def variantExtract(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .select(expr("try_parse_json(props)").as("v"))
       // try_variant_get, not variant_get: a well-formed-JSON string k
@@ -158,7 +151,6 @@ object EventQueries {
   val SessionGapUs: Long = 30L * 60 * 1000000 // 30 minutes
 
   def sessionize(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("t_us", "event_id")
     val run = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -237,7 +229,6 @@ object EventQueries {
   }
 
   def peakConcurrency(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val s = sessionize(spark, dir).select("first_us", "last_us")
     val pts = s.select(col("first_us").as("t"), lit(1L).as("d"))
@@ -272,7 +263,6 @@ object EventQueries {
     * sessionization query uses), then a tiny grouped count — no global
     * arrival-order sort anywhere. All arithmetic exact integer micros. */
   def lateness(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val run = Window.partitionBy("user_id").orderBy("event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -302,7 +292,6 @@ object EventQueries {
     * Admitted mass is monotone in the delay and admitted+dropped is the
     * corpus total at every row (spec-pinned). */
   def watermarkTradeoff(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val run = Window.partitionBy("user_id").orderBy("event_id")
@@ -336,7 +325,6 @@ object EventQueries {
   val NumBuckets = 20
 
   def histogram(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .select(least(floor(col("value") / BucketWidth), lit(NumBuckets - 1L))
         .cast("long").as("bucket"))
@@ -353,7 +341,6 @@ object EventQueries {
     * row (min/max) + sequence-explode; the join is hour-keyed, so at
     * scale the spine side broadcasts (it is |hours|, not |events|). */
   def hourlyDense(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val hourly = Tables(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hr"))
       .agg(count(lit(1)).as("cnt"))
@@ -371,7 +358,6 @@ object EventQueries {
     * equi on both keys): the join shuffles on (hr, user), no windows,
     * no per-user collection. */
   def retention(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val act = Tables(spark, dir, "events")
       .select(date_trunc("hour", col("ts")).as("hr"), col("user_id"))
       .distinct()
@@ -398,7 +384,6 @@ object EventQueries {
     * key, nothing event-squared; offsets are exact integer micros
     * divided on the hour grid. */
   def retentionMatrix(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val act = Tables(spark, dir, "events")
       .select(date_trunc("hour", col("ts")).as("hr"), col("user_id"))
       .distinct()
@@ -418,7 +403,6 @@ object EventQueries {
     * per-stage-join spelling pays a shuffle per stage). Null stage
     * times drop out of the `<` comparisons identically in both engines. */
   def funnel(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val firsts = Tables(spark, dir, "events")
       .groupBy("user_id")
       .agg(
@@ -448,7 +432,6 @@ object EventQueries {
     * The funnel counts are monotone and n_signup anchors to the
     * unbounded funnel's (spec-pinned). */
   def funnelWindowed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ev = Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t_us"))
     val s = ev.filter(col("event_type") === "signup")
@@ -475,7 +458,6 @@ object EventQueries {
     * Order within a user is total (exact integer micros, event_id
     * tiebreak), so lead() is deterministic on both engines. */
   def paths(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("t_us", "event_id")
     Tables(spark, dir, "events")
@@ -497,7 +479,6 @@ object EventQueries {
     * |channels|-bounded grouped count. Purchases with no prior event
     * roll up under 'none'. */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id")
       .orderBy("t_us", "event_id")
@@ -525,7 +506,6 @@ object EventQueries {
     * global sort of the SMALL aggregate, not the event log), then a
     * 4³-bounded grouped count. */
   def rfm(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // r18 (guide §2.5 / VERDICT r17 #3): the three global `ntile(4)`
     // windows each moved the whole |users| frame through ONE partition.
     // Each quartile score is now an exact global RANK from the
@@ -568,7 +548,6 @@ object EventQueries {
     * |types|³-bounded census cut to 20 by TakeOrdered. The sequence-
     * mining shape funnel designers start from. */
   def pathTrigrams(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("t_us", "event_id")
     Tables(spark, dir, "events")
@@ -596,7 +575,6 @@ object EventQueries {
     * fixed-order expression — engine-identical doubles, same discipline
     * as [[anomaly]]'s z-score. Output is a single decision row. */
   def abTest(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val perUser = Tables(spark, dir, "events")
       .groupBy(col("user_id"))
       .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -650,7 +628,6 @@ object EventQueries {
     * behavior is engine-specific — applied driver-side in DauHllSpec);
     * zero_regs ships so any consumer can apply the correction. */
   def dauHll(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ev = Tables(spark, dir, "events")
       .select(to_date(col("ts")).as("day"), col("user_id"))
     val dau = ev.groupBy("day").agg(countDistinct("user_id").as("dau"))
@@ -731,7 +708,6 @@ object EventQueries {
     * back to the observed DAU frame so partial tail windows past the
     * last day never appear. */
   def dauWau(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ud = Tables(spark, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
@@ -757,7 +733,6 @@ object EventQueries {
     * percentage is evaluated as delta·100.0/prev in the same order on
     * both engines under a 1e-4 round. */
   def wowGrowth(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val weekly = Tables(spark, dir, "events")
       .groupBy(date_trunc("week", col("ts")).cast("date").as("wk"))
       .agg(count(lit(1)).as("n_events"),
@@ -790,7 +765,6 @@ object EventQueries {
     * discipline). Plan: distinct users (one shuffle), a single global
     * aggregate; the chi-square evaluates on a 1-row frame. */
   def experimentSrm(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val arm = expr(
       "conv(substring(md5(concat('exp1:', cast(user_id as string))), 1, 4), 16, 10)")
       .cast("long") % SrmArms
@@ -830,7 +804,6 @@ object EventQueries {
     * corpus max week (a 1-row broadcast). Integer counts only — no
     * float contract anywhere. */
   def growthAccounting(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val uw = Tables(spark, dir, "events")
       .select(col("user_id"),
         date_trunc("week", col("ts")).cast("date").as("wk"))
@@ -880,7 +853,6 @@ object EventQueries {
     * corpus scan. The fixture's value distribution is right-skewed:
     * ~90 high outliers per type fire, zero low (spec-pinned shape). */
   def outlierIqr(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val b = Tables(spark, dir, "events")
       .select(col("event_type"), floor(col("value")).cast("long").as("b"))
     val hist = b.groupBy("event_type", "b").agg(count(lit(1)).as("cnt"))
@@ -912,7 +884,6 @@ object EventQueries {
     * All date/integer arithmetic; one shuffle on user_id, windows over
     * each user's |days| ≤ 30 rows. */
   def activeStreak(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("day")
     Tables(spark, dir, "events")
@@ -945,7 +916,6 @@ object EventQueries {
     * first; the global-order window runs over that tiny frame only —
     * [[anomaly]]'s documented posture. */
   def ewma(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = org.apache.spark.sql.expressions.Window.orderBy("hr")
     val num = (0 until EwmaDepth)
       .map(k => lag(col("cnt"), k).over(w) * lit(1L << (EwmaDepth - 1 - k)))
@@ -972,7 +942,6 @@ object EventQueries {
     * DECIMAL, so the |actual − pred| sums are order-independent; the
     * final MAE is one division. */
   def forecastNaive(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val hourly = Tables(spark, dir, "events")
       .select(to_date(col("ts")).as("day"), hour(col("ts")).as("hod"))
       .groupBy("day", "hod").agg(count(lit(1)).as("cnt"))
@@ -1008,7 +977,6 @@ object EventQueries {
     * (their BIGINT squares would overflow at fixture scale — by design,
     * the cast happens BEFORE squaring on both engines). */
   def cuped(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cut = lit(CupedCutoff).cast("timestamp")
     val isP = col("event_type") === "purchase"
     val per = Tables(spark, dir, "events")
@@ -1054,7 +1022,6 @@ object EventQueries {
     * shuffle), then a |types|-bounded census. Rates are exact-count
     * ratios rounded to 1e-6. */
   def bounceRate(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("t_us", "event_id")
     val run = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1086,7 +1053,6 @@ object EventQueries {
     * DECIMAL through the cumulative sum, so the running totals are
     * order-independent and engine-identical. */
   def ltvMatrix(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val p = Tables(spark, dir, "events")
       .filter(col("event_type") === "purchase")
@@ -1123,7 +1089,6 @@ object EventQueries {
     * arithmetic over it, ceil'd to integers so the cross-engine hash
     * sees no raw float tails. */
   def powerAnalysis(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val base = Tables(spark, dir, "events")
       .groupBy(col("user_id"))
       .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -1155,7 +1120,6 @@ object EventQueries {
     * the rare custom-exec query the oracle gates with its own native
     * operator rather than a re-derivation. */
   def asofEnrich(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val purchases = asofPurchases(spark, dir)
     val clicks = asofClicks(spark, dir)
     graft.plans.AsOf.join(purchases, clicks,
@@ -1191,42 +1155,6 @@ object EventQueries {
       .groupBy(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_us"))
       .agg(max(col("event_id")).as("click_id"), max(col("value")).as("click_value"))
 
-  /** One extensions-enabled session per JVM, sharing the driver's
-    * SparkContext — the `spark.sql.extensions` surface a cluster user
-    * gets, needed because the ASOF LEFT JOIN syntax lives in the
-    * injected parser and the driver owns its own session. The driver's
-    * active/default session registration is restored immediately after
-    * the build so nothing else in the harness sees the extra session. */
-  private val extSessionRef =
-    new java.util.concurrent.atomic.AtomicReference[SparkSession]()
-  private[graft] def extensionSession(spark: SparkSession): SparkSession = {
-    val cur = extSessionRef.get()
-    if (cur != null) cur
-    else this.synchronized {
-      if (extSessionRef.get() == null) {
-        // the registry swap is restored in a finally (a builder failure
-        // must not leave the JVM with no default session), and restores
-        // whatever was registered before, not unconditionally `spark`
-        val prevDefault = SparkSession.getDefaultSession
-        val prevActive = SparkSession.getActiveSession
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        try {
-          extSessionRef.set(SparkSession.builder()
-            .config("spark.sql.shuffle.partitions",
-              spark.conf.get("spark.sql.shuffle.partitions"))
-            .config("spark.sql.session.timeZone", "UTC")
-            .withExtensions(new graft.plans.GraftExtensions)
-            .getOrCreate())
-        } finally {
-          SparkSession.setDefaultSession(prevDefault.getOrElse(spark))
-          SparkSession.setActiveSession(prevActive.getOrElse(spark))
-        }
-      }
-      extSessionRef.get()
-    }
-  }
-
   /** The as-of enrichment a THIRD way: as an `ASOF LEFT JOIN` SQL
     * STRING through the injected parser + resolution rule
     * ([[graft.plans.GraftSqlParser]] / [[graft.plans.ResolveAsOfJoin]]),
@@ -1235,8 +1163,7 @@ object EventQueries {
     * logical node → custom exec, rows identical to [[asofEnrich]] and
     * the oracle is DuckDB's native ASOF LEFT JOIN a third time. */
   def asofSqlEntry(spark: SparkSession, dir: String): DataFrame = {
-    val s = extensionSession(spark)
-    Engine.tune(s)
+    val s = graft.Sessions.withExtensions(spark)
     asofPurchases(s, dir).createOrReplaceTempView("graft_asof_p")
     asofClicks(s, dir).createOrReplaceTempView("graft_asof_c")
     s.sql(
@@ -1256,8 +1183,7 @@ object EventQueries {
     * re-derives the match with a bounded range join + per-left argmax —
     * exactly the composition the exec avoids. */
   def asofTolSqlEntry(spark: SparkSession, dir: String): DataFrame = {
-    val s = extensionSession(spark)
-    Engine.tune(s)
+    val s = graft.Sessions.withExtensions(spark)
     asofPurchases(s, dir).createOrReplaceTempView("graft_asof_p")
     asofClicks(s, dir).createOrReplaceTempView("graft_asof_c")
     s.sql(
@@ -1295,7 +1221,6 @@ object EventQueries {
     * again a custom exec gated by the other engine's native range-join
     * path. */
   def intervalOverlap(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val c = impactWindows(spark, dir, "click", "c_")
     val e = impactWindows(spark, dir, "error", "e_")
     graft.plans.Interval.join(c, e, Seq("c_user" -> "e_user"),
@@ -1315,8 +1240,7 @@ object EventQueries {
     * rows identical to the DSL twin and the oracle is the identical
     * DuckDB IEJoin query. */
   def intervalSqlEntry(spark: SparkSession, dir: String): DataFrame = {
-    val s = extensionSession(spark)
-    Engine.tune(s)
+    val s = graft.Sessions.withExtensions(spark)
     impactWindows(s, dir, "click", "c_").createOrReplaceTempView("graft_ivl_c")
     impactWindows(s, dir, "error", "e_").createOrReplaceTempView("graft_ivl_e")
     s.sql(
@@ -1338,7 +1262,6 @@ object EventQueries {
     * a bounded range join + per-left min, which is exactly the
     * composition the exec exists to avoid. */
   def asofForward(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val purchases = asofPurchases(spark, dir)
     val clicks = asofClicks(spark, dir)
     graft.plans.AsOf.join(purchases, clicks,
@@ -1357,7 +1280,6 @@ object EventQueries {
     * joins), then a |buckets|-bounded census. Exact integer micros
     * throughout. */
   def conversionLag(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val firsts = Tables(spark, dir, "events")
       .groupBy("user_id")
       .agg(
@@ -1384,7 +1306,6 @@ object EventQueries {
     * never the event log. Rates are exact-count ratios; the 6-window
     * mean sums those identical doubles in frame order on both engines. */
   def sloBurn(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val hourly = Tables(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hr"))
@@ -1415,7 +1336,6 @@ object EventQueries {
     * aggregates. The 2 h row equals `ev_funnel_windowed` by shared
     * construction. */
   def funnelWindowSweep(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ev = Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t_us"))
     val s = ev.filter(col("event_type") === "signup")
@@ -1447,7 +1367,6 @@ object EventQueries {
     * `dow` follows Spark `dayofweek()` / DuckDB `EXTRACT(DOW)+1`
     * numbering (Sunday=1 .. Saturday=7), NOT ISO Monday-first. */
   def trafficHeatmap(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "events")
       .groupBy(dayofweek(col("ts")).as("dow"), hour(col("ts")).as("hod"))
       .agg(count(lit(1)).as("n_events"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 
 /** Relational capability superset (SURVEY.md §7.2 step 4): joins, richer
   * aggregates, window functions, grouping sets, set operations over the
@@ -26,7 +26,6 @@ object RelationalQueries {
 
   // ---- TPC-H Q1 analog: one-pass scan + 6-way aggregate, no join.
   def q1Pricing(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val price = dec("l_extendedprice")
     val disc = (lit(1.0) - col("l_discount")).cast("decimal(8,2)")
     val tax = (lit(1.0) + col("l_tax")).cast("decimal(8,2)")
@@ -56,7 +55,6 @@ object RelationalQueries {
     * SQL, which would change the decimal arithmetic the DSL twin does
     * with double literals). */
   def q1PricingViaSql(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "lineitem").createOrReplaceTempView("graft_lineitem")
     spark.sql(
       """SELECT l_returnflag, l_linestatus,
@@ -82,7 +80,6 @@ object RelationalQueries {
   // lineitem join shuffles on the order key. Top-k = TakeOrderedAndProject,
   // no global sort materialization.
   def q3TopK(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cust = Tables(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
       .select("c_custkey")
@@ -106,7 +103,6 @@ object RelationalQueries {
   // with the facts via the shuffle joins; AQE converts to broadcast when
   // the filtered side is small.
   def q5RegionRevenue(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val region = Tables(spark, dir, "region").filter(col("r_name") === "ASIA")
     val nation = Tables(spark, dir, "nation")
     val cust = Tables(spark, dir, "customer").select("c_custkey", "c_nationkey")
@@ -132,7 +128,6 @@ object RelationalQueries {
   // ---- TPC-H Q6 analog: pure scan-filter-aggregate; every predicate must
   // reach the parquet scan (PushedFilters).
   def q6RevenueFilter(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
@@ -144,7 +139,6 @@ object RelationalQueries {
 
   // ---- semi / anti joins (EXISTS / NOT EXISTS)
   def semiJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cust = Tables(spark, dir, "customer").select("c_custkey", "c_name")
     val ord = Tables(spark, dir, "orders").select("o_custkey")
     cust.join(ord, col("c_custkey") === col("o_custkey"), "left_semi")
@@ -152,7 +146,6 @@ object RelationalQueries {
   }
 
   def antiJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cust = Tables(spark, dir, "customer").select("c_custkey", "c_name")
     val ord = Tables(spark, dir, "orders").select("o_custkey")
     cust.join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -162,7 +155,6 @@ object RelationalQueries {
   // ---- window function: top-2 orders per customer. Single shuffle on the
   // partition key; row_number + filter prunes before any further op.
   def windowRank(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(desc("o_totalprice"), asc("o_orderkey"))
     Tables(spark, dir, "orders")
@@ -179,7 +171,6 @@ object RelationalQueries {
   // the oracle is the identical window SQL, so the gate proves the
   // custom operator end-to-end.
   def topKPerGroup(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val df = Tables(spark, dir, "orders")
       .select("o_custkey", "o_orderkey", "o_totalprice")
     graft.plans.TopK.perGroup(df, Seq("o_custkey"),
@@ -189,7 +180,6 @@ object RelationalQueries {
 
   // ---- grouping sets: ROLLUP over (returnflag, linestatus)
   def rollupAgg(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "lineitem")
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
@@ -208,7 +198,6 @@ object RelationalQueries {
   // DuckDB ordered-list aggregate; values are exact copies (no
   // arithmetic), so doubles match bit-for-bit.
   def topKAgg(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val aggCol = org.apache.spark.sql.GraftBridge.column(
       graft.functions.TopKValues(
         org.apache.spark.sql.GraftBridge.expression(col("o_totalprice")), 3)
@@ -227,7 +216,6 @@ object RelationalQueries {
   // grouping combinations in one pass (rollup covers three); Spark plans
   // a single Expand + aggregate, the same shape DuckDB's CUBE uses.
   def cubeAgg(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "lineitem")
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
@@ -245,7 +233,6 @@ object RelationalQueries {
   // distinguishable from a real NULL. Money sums go through exact
   // DECIMAL (order-independent) and surface as DOUBLE.
   def groupingSetsAgg(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "orders")
       .groupingSets(
         Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
@@ -266,7 +253,6 @@ object RelationalQueries {
   // partitioning). Tiny dims broadcast; the aggregate itself is one
   // hash-shuffle on the group key like any other agg.
   def listAgg(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val nation = Tables(spark, dir, "nation")
     val region = Tables(spark, dir, "region")
     nation.join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
@@ -281,7 +267,6 @@ object RelationalQueries {
   // computed, so cross-engine determinism needs only the total order
   // (o_orderdate, o_orderkey).
   def windowLag(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(asc("o_orderdate"), asc("o_orderkey"))
     Tables(spark, dir, "orders")
@@ -301,13 +286,11 @@ object RelationalQueries {
       .select("o_custkey")
 
   def intersectYears(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     custkeysOfYear(spark, dir, 1996).intersect(custkeysOfYear(spark, dir, 1997))
       .orderBy("o_custkey")
   }
 
   def exceptYears(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     custkeysOfYear(spark, dir, 1996).except(custkeysOfYear(spark, dir, 1997))
       .orderBy("o_custkey")
   }
@@ -322,7 +305,6 @@ object RelationalQueries {
   private val SaltBuckets = 8
 
   def saltedJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       .withColumn("l_salt", pmod(col("l_linenumber"), lit(SaltBuckets)))
@@ -357,7 +339,6 @@ object RelationalQueries {
     * and a TakeOrdered top-10. A deployment reads "is the hottest key
     * over the salting threshold" straight off row 1. */
   def skewProfile(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val counts = Tables(spark, dir, "orders")
       .groupBy(col("o_custkey").as("custkey"))
       .agg(count(lit(1)).as("cnt"))
@@ -369,7 +350,6 @@ object RelationalQueries {
   }
 
   def saltedJoinHot(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
     val hot = li.groupBy("l_orderkey").agg(count(lit(1)).as("k_cnt"))
@@ -409,7 +389,6 @@ object RelationalQueries {
   // an as-of tie among equal timestamps is otherwise nondeterministic on
   // BOTH engines.
   def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val dedupe = Window.partitionBy("o_custkey", "o_orderdate")
       .orderBy(desc("o_orderkey"))
     val ord = Tables(spark, dir, "orders")
@@ -445,7 +424,6 @@ object RelationalQueries {
   private val RangeRadiusUs = 86400000000L // 1 day in microseconds
 
   def rangeJoinBinned(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ev = Tables(spark, dir, "events")
       .select(col("event_id"), unix_micros(col("ts")).as("e_us"))
       .withColumn("ebin", explode(array(
@@ -469,7 +447,6 @@ object RelationalQueries {
   // date order (rowsBetween unbounded-preceding..current). One shuffle on
   // the partition key; DECIMAL accumulation keeps every prefix sum exact.
   def windowRunning(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(asc("o_orderdate"), asc("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -482,7 +459,6 @@ object RelationalQueries {
 
   // ---- UNION (distinct) completing the set-op family with intersect/except
   def unionYears(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     custkeysOfYear(spark, dir, 1996).union(custkeysOfYear(spark, dir, 1997))
       .distinct()
       .orderBy("o_custkey")
@@ -491,7 +467,6 @@ object RelationalQueries {
   // ---- pivot: returnflag columns per linestatus (manual-CASE equivalent
   // in the oracle; Spark's pivot plans to the same conditional aggregates)
   def pivotFlags(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "lineitem")
       .groupBy("l_linestatus")
       .pivot("l_returnflag", Seq("A", "N", "R"))
@@ -503,7 +478,6 @@ object RelationalQueries {
   // each order inside its customer's price distribution; nth_value reads
   // a fixed position of the full frame. One shuffle on the partition key.
   def windowDist(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(asc("o_totalprice"), asc("o_orderkey"))
     val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -527,7 +501,6 @@ object RelationalQueries {
   // the per-tile sums are engine-identical; doubles appear only in the
   // final casts.
   def windowNtile(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val spend = Tables(spark, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("spend"))
@@ -550,7 +523,6 @@ object RelationalQueries {
   // sliding event-time neighborhood that ROWS frames cannot express
   // (the frame width varies with value gaps, not row counts).
   def windowRangeFrame(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val day = 86400L
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_epoch"))
@@ -569,7 +541,6 @@ object RelationalQueries {
   // the result is deterministic on both engines — bare min_by on a tied
   // value is engine-arbitrary and would never hash-match.
   def argExtremes(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // price*100 in doubles is NOT exact (1234.56*100 = 123455.999…), and
     // Spark's cast-to-long truncates where DuckDB's rounds — so BOTH
     // sides floor() the identical double product before the cast. Floor
@@ -589,7 +560,6 @@ object RelationalQueries {
   // inverse reshaping op. Plans as a single Expand (one pass, 3 output
   // rows per input row), no shuffle beyond the pivot's own aggregate.
   def unpivotFlags(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     pivotFlags(spark, dir)
       .unpivot(Array(col("l_linestatus")), Array(col("A"), col("N"), col("R")),
         "flag", "sum_qty")
@@ -601,7 +571,6 @@ object RelationalQueries {
   // left outer join (RewriteCorrelatedScalarSubquery); a per-row re-scan
   // of orders would be quadratic and is not a plan Spark can emit.
   def corrSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "customer").createOrReplaceTempView("graft_cust")
     Tables(spark, dir, "orders").createOrReplaceTempView("graft_ord")
     spark.sql(
@@ -669,7 +638,6 @@ object RelationalQueries {
       .orderBy("o_custkey")
 
   def scd2Runs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     val prev = lag(col("o_orderpriority"), 1).over(w)
     val runs = Tables(spark, dir, "orders")
@@ -703,7 +671,6 @@ object RelationalQueries {
   // and new-value resolution are exactly this plan. Batch keys < 300 vs
   // target keys < 200 guarantee all three actions appear at sf>=0.01.
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val wLatest = Window.partitionBy("o_custkey")
       .orderBy(desc("o_orderdate"), desc("o_orderkey"))
     val batch = Tables(spark, dir, "orders")
@@ -744,7 +711,6 @@ object RelationalQueries {
   // |lineitem|-sized ever reaches a join. l_quantity is integer-valued,
   // so the double sums are exact on both engines.
   def q18LargeOrders(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val big = Tables(spark, dir, "lineitem")
       .groupBy("l_orderkey").agg(sum("l_quantity").as("total_qty"))
       .filter(col("total_qty") > Q18Threshold)
@@ -778,7 +744,6 @@ object RelationalQueries {
     * the standard Pregel-style round, all shuffles on graph keys;
     * nothing edge-squared anywhere. */
   def pagerankIter(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // edges materialized once (r18): the round references the edge set
     // twice (degree aggregate + contribution join) and the planner does
     // not reuse the distinct's exchange across the two (the join adds a
@@ -813,7 +778,6 @@ object RelationalQueries {
     * would. Same exact-integer split (rank div out-degree, all operands
     * non-negative) and damped BIGINT sum; same Pregel-round cost. */
   def pagerankRound2(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // one edge materialization shared by both alternations (the
     // trajectory loop's discipline, applied to the two-round composition)
     val edges = Tables(spark, dir, "lineitem")
@@ -858,7 +822,6 @@ object RelationalQueries {
     * trajectory this same loop records. */
   private[queries] def pagerankTrajectory(
       spark: SparkSession, dir: String): (DataFrame, Seq[Long]) = {
-    Engine.tune(spark)
     // ONE materialization carrying the edge list AND both endpoint
     // degrees (r18 optimization, guide §1.2 step 1 / §2.4): the old
     // spelling checkpointed edges, pdeg and sdeg separately (3 actions)
@@ -996,7 +959,6 @@ object RelationalQueries {
     * engine-comparable; the top-k itself is a TakeOrdered, not a global
     * sort. */
   def copurchasePairs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     copurchaseEdges(spark, dir)
       .orderBy(desc("cnt"), asc("p1"), asc("p2"))
       .limit(20)
@@ -1012,7 +974,6 @@ object RelationalQueries {
     * exact integers, rounded to 6 decimals, so both engines emit the
     * identical value. */
   def copurchaseLift(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // the basket frame feeds FOUR branches (pair mining self-join × 2,
     // item supports, basket total): one materialization instead of four
     // lineitem scans + four distinct shuffles (r17 optimization —
@@ -1042,7 +1003,6 @@ object RelationalQueries {
     * the hub-quadratic naive join. Emits one row (n_nodes, n_edges,
     * n_triangles); the three counts meet in 1-row broadcast products. */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // the support prune leaves a sketch-sized edge set (~3.5k rows at
     // sf0.1) whose lineage is the expensive basket self-join; the census
     // reads it from four branches (orientation, wedges, closing probe,
@@ -1063,7 +1023,6 @@ object RelationalQueries {
     * customer sample only caps the VERIFY dump; the plan is
     * sample-free. */
   def locfFill(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_custkey")
       .orderBy("o_date", "o_orderkey")
@@ -1087,7 +1046,6 @@ object RelationalQueries {
     * that can never drift from the facts, where a hand-maintained
     * calendar goes stale. Pure date arithmetic; |days| rows. */
   def dateDim(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "orders")
       .agg(min(col("o_orderdate")).cast("date").as("d0"),
         max(col("o_orderdate")).cast("date").as("d1"))
@@ -1112,7 +1070,6 @@ object RelationalQueries {
     * aggregate, and at 100 TB the global sort is a range partition of
     * that aggregate, not of lineitem. */
   def abcAnalysis(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val perPart = Tables(spark, dir, "lineitem")
       .groupBy(col("l_partkey").as("partkey"))
@@ -1151,7 +1108,6 @@ object RelationalQueries {
     * the doubles, and the only non-exact steps are the same
     * fixed-order double expressions on both engines. */
   def growthDecomp(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     def s(y: Int, c: Column) =
       sum(when(year(col("l_shipdate")) === y, c).otherwise(lit(0))
         .cast("decimal(18,2)"))
@@ -1191,7 +1147,6 @@ object RelationalQueries {
     * adversarial weights). The remainder ranking is a window over the
     * |classes|-sized aggregate, never the fact table. */
   def budgetAllocation(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val counts = Tables(spark, dir, "orders")
       .groupBy(col("o_orderpriority").as("priority"))
@@ -1238,7 +1193,6 @@ object RelationalQueries {
     * self-consistency. At 100 TB the refresh touches |delta| rows +
     * a months-sized artifact instead of the whole fact table. */
   def mvRefresh(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     def partials(pred: Column): DataFrame =
       Tables(spark, dir, "orders")
         .filter(pred)
@@ -1278,7 +1232,6 @@ object RelationalQueries {
     * `WITH RECURSIVE` capped at the same hop constant, min(hops) per
     * node — BFS re-expressed as the fixpoint its semantics are. */
   def reachability(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     bfsHistogram(
       copurchaseEdges(spark, dir).select("p1", "p2").localCheckpoint(true))
   }
@@ -1359,7 +1312,6 @@ object RelationalQueries {
   // probes each order key at most once; no EXISTS-per-row re-scan, and
   // the lineitem side carries only (l_orderkey, l_shipdate).
   def q4LateOrders(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ord = Tables(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
@@ -1381,7 +1333,6 @@ object RelationalQueries {
   // prune; the supp≠cust inequality runs after — and the fact joins
   // shuffle on their natural keys only.
   def q7Volume(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val n1 = Tables(spark, dir, "nation").filter(col("n_nationkey") < 4)
       .select(col("n_nationkey").as("s_nkey"), col("n_name").as("supp_nation"))
     val n2 = Tables(spark, dir, "nation").filter(col("n_nationkey") < 4)
@@ -1411,7 +1362,6 @@ object RelationalQueries {
   // The quarter-filtered orders side shrinks first; nation broadcasts;
   // top-k is TakeOrderedAndProject (no global sort materialization).
   def q10Returned(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ord = Tables(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-07-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-10-01").cast("timestamp"))
@@ -1437,7 +1387,6 @@ object RelationalQueries {
   // surface as DOUBLE, and the percentage divides the two already-cast
   // doubles so both engines perform the identical final flop.
   def q14Promo(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-03-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
@@ -1462,7 +1411,6 @@ object RelationalQueries {
   // toward each scan, so the disjunction filters pairs after a normal
   // broadcast-hash probe — never a nested-loop fallback.
   def q19Disjunctive(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
     val p = Tables(spark, dir, "part").select("p_partkey", "p_brand", "p_size")
@@ -1495,7 +1443,6 @@ object RelationalQueries {
   // broadcast. Shares divide two exact decimal sums as doubles, so both
   // engines bit-agree.
   def q8MarketShare(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val p = Tables(spark, dir, "part")
       .filter(col("p_type") === "ECONOMY").select("p_partkey")
     val n1 = Tables(spark, dir, "nation")
@@ -1533,7 +1480,6 @@ object RelationalQueries {
   // CASE-split counts by order priority class. One shuffle join + one
   // aggregate; the date range is pushed to the lineitem scan.
   def q12PriorityClass(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
@@ -1557,7 +1503,6 @@ object RelationalQueries {
   // shuffles total; the second input is |customers| rows, the final
   // output |distinct counts|.
   def q13CustDist(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ord = Tables(spark, dir, "orders")
       .filter(col("o_orderpriority") =!= "5-LOW")
       .select("o_orderkey", "o_custkey")
@@ -1576,7 +1521,6 @@ object RelationalQueries {
   // a window over one giant partition — the classic Q15 scale trap).
   // Revenue stays decimal until after the equality so ties are exact.
   def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val disc = (lit(1.0) - col("l_discount")).cast("decimal(8,2)")
     val rev = Tables(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -1600,7 +1544,6 @@ object RelationalQueries {
   // per-row subquery execution. l_quantity is integer-valued so the avg
   // (exact sum / count) bit-agrees across engines.
   def q17SmallQty(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val p = Tables(spark, dir, "part")
       .filter(col("p_brand") === "Brand#11" && col("p_size") <= 10)
       .select("p_partkey")
@@ -1627,7 +1570,6 @@ object RelationalQueries {
   // the aggregate rewrite that turns Q21's double-correlated-subquery
   // into two shuffles, the shape that survives 100 TB.
   def q21Waiting(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ord = Tables(spark, dir, "orders")
       .filter(col("o_orderstatus") === "F")
       .select("o_orderkey", "o_orderdate")
@@ -1659,7 +1601,6 @@ object RelationalQueries {
   // whitelisted in PlanAuditSpec. The average divides an exact decimal
   // sum by the count as doubles, so the > cut bit-agrees with DuckDB.
   def q22GlobalSales(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cust = Tables(spark, dir, "customer")
       .withColumn("cntrycode", col("c_nationkey") % 5)
       .filter(col("cntrycode").isin(0, 1, 2))
@@ -1687,7 +1628,6 @@ object RelationalQueries {
   // shape); both sides of the compare are exact decimal sums cast to
   // double, so the cut bit-agrees with DuckDB.
   def q11TopParts(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sup = Tables(spark, dir, "supplier")
       .join(broadcast(Tables(spark, dir, "nation")
         .filter(col("n_name") === "NATION_3")),
@@ -1728,7 +1668,6 @@ object RelationalQueries {
   // supplier set reduced then broadcast; nothing |lineitem|-sized past
   // the bridge aggregate.
   def q2MinCost(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val eurSup = Tables(spark, dir, "supplier")
       .join(broadcast(Tables(spark, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables(spark, dir, "region").filter(col("r_name") === "EUROPE")),
@@ -1757,7 +1696,6 @@ object RelationalQueries {
   // part filter reduces lineitem first (broadcast); nation broadcast;
   // the orders join shuffles on the order key.
   def q9Profit(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val p = Tables(spark, dir, "part")
       .filter(col("p_name").contains("widget"))
       .select("p_partkey", "p_retailprice")
@@ -1785,7 +1723,6 @@ object RelationalQueries {
   // broadcast as a left anti join; the census is a |pairs|-sized
   // distinct aggregate, never fact-sized.
   def q16SupplierCnt(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val excl = Tables(spark, dir, "supplier")
       .filter(col("s_acctbal") < 0).select(col("s_suppkey").as("bad_supp"))
     val p = Tables(spark, dir, "part")
@@ -1811,7 +1748,6 @@ object RelationalQueries {
   // dominance cut compares exact integer-valued sums scaled by a
   // constant; the supplier identity resolves via a semi join (EXISTS).
   def q20ExcessStock(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val p = Tables(spark, dir, "part")
       .filter(col("p_name").startsWith("red"))
       .select("p_partkey")
@@ -1846,7 +1782,6 @@ object RelationalQueries {
   // |rows| — the classic scalable exact-median layout; the approximate
   // alternative (percentile_approx) trades this exactness for a sketch.
   def exactMedianGrouped(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val h = Tables(spark, dir, "orders")
       .groupBy("o_orderpriority", "o_totalprice")
       .agg(count(lit(1)).as("cnt"))
@@ -1872,7 +1807,6 @@ object RelationalQueries {
   // with the streaming stream_latency_pctl monitor). approx_percentile
   // is the 100 TB swap-in; this is its exact oracle-able sibling.
   def percentilesGrouped(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val h = Tables(spark, dir, "orders")
       .groupBy(col("o_orderpriority"), col("o_totalprice").as("value"))
       .agg(count(lit(1)).as("cnt"))
@@ -1890,7 +1824,6 @@ object RelationalQueries {
   // diffs, which is what makes it runnable table-wide at 100 TB (the
   // row-level drill-down is the same join with a class filter).
   def tableDiff(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"))
     val v1 = orders.filter(col("o_orderkey") % 97 =!= 0)
@@ -1919,7 +1852,6 @@ object RelationalQueries {
   // |checks| rows regardless of data size — the daily gate a 100 TB
   // warehouse runs before publishing a partition.
   def dqAudit(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val orders = Tables(spark, dir, "orders")
     def one(name: String, viol: DataFrame): DataFrame =
       viol.agg(count(lit(1)).as("n_violations"))
@@ -1952,7 +1884,6 @@ object RelationalQueries {
   // identically; at 100 TB the exact NDVs swap for HLL sketches with
   // the same plan shape (the repo's HLL sibling shows the swap).
   def dataProfile(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val canon: Map[String, Column => Column] = Map(
       "o_orderkey" -> (c => c.cast("string")),
       "o_custkey" -> (c => c.cast("string")),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 import graft.emoji.EmojiOps
 
 /** The reference's seven questions at full semantic fidelity, over an
@@ -41,9 +41,18 @@ object TweetQueries {
 
   private val fixtureGlob = s"$FixtureDir/*.json"
 
+  /** Parent of every committed corpus (`fixtures/<subdir>/`). */
+  private val FixturesRoot = new java.io.File(FixtureDir).getParent
+
+  /** DuckDB options on every NDJSON scan: `field_appearance_threshold=0`
+    * keeps a sparse field (`includes` rides under 1 % of tweets at real geo
+    * coverage) a STRUCT instead of collapsing it to JSON, which the q6
+    * country unnest cannot bind. On the committed fixtures the inferred
+    * schema is the same with and without it. */
+  private val JsonOpts = "format='newline_delimited', field_appearance_threshold=0"
+
   /** DuckDB-side scan of the same NDJSON files. */
-  private val tweetsSql =
-    s"read_json_auto('$fixtureGlob', format='newline_delimited')"
+  private val tweetsSql = s"read_json_auto('$fixtureGlob', $JsonOpts)"
 
   /** Corpus resolution honoring the driver contract's `dir` parameter: a
     * `tweets/` subdirectory under the scale-factor dir wins; the committed
@@ -67,7 +76,6 @@ object TweetQueries {
   private val WordValidSpec = EmojiOps.WordValidSpec
 
   private def tweets(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.read.json(tweetsDir(dir))
   }
 
@@ -153,7 +161,6 @@ object TweetQueries {
     * deterministic 100k-tweet generated corpus (TweetCorpus) — the entry
     * that actually measures the tokenizer instead of session overhead. */
   def topEmojiScaled(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val corpus = graft.ingest.TweetCorpus.ensureScaled()
     spark.read.json(corpus)
       .select(col("data.text").as("text"))
@@ -247,8 +254,7 @@ object TweetQueries {
   //      (pptx slide 19) reproduced as a verifiable result.
 
   def histTopEmoji(subdir: String, textCol: String)(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
-    spark.read.json(s"/root/repo/fixtures/$subdir")
+    spark.read.json(s"$FixturesRoot/$subdir")
       .select(col(textCol).as("text"))
       .filter(col("text").isNotNull)
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
@@ -259,7 +265,7 @@ object TweetQueries {
   private def histSql(subdir: String, textCol: String): String =
     s"""SELECT emoji, count(*) AS cnt FROM (
        |  SELECT unnest(regexp_extract_all($textCol, '$EmojiClassSql')) AS emoji
-       |  FROM read_json_auto('/root/repo/fixtures/$subdir/*.json', format='newline_delimited'))
+       |  FROM read_json_auto('$FixturesRoot/$subdir/*.json', $JsonOpts))
        |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin
 
   // ---- q2 analog: the same top-emoji aggregation through Structured
@@ -267,7 +273,6 @@ object TweetQueries {
   //      sort-on-streaming-aggregate, memory sink standing in for console).
 
   def streamTopEmoji(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val corpus = tweetsDir(dir)
     val static = spark.read.json(corpus)                     // S3 schema bootstrap
     val stream = spark.readStream.schema(static.schema).json(corpus)
@@ -287,7 +292,6 @@ object TweetQueries {
     * hash-gated against the identical oracle as `tw_q1_top_emoji_quirk`
     * (streaming/batch duality of the quirk census). */
   def streamTopEmojiQuirk(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val corpus = tweetsDir(dir)
     val static = spark.read.json(corpus)                     // S3 schema bootstrap
     val stream = spark.readStream.schema(static.schema).json(corpus)
@@ -376,7 +380,7 @@ object TweetQueries {
     "tw_q1_top_emoji_scaled" ->
       s"""SELECT emoji, count(*) AS cnt FROM (
          |  SELECT unnest(regexp_extract_all(data.text, '$EmojiClassSql')) AS emoji
-         |  FROM read_json_auto('${graft.ingest.TweetCorpus.ScaledDir}/*.json', format='newline_delimited'))
+         |  FROM read_json_auto('${graft.ingest.TweetCorpus.ScaledDir}/*.json', $JsonOpts))
          |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin,
     "tw_q1_emoji_grin" ->
       s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 import graft.functions.VectorOps
 
 /** Similarity search over the `embeddings` table (array<float> column).
@@ -68,7 +68,6 @@ object Similarity {
     * [[bucketsSpec]] keeps the explode + planeDot spelling, bit-identical
     * (pinned in VectorOpsSpec). */
   def buckets(spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    Engine.tune(spark)
     val bucketCol = org.apache.spark.sql.GraftBridge.column(
       graft.functions.LshBucket(
         org.apache.spark.sql.GraftBridge.expression(col("embedding")), planes))
@@ -78,7 +77,6 @@ object Similarity {
 
   /** Explode + planeDot spelling of [[buckets]] (the portable spec). */
   def bucketsSpec(spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .withColumn("j", explode(sequence(lit(0), lit(planes - 1))))
@@ -90,7 +88,6 @@ object Similarity {
 
   /** Brute-force cosine top-10 against the vec_id=0 query vector. */
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     emb.crossJoin(broadcast(q))
@@ -129,7 +126,6 @@ object Similarity {
   val RangeThreshold = 0.2
 
   def rangeSearch(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     emb.crossJoin(broadcast(q))
@@ -147,7 +143,6 @@ object Similarity {
     * not |corpus|; the embedding side joins on its key and the tiny
     * query vector broadcasts. */
   def hybridSearch(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = Tables(spark, dir, "documents")
       .filter(col("text").contains("shuffle"))
       .select(col("doc_id"))
@@ -179,7 +174,6 @@ object Similarity {
     * Determinism: ranks are exact ints, 1/(k+r) a single IEEE divide,
     * the two contributions added in fixed order, rounded to 1e-6. */
   def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val lex = graft.text.TextAnalysis.bm25(spark, dir)
       .withColumn("lex_rank",
@@ -222,7 +216,6 @@ object Similarity {
     * cells are the family's standing posture). Ranking is the bounded-
     * heap TopKPerGroup, never a window sort over all candidates. */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     knnGraphEdges(spark, dir).orderBy("src", "rn")
   }
 
@@ -253,7 +246,6 @@ object Similarity {
     * over the |cells|-sized frame — the shape of every index-stats
     * endpoint. Shares [[cellAssignments]] with the whole IVF family. */
   def ivfStats(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = org.apache.spark.sql.expressions.Window.partitionBy()
     cellAssignments(spark, dir)
       .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
@@ -277,7 +269,6 @@ object Similarity {
     * [[knnBatch]]; at scale the predicate rides the IVF/PQ candidate
     * stream identically. */
   def filteredKnn(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val q = emb.filter(col("vec_id") < 8)
@@ -301,7 +292,6 @@ object Similarity {
     * per query, both counts and the deficit — the number that justifies
     * filter-aware index traversal. */
   def prePostFilter(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val q = emb.filter(col("vec_id") < 8)
@@ -354,7 +344,6 @@ object Similarity {
     * — the k-means/PageRank loop posture; the one driver-side scalar is
     * the corpus count seeding the modulus. */
   def knnDescent(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     descentRanked(spark, dir, DescentRounds).orderBy("src", "rn")
   }
 
@@ -410,7 +399,6 @@ object Similarity {
     * exactly the cross-cell neighbors the quantizer hides — the number
     * [[knnGraphRefined]]'s 2-hop expansion exists to recover. */
   def knnGraphRecall(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val q = emb.filter(col("vec_id") % GraphProbeMod === 0)
@@ -442,7 +430,6 @@ object Similarity {
     * corpus that is the difference between a fixed-size heap and a
     * full sort of the scored frame. */
   def knnBatch(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -497,7 +484,6 @@ object Similarity {
   /** The n nearest centroid cells per vector, rank-tagged — `n = 1` is
     * the storage assignment, `n > 1` is the multi-probe query set. */
   def cellCandidates(spark: SparkSession, dir: String, n: Int): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     // quantized centroid components per (label, dim)
@@ -548,7 +534,6 @@ object Similarity {
     * members, so the gate covers both that the quantizer did not move
     * (base counts) and where the new data landed (append counts). */
   def ivfAppend(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     ivfAssignAgainst(ivfBaseCentroids(spark, dir), emb)
@@ -593,7 +578,6 @@ object Similarity {
     * ([[ivfTopK]]) and the trained one ([[ivfTrainedTopK]]). */
   private def ivfTopKWith(spark: SparkSession, dir: String,
       assign: DataFrame, k: Int): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val corpus = emb.join(assign, Seq("vec_id"))
@@ -624,7 +608,6 @@ object Similarity {
     * persists: [[ivfTrainedTopK]] computes it inline (train-and-query),
     * [[ivfServedTopK]] reads it back from the parquet artifact. */
   private[similarity] def ivfTrainedAssign(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cent = kmeansTrajectory(spark, dir)._1
       .select(col("c_label"), col("dim"), col("cq"))
     val vdim = Tables(spark, dir, "embeddings")
@@ -660,7 +643,6 @@ object Similarity {
     * (observed at sf0.01), while the established quantized spelling
     * hash-matches everywhere it is used. */
   def kmeansIter(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val vd = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").as("dim"),
@@ -684,7 +666,6 @@ object Similarity {
     * Cells that lose every member vanish with the iteration output
     * (standard empty-cluster drop). */
   def centroidShift(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val init = Tables(spark, dir, "embeddings")
       .select(col("label").as("cell"), posexplode(col("embedding")))
       .groupBy(col("cell"), col("pos").as("dim"))
@@ -728,7 +709,6 @@ object Similarity {
     * honest convergence evidence. */
   private[similarity] def kmeansTrajectory(spark: SparkSession, dir: String,
       maxRounds: Int = KmeansRunRounds): (DataFrame, Seq[Long]) = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     // one materialization carrying both the quantized (assignment) and
@@ -820,7 +800,6 @@ object Similarity {
     * |corpus|·d rows, one 1-row broadcast for the renorm — at 100 TB
     * the d-sized accumulator is the only state that crosses the wire. */
   def pcaPowerIter(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val xq = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").as("dim"),
@@ -859,7 +838,6 @@ object Similarity {
     * discipline). */
   private[similarity] def pcaTrajectory(spark: SparkSession, dir: String,
       maxRounds: Int = PcaRunRounds): (DataFrame, Int) = {
-    Engine.tune(spark)
     val xq = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").as("dim"),
@@ -904,7 +882,6 @@ object Similarity {
     * on both sides (a direct float→decimal cast is exact in Spark but
     * 9-digit-lossy in DuckDB). */
   def centroidComponents(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "embeddings")
       .select(col("label"), posexplode(col("embedding")))
       .groupBy(col("label"), col("pos").as("dim"))
@@ -929,7 +906,6 @@ object Similarity {
 
   def ivfMultiprobe(spark: SparkSession, dir: String,
       probes: Int = MultiprobeProbes, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     ivfMultiprobeFrom(emb.join(cellAssignments(spark, dir), Seq("vec_id")),
       cellCandidates(spark, dir, probes).filter(col("vec_id") < 4), emb, k)
@@ -977,7 +953,6 @@ object Similarity {
     * brute-force top-3 for the standard query set. */
   private def recallAgainstExact(spark: SparkSession, dir: String,
       answers: DataFrame): DataFrame = {
-    Engine.tune(spark)
     val (q, bf) = exactTruth(spark, dir, 4,
       (e, qe) => round(VectorOps.cosine(e, qe), 4))
     recallVsTruth(q, bf, answers)
@@ -1033,7 +1008,6 @@ object Similarity {
     * qid partition's ~|corpus| scored rows before discarding all but
     * k. */
   def truncTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), slice(col("embedding"), 1, TruncDims).as("te"))
     val q = emb.filter(col("vec_id") < 4)
@@ -1058,7 +1032,6 @@ object Similarity {
     * scoring cost scales linearly with the prefix, recall is what that
     * buys. */
   def dimSweep(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val (q, truth) = exactTruth(spark, dir, 4,
       (e, qe) => round(VectorOps.cosine(e, qe), 4))
@@ -1094,7 +1067,6 @@ object Similarity {
     * candidate set; rerank orders it by the true score) and
     * spec-asserted against exact ground truth. */
   def rerankTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val cand = truncTopK(spark, dir, RerankCandidates)
       .select(col("qid"), col("vec_id"))
@@ -1127,7 +1099,6 @@ object Similarity {
     * indexes use: mixing the two would "measure" the metric gap, not the
     * int8 quantization error this eval exists to watch. */
   def sqRecallEval(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val (q, bf) = exactTruth(spark, dir, SqQueries,
       (e, qe) => round(VectorOps.dot(e, qe), 4))
     recallVsTruth(q, bf, sqTopK(spark, dir))
@@ -1184,14 +1155,12 @@ object Similarity {
     * table a deployment materializes once and stores in place of the
     * raw embeddings for ranking. */
   def pqCodes(spark: SparkSession, dir: String, m: Int = PqSubspaces): DataFrame = {
-    Engine.tune(spark)
     argminLabel(pqSubDists(spark, dir, m), Seq("vec_id", "sub"), "sdist")
       .select(col("vec_id"), col("sub"), col("c_label").as("code"))
   }
 
   def pqTopK(spark: SparkSession, dir: String,
       m: Int = PqSubspaces, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val subDists = pqSubDists(spark, dir, m)
     val codes = pqCodes(spark, dir, m)
       .select(col("vec_id"), col("sub").as("c_sub"), col("code"))
@@ -1218,7 +1187,6 @@ object Similarity {
     * stop on zero moved grid entries or [[KmeansRunRounds]]. */
   private[similarity] def pqTrainedCodebooks(spark: SparkSession, dir: String,
       m: Int = PqSubspaces, maxRounds: Int = KmeansRunRounds): DataFrame = {
-    Engine.tune(spark)
     val base = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         (size(col("embedding")) / m).cast("long").as("sl"),
@@ -1286,7 +1254,6 @@ object Similarity {
     * query — the encode/LUT/ADC machinery is identical. */
   def pqTrainedTopK(spark: SparkSession, dir: String,
       m: Int = PqSubspaces, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val cent = pqTrainedCodebooks(spark, dir, m)
     val subDists = pqSubDists(pqVdim(spark, dir, m), cent)
     val codes = pqEncode(subDists)
@@ -1343,7 +1310,6 @@ object Similarity {
     * read_parquet, so the cross-engine gate covers the persisted bytes,
     * not a retrain. */
   def ivfServedTopK(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val assign = IndexStore.ensure(spark, dir, "ivf_assign")(
       ivfTrainedAssign(spark, dir))
     ivfTopKWith(spark, dir, assign, k = 3)
@@ -1371,7 +1337,6 @@ object Similarity {
     * (old version serves until the pointer swap; GC unlinks it after
     * grace). */
   def ivfForget(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val scrubbed = IndexStore.ensure(spark, dir, "ivf_assign_forget") {
       val base = IndexStore.ensure(spark, dir, "ivf_assign")(
         ivfTrainedAssign(spark, dir))
@@ -1391,7 +1356,6 @@ object Similarity {
     * (pinned in SimilaritySpec). */
   def pqServedTopK(spark: SparkSession, dir: String,
       m: Int = PqSubspaces, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val cent = IndexStore.ensure(spark, dir, "pq_codebooks")(
       pqTrainedCodebooks(spark, dir, m))
     val codes = IndexStore.ensure(spark, dir, "pq_codes")(
@@ -1422,7 +1386,6 @@ object Similarity {
     * registered query runs), never an all-pairs pass; the ground-truth
     * pass is computed once and reused across the sweep. */
   def probeSweep(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     // r18 optimization (guide §1.2 step 1): ONE quantizer materialization
     // serves every probe level. cellCandidates at max(Ns) is checkpointed
@@ -1466,7 +1429,6 @@ object Similarity {
   /** Per-component (vec_id, dim, x) frame + per-dim (min, max) stats —
     * the two inputs every scalar-quantization step shares. */
   private def sqDims(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    Engine.tune(spark)
     val dims = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").cast("long").as("dim"),
@@ -1540,7 +1502,6 @@ object Similarity {
     * composition to its two verified halves). */
   def ivfPqTopK(spark: SparkSession, dir: String,
       probes: Int = MultiprobeProbes, m: Int = PqSubspaces, k: Int = 3): DataFrame = {
-    Engine.tune(spark)
     val assign = cellAssignments(spark, dir)
     val codes = pqCodes(spark, dir, m)
       .select(col("vec_id"), col("sub").as("c_sub"), col("code"))

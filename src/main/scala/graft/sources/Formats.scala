@@ -6,7 +6,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables, TempDirs}
+import graft.{Tables, TempDirs}
 
 /** Source-format coverage beyond parquet/JSON: ORC and CSV ingestion,
   * verified by ROUND-TRIP parity — each query materializes a lineitem
@@ -104,7 +104,6 @@ object Formats {
       .orderBy("l_returnflag", "l_linestatus")
 
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     pricingAgg(spark.read.orc(materialize(spark, dir, "orc")))
   }
 
@@ -117,12 +116,10 @@ object Formats {
     * carry the .zstd.parquet suffix), so a silently-ignored option
     * cannot masquerade as fidelity. */
   def zstdRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     pricingAgg(spark.read.parquet(materialize(spark, dir, "zstd")))
   }
 
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val schema = "l_returnflag STRING, l_linestatus STRING, " +
       "l_quantity DOUBLE, l_extendedprice DOUBLE"
     pricingAgg(spark.read.schema(schema)
@@ -133,7 +130,6 @@ object Formats {
     * inference would widen types); doubles survive via shortest-round-trip
     * literals. NDJSON is splittable, so the scan parallelism matches. */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val schema = "l_returnflag STRING, l_linestatus STRING, " +
       "l_quantity DOUBLE, l_extendedprice DOUBLE"
     pricingAgg(spark.read.schema(schema)
@@ -147,7 +143,6 @@ object Formats {
     * referenced, so column pruning must keep the reader from ever
     * materializing it (asserted in SyntheticDocsSourceSpec). */
   def dsv2Scan(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.read.format("graft.sources.SyntheticDocsSource")
       .option("rows", "100000").option("parts", "8").load()
       .groupBy("bucket")
@@ -185,7 +180,6 @@ object Formats {
     * append), and the projection-level column pruning — cross-engine,
     * without DuckDB reading the custom format. */
   def dsv2Write(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.docs (id BIGINT, bucket INT, score DOUBLE)")
@@ -236,7 +230,6 @@ object Formats {
     * survivor set from the range() arithmetic, so one surviving bucket-3
     * row or one lost survivor breaks the hash. */
   def dsv2Delete(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.del (id BIGINT, bucket INT, score DOUBLE)")
@@ -259,7 +252,6 @@ object Formats {
     * time-travel read that leaked an appended row (or lost one) breaks
     * the hash. */
   def dsv2TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.tt (id BIGINT, bucket INT, score DOUBLE)")
@@ -289,7 +281,6 @@ object Formats {
     * the wall clock. The oracle re-derives both snapshots from range()
     * arithmetic, exactly the VERSION-AS-OF twin's gate. */
   def dsv2TimeTravelTs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ttts")
     spark.sql(s"CREATE TABLE $cat.ttts (id BIGINT, bucket INT, score DOUBLE)")
@@ -320,7 +311,6 @@ object Formats {
     * file-count drop plus the superseded version's survival for time
     * travel. */
   def dsv2Compact(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.cmp (id BIGINT, bucket INT, score DOUBLE)")
@@ -348,7 +338,6 @@ object Formats {
     * oracle re-derives the surviving range's aggregate — a skip that
     * was not conservative (a lost row) breaks the hash. */
   def dsv2Skipping(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.skip (id BIGINT, bucket INT, score DOUBLE)")
@@ -377,7 +366,6 @@ object Formats {
     * query REQUIRES BroadcastHashJoin in the executed plan; the oracle
     * re-derives the join arithmetic cross-engine. */
   def dsv2StatsJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"CREATE TABLE IF NOT EXISTS $cat.dim16 (bucket INT, tier STRING)")
     spark.sql(
@@ -407,7 +395,6 @@ object Formats {
     * re-derives the updated table from the range() arithmetic — one
     * row double-updated, missed, or lost breaks the hash. */
   def dsv2Update(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.upd (id BIGINT, bucket INT, score DOUBLE)")
@@ -426,7 +413,6 @@ object Formats {
     * same group-based COW commit. The oracle re-derives the three id
     * regimes (untouched / updated / inserted) from range() arithmetic. */
   def dsv2Merge(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.mrg (id BIGINT, bucket INT, score DOUBLE)")
@@ -463,8 +449,7 @@ object Formats {
     * write-face oracle: content must be byte-identical to the
     * uncompacted table. */
   def dsv2Optimize(spark: SparkSession, dir: String): DataFrame = {
-    val s = graft.queries.EventQueries.extensionSession(spark)
-    Engine.tune(s)
+    val s = graft.Sessions.withExtensions(spark)
     val cat = ensureCatalog(s)
     s.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.opt (id BIGINT, bucket INT, score DOUBLE)")
@@ -493,7 +478,6 @@ object Formats {
     * most files (asserted). The oracle gates the post-rewrite aggregate,
     * so a row lost or duplicated by the self-overwrite breaks the hash. */
   def dsv2Cluster(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.clus")
     spark.sql(s"CREATE TABLE $cat.clus (id BIGINT, bucket INT, score DOUBLE)")
@@ -539,7 +523,6 @@ object Formats {
     * table is dropped and re-created each run because a second ALTER of
     * the same name must fail loudly (duplicate column). */
   def dsv2Evolve(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ev")
     spark.sql(s"CREATE TABLE $cat.ev (id BIGINT, bucket INT)")
@@ -573,7 +556,6 @@ object Formats {
     * arithmetic — one phantom change, lost change, or mislabeled image
     * breaks the hash. */
   def dsv2Changes(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.cdc")
     spark.sql(s"CREATE TABLE $cat.cdc (id BIGINT, bucket INT, score DOUBLE)")
@@ -617,7 +599,6 @@ object Formats {
     * re-derivation — a leaked violating row, a lost conforming one, or
     * a constraint that silently stopped enforcing all break the gate. */
   def dsv2Constraint(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     def failsNaming(name: String)(sql: String): Unit = {
       val named =
@@ -664,7 +645,6 @@ object Formats {
     * oracle — a resurrected masked row, a lost survivor, or a
     * mis-unioned mask all break the hash. */
   def dsv2DvDelete(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.dv")
     spark.sql(
@@ -702,7 +682,6 @@ object Formats {
     * rewritten). The second delete's delta must exclude the first's
     * rows; the oracle re-derives both deleted ranges per bucket. */
   def dsv2DvChanges(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.dvc")
     spark.sql(
@@ -735,8 +714,7 @@ object Formats {
     * under the range() oracle — the rewrite is content-identical, so
     * one lost or duplicated row breaks the hash. */
   def dsv2Zorder(spark: SparkSession, dir: String): DataFrame = {
-    val s = graft.queries.EventQueries.extensionSession(spark)
-    Engine.tune(s)
+    val s = graft.Sessions.withExtensions(spark)
     val cat = ensureCatalog(s)
     s.sql(s"DROP TABLE IF EXISTS $cat.zo")
     s.sql(s"CREATE TABLE $cat.zo (id BIGINT, bucket INT, score DOUBLE)")
@@ -797,7 +775,6 @@ object Formats {
     * oracle aggregates the unpartitioned original, so partition-column
     * extraction fidelity is under the hash too. */
   def partitionedScan(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.read.parquet(materializePartitioned(spark, dir))
       .filter(col("lang") === "en")
       .groupBy("source")
@@ -830,7 +807,6 @@ object Formats {
     * lives on the dimension side ([[partitionedScan]] covers the static
     * half). Plan-asserted in PartitionPruningSpec. */
   def dppJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val fact = spark.read.parquet(materializePartitioned(spark, dir))
     val dim = spark.read.parquet(materializeLangDim(spark, dir))
       .filter(col("tier") === "major")
@@ -868,7 +844,6 @@ object Formats {
     * under test is reading heterogeneous-schema data without a
     * backfill. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val out = materializeEvolved(spark, dir)
     // both batch roots listed explicitly (they are sibling datasets, not
     // key=value partitions, so directory recursion would not find them)
@@ -921,7 +896,6 @@ object Formats {
     * results are hint-independent. sum(l_quantity) is exact — the
     * fixture quantities are integral doubles, closed under addition. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val (ot, lt) = materializeBucketed(spark, dir)
     spark.table(ot).hint("merge")
       .join(spark.table(lt), col("o_orderkey") === col("l_orderkey"))
@@ -952,7 +926,6 @@ object Formats {
     * injected filter and result parity. The merge hint pins the
     * shuffle-join execution shape the mechanism exists for. */
   def runtimeFilterJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val dim = Tables(spark, dir, "orders")
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select(col("o_orderkey"), col("o_orderpriority"))
@@ -999,7 +972,6 @@ object Formats {
     * (referencing `_corrupt_record` requires the parsed rows to be
     * materialized, not re-read per subexpression). */
   def csvMalformed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val schema = "id LONG, tag STRING, val LONG, _corrupt_record STRING"
     spark.read.schema(schema)
       .option("mode", "PERMISSIVE")
@@ -1035,7 +1007,6 @@ object Formats {
     * the format whose corruption mode is structural (cut-off objects)
     * rather than value-level. */
   def jsonMalformed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val schema = "id LONG, tag STRING, val LONG, _corrupt_record STRING"
     spark.read.schema(schema)
       .option("mode", "PERMISSIVE")
@@ -1067,7 +1038,6 @@ object Formats {
     * line boundaries, so the scan parallelizes like the CSV variant;
     * this is the path a from-scratch corpus build starts from. */
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.read.text(materializeText(spark, dir))
       .select(length(col("value")).as("len"))
       .groupBy((col("len") / 100).cast("long").as("len_bucket"))
@@ -1160,7 +1130,6 @@ object Formats {
     * hash; the ≥8× file-count reduction itself is asserted in
     * FormatsSpec. */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val (_, out) = compactionDirs(spark, dir)
     spark.read.parquet(out)
       .groupBy("source")
@@ -1198,7 +1167,6 @@ object Formats {
     * [[zorderSkipping]] manifest mechanism), which is exactly how
     * deletion vectors / OPTIMIZE-style rewrites bound the cost. */
   def forgetUser(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.similarity.IndexStore
     val name = s"forget_events_${sfTag(dir)}"
     def events = Tables(spark, dir, "events")
@@ -1258,7 +1226,6 @@ object Formats {
     * layout are the SAME inodes as the old one's, and the rewritten
     * bucket holds exactly its kept rows. */
   def forgetPruned(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val maxu = Tables(spark, dir, "events")
       .agg(max("user_id")).collect()(0).getLong(0)
     val base = buildOnce(s"/tmp/graft-src-ufull-${sfTag(dir)}") { tmp =>
@@ -1339,7 +1306,6 @@ object Formats {
     * as the audit trail (its spec pins that), this query deliberately
     * destroys its own — the two halves of the GDPR lifecycle. */
   def forgetGc(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.similarity.IndexStore
     val name = s"forget_gc_events_${sfTag(dir)}"
     def events = Tables(spark, dir, "events")
@@ -1415,7 +1381,6 @@ object Formats {
       .withColumn("version", lit(v.toLong))
 
   def snapshotReader(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.similarity.IndexStore
     // SF-SCOPED name (ADVICE r13): the reader compares row counts against
     // THIS run's expected map — a concurrent driver process at another
@@ -1475,7 +1440,6 @@ object Formats {
     * that resolves the wrong directory all hash-mismatch. At 100 TB this
     * is the audit/rollback read every table format sells. */
   def snapshotHistory(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.similarity.IndexStore
     val name = s"snap_history_${sfTag(dir)}" // sf-scoped, same ADVICE r13 reason
     // ledger path (round 15): the current∪previous read digests from the
@@ -1542,7 +1506,6 @@ object Formats {
       |((bxx div 8) % 2) * 64 + ((byy div 8) % 2) * 128""".stripMargin
 
   def zorderCluster(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
     val (maxp, maxs, maxo) = keyExtrema(spark, dir)
@@ -1592,7 +1555,6 @@ object Formats {
     * keeps the simpler write path (bit interleave vs rotation rounds) —
     * this census is the measured trade-off between them. */
   def hilbertCluster(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
     val (maxp, maxs, _) = keyExtrema(spark, dir)
@@ -1733,7 +1695,6 @@ object Formats {
     * (16/layout); at 100 TB it is the format's metadata scan — small by
     * construction — while the data scan stays distributed. */
   def zorderSkipping(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val (maxp, maxs, _) = keyExtrema(spark, dir)
     val sides = Seq("linear", "zorder").map { layout =>
       val man = zorderManifest(spark, dir, layout)
@@ -1805,7 +1766,6 @@ object Formats {
     * the two clustering writes: same stats manifest, same prune, fewer
     * opens under the jump-free curve for range predicates. */
   def hilbertSkipping(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val (maxp, maxs, _) = keyExtrema(spark, dir)
     val base = hilbertLayouts(spark, dir)
     val sides = Seq("hilbert24", "zorder24").map { layout =>

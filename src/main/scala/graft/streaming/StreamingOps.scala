@@ -8,7 +8,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 
 /** Output row of the stateful session summary (update-mode sink schema). */
 case class SessionRow(user_id: Long, n_events: Long, first_us: Long, last_us: Long)
@@ -624,7 +624,6 @@ object StreamingOps {
   /** Complete-mode grouped count over the event stream (A6 parity: state
     * retained, full result re-emitted per micro-batch). */
   def completeCounts(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     runToMemory(spark, eventTypeCounts(spark, dir)).orderBy("event_type")
   }
 
@@ -642,7 +641,6 @@ object StreamingOps {
     * "what is in this job's state right now" — a bounded scan of the
     * state files, no replay, no code change to the job. */
   def stateReader(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ckpt = graft.TempDirs.create("graft-state-read").toString
     val q = eventTypeCounts(spark, dir).writeStream.outputMode("complete")
       .format("noop")
@@ -682,7 +680,6 @@ object StreamingOps {
     * Complete output here (finite source, oracle-checkable); the
     * append-mode bounded-state variant is exercised in the test suite. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val agg = eventStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -701,7 +698,6 @@ object StreamingOps {
     * exact-integer variance spelling, so the alert boundary cannot fork
     * between the online and offline paths. */
   def streamAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val agg = eventStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"))
@@ -735,7 +731,6 @@ object StreamingOps {
     * with the batch oracle over the same fixture: the online and
     * offline quality ledgers cannot fork. */
   def streamDqGate(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val agg = eventStream(spark, dir).agg(
       count(lit(1)).as("n_rows"),
       sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("n_null_user"),
@@ -762,7 +757,6 @@ object StreamingOps {
     * over the MATERIALIZED histogram (the tiny sink frame), never the
     * stream. */
   def streamLatencyPctl(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val agg = eventStream(spark, dir)
       .groupBy(col("event_type"), floor(col("value")).cast("long").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
@@ -781,7 +775,6 @@ object StreamingOps {
     * 100 TB deployment would actually use. Shares hourlyCounts' oracle:
     * the sink route must not change the result. */
   def hourlyCountsFiles(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
     val stream = spark.readStream.schema(schema)
@@ -815,7 +808,6 @@ object StreamingOps {
     * kill/restart drama replays every run (nothing rides the feed
     * cache except the slice files themselves). */
   def restartRecovery(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val feed = timeSplitFeed(spark, dir, n = 3)
     val slices = new java.io.File(feed).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -922,7 +914,6 @@ object StreamingOps {
 
   private def mergedFinalState(spark: SparkSession, dir: String,
       targetPrefix: String): DataFrame = {
-    Engine.tune(spark)
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1138,7 +1129,6 @@ object StreamingOps {
     * lateness is meaningless unless the stream arrives in arrival
     * order. */
   def streamLateness(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1184,7 +1174,6 @@ object StreamingOps {
     * BOUNDED: closed windows are evicted, so state size tracks the
     * watermark lag, not the stream length. */
   def hourlyAppend(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
@@ -1217,7 +1206,6 @@ object StreamingOps {
     * a single emitted window. Self-termination and the multi-batch
     * drain are pinned in StreamingStateSpec. */
   def hourlyAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
@@ -1243,7 +1231,6 @@ object StreamingOps {
     * batch, so the final table is the batch aggregate (the oracle);
     * multi-batch state carry-over is asserted in the test suite. */
   def sessionSummary(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     val sessions = eventStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
@@ -1335,7 +1322,6 @@ object StreamingOps {
     * the ledger via [[lastForeachBatchPlan]]; the pure-scan shape of
     * the resolved index is pinned in StreamingDualitySpec. */
   def streamAnnServe(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val feed = embSplitFeed(spark, dir, n = 3)
     val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
     // the serving state: corpus joined to the PUBLISHED (vec_id, cell)
@@ -1387,7 +1373,6 @@ object StreamingOps {
     * defers to its periodic batch compaction. Multi-trigger contract:
     * the corpus drains over ≥3 data batches on both streams. */
   def streamCuration(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     // The census stream and the survivor stream are INDEPENDENT queries
     // over the same (pre-built) feed, so they run CONCURRENTLY (r18
     // optimization, guide §2.6 — overlap independent jobs): the census
@@ -1451,7 +1436,6 @@ object StreamingOps {
     * sums against the batch gate counts (a sum that covers the whole
     * corpus proves every micro-batch's observe row reported). */
   def streamCurationObserved(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val landed = curationSurvivors(spark, dir,
       tap = _.observe("curation_gate",
         count(lit(1)).as("n_raw"), sum(col("quality")).as("n_quality")))
@@ -1564,7 +1548,6 @@ object StreamingOps {
     * online/offline composition must land exactly the batch funnel's
     * fuzzy-dedup survivor set, row for row. */
   def compactionHandoff(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.similarity.IndexStore
     val name = "curation_ledger_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
     // ledger path: with a published version, digest the pure scan (the
@@ -1587,7 +1570,6 @@ object StreamingOps {
 
   private def twsTimerSessionsImpl(spark: SparkSession, dir: String,
       changelog: Boolean): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val feed = timeSplitFeed(spark, dir, n = 3)
@@ -1614,7 +1596,6 @@ object StreamingOps {
     * supports only the RocksDB state store provider, which
     * [[runToMemory]] already scopes in. */
   def twsSummary(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val sessions = eventStream(spark, dir)
@@ -1639,7 +1620,6 @@ object StreamingOps {
     * offset bookkeeping under the cross-engine hash gate (the oracle
     * reproduces the deterministic table from `range()`). */
   def dsv2Stream(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val stream = spark.readStream.format("graft.sources.SyntheticDocsSource")
       .option("rows", "20000").option("parts", "4").option("rowsPerBatch", "5000")
       .load()
@@ -1660,7 +1640,6 @@ object StreamingOps {
     * oracle: the frozen snapshot must equal the plain drain of the
     * un-grown source, so one admitted late id breaks the hash. */
   def dsv2AvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val stream = spark.readStream.format("graft.sources.SyntheticDocsSource")
       .option("rows", "20000").option("parts", "4").option("rowsPerBatch", "5000")
       .option("lateRows", "30000")
@@ -1685,7 +1664,6 @@ object StreamingOps {
     * 20k-row connector arithmetic a third time — one duplicated or
     * dropped batch breaks the hash. */
   def dsv2StreamSink(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.sink (id BIGINT, bucket INT, score DOUBLE)")
@@ -1722,7 +1700,6 @@ object StreamingOps {
     * epochs enforced; the oracle is the 20k-row connector arithmetic —
     * a double-committed or lost epoch breaks the hash. */
   def dsv2NativeStreamSink(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.nsink")
     spark.sql(
@@ -1759,7 +1736,6 @@ object StreamingOps {
     * double-committed breaks the hash. */
   def dsv2Medallion(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.bronze")
     spark.sql(s"DROP TABLE IF EXISTS $cat.silver")
@@ -1797,7 +1773,6 @@ object StreamingOps {
     * is the 20k-row connector arithmetic — a version consumed twice or
     * skipped breaks the hash. */
   def dsv2TableStream(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     // fresh history per run: the stream replays the table FROM SEQ 0, so
     // the table must hold exactly this run's four versions
@@ -1830,7 +1805,6 @@ object StreamingOps {
     * a lost retraction, replayed version, or leaked compaction row
     * breaks the hash. */
   def dsv2CdcStream(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.cdcs")
     spark.sql(s"CREATE TABLE $cat.cdcs (id BIGINT, bucket INT, score DOUBLE)")
@@ -1883,7 +1857,6 @@ object StreamingOps {
     * only strictly-overlapping windows), and a session is emitted when
     * `end <= watermark` (ms-floored max event time − 10 min). */
   def sessionWindows(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
@@ -1918,7 +1891,6 @@ object StreamingOps {
     * eagerly per batch; the per-user rollup happens on the materialized
     * result (batch aggregate over sink-sized data). */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // 3 slices = the minimum that still proves cross-batch matches; each
     // extra trigger costs a full state-store open/commit cycle per
@@ -1962,7 +1934,6 @@ object StreamingOps {
   val MilestoneStep = 25L
 
   def milestones(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -2001,7 +1972,6 @@ object StreamingOps {
     * query's oracle (shared constant — streaming/batch duality by
     * construction). */
   def streamPaths(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -2043,7 +2013,6 @@ object StreamingOps {
     * a credit bridging the trigger boundary (purchase in batch i+1,
     * channel set in batch i) is provably exercised across ≥3 triggers. */
   def streamAttribution(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -2082,7 +2051,6 @@ object StreamingOps {
     * bounded-input distinct set; ordering applied to the materialized
     * result (a sort inside the stream is illegal in append mode). */
   def streamDistinctTypes(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val distinctTypes = eventStream(spark, dir)
       .select(col("event_type")).dropDuplicates("event_type")
     runToMemory(spark, distinctTypes, mode = "append").orderBy("event_type")
@@ -2103,7 +2071,6 @@ object StreamingOps {
     * columns only, so which same-key row arrived first is irrelevant to
     * the result. */
   def streamDedupWm(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // 3 slices = the multi-trigger contract's minimum; the emitted set
     // (global distinct keys — delay > span) is slicing-independent
@@ -2142,7 +2109,6 @@ object StreamingOps {
     * purchases enrich on arrival, per-trigger output lands idempotently
     * by batch id. */
   def streamAsofEnrich(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
@@ -2178,7 +2144,6 @@ object StreamingOps {
     * side, so the landed union is arrival-invariant and the ORACLE is
     * `ev_interval_join`'s DuckDB IEJoin query verbatim. */
   def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val feed = timeSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
@@ -2218,7 +2183,6 @@ object StreamingOps {
     * third spelling of the same result (batch exec / per-trigger exec /
     * stateful online). */
   def streamAsofStateful(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -2255,7 +2219,6 @@ object StreamingOps {
     * ORACLE is `sim_ivf_append`'s verbatim — assignment against a
     * frozen quantizer is arrival-invariant. */
   def streamIvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import graft.similarity.Similarity
     val feed = embSplitFeed(spark, dir, n = 3)
     val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
@@ -2289,7 +2252,6 @@ object StreamingOps {
   }
 
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val cust = Tables(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val agg = eventStream(spark, dir)
@@ -2312,7 +2274,6 @@ object StreamingOps {
     * two sketches are mergeable with each other, not just with
     * themselves). */
   def cmsSketch(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val d = graft.text.TextAnalysis.CmsDepth
     val w = graft.text.TextAnalysis.CmsWidth
     val agg = eventStream(spark, dir)
@@ -2338,7 +2299,6 @@ object StreamingOps {
     * fork. The register max merges monotonically, so complete-mode
     * re-emission per trigger is the sketch's natural update. */
   def streamDauHll(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val regs = graft.queries.EventQueries.hllRegisters(
       eventStream(spark, dir)
         .select(to_date(col("ts")).as("day"), col("user_id")))
@@ -2371,7 +2331,6 @@ object StreamingOps {
     * enriched priority; at 100 TB the dimension refreshes per batch via
     * foreachBatch and the join stays broadcast. */
   def streamScd2Enrich(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val dim = graft.queries.RelationalQueries.scd2Runs(spark, dir)
       .select(col("o_custkey"), col("priority"),
         // orders dates read as TIMESTAMP_NTZ; the LTZ cast is

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Engine, Tables}
+import graft.Tables
 
 /** Text-analysis operators for the training-data-pipeline superset:
   * quality scoring, marker-based language ID, token counting (whitespace +
@@ -15,7 +15,6 @@ import graft.{Engine, Tables}
 object TextAnalysis {
 
   private def tokens(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("token"))
@@ -102,7 +101,6 @@ object TextAnalysis {
     * the eval can never drift from the classifier; cost is one tiny
     * grouped count over the per-doc frame. */
   def langIdEval(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("lang_actual")
     langId(spark, dir)
       .groupBy("lang_actual", "lang_guess")
@@ -115,7 +113,6 @@ object TextAnalysis {
   /** Normalized-document fingerprint families: md5 of the sorted distinct
     * token set; docs sharing a fingerprint are permutation-duplicates. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(md5(concat_ws(" ",
         array_sort(array_distinct(split(col("text"), " "))))).as("fp"))
@@ -153,7 +150,6 @@ object TextAnalysis {
     * sum, so the whole layout is a deterministic closed form the oracle
     * reproduces with the same window. */
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window
       .partitionBy(col("source"), col("block"))
@@ -180,7 +176,6 @@ object TextAnalysis {
     * no second scan, no join. Values ride exact integers until the two
     * final divisions, rounded to 4 decimals on both engines. */
   def datasetCard(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val a = Tables(spark, dir, "documents")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), " "))).as("n_tokens"),
@@ -215,7 +210,6 @@ object TextAnalysis {
     * distinct-count on the line hash, met by one hash-keyed equi-join
     * bounded by the boilerplate vocabulary — linear at any scale. */
   def boilerplate(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val lines = lineStream(Tables(spark, dir, "documents"))
     val boiler = lines.groupBy("line_md5")
       .agg(countDistinct("doc_id").as("df"))
@@ -244,7 +238,6 @@ object TextAnalysis {
     * block-sized — all exact integer arithmetic (`div`), one window
     * pass plus two grouped aggregates regardless of budget count. */
   def packSweep(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window
       .partitionBy(col("source"), col("block"))
@@ -294,7 +287,6 @@ object TextAnalysis {
     * sort; no global ORDER BY anywhere — shards are independent, which
     * is what makes the shuffle writable by N tasks at 100 TB. */
   def shuffleShards(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard")).orderBy(col("skey"), col("doc_id"))
     Tables(spark, dir, "documents")
@@ -326,7 +318,6 @@ object TextAnalysis {
     * exact distinct count (the explode is pre-distincted on
     * (doc_id, token), so both aggregates reuse that one exchange). */
   def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.GraftBridge
     val aggCol = GraftBridge.column(
       graft.functions.TopKValues(
@@ -348,7 +339,6 @@ object TextAnalysis {
   /** Token counting: whitespace tokens, bare word tokens, and BPE-ish
     * pre-tokenizer pieces per document. */
   def tokenStats(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("ws_tokens"),
@@ -368,7 +358,6 @@ object TextAnalysis {
     * the production alternative (approx_percentile) keeps the same plan
     * shape minus the sort. */
   def lengthQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(col("lang"), length(col("text")).cast("double").as("len"))
       .groupBy("lang")
@@ -407,7 +396,6 @@ object TextAnalysis {
     s"${nibSql("CAST(doc_id AS VARCHAR)", 4)} % 100"
 
   def splitAssign(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     withSplit(Tables(spark, dir, "documents"))
       .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
       .orderBy("lang", "split")
@@ -422,7 +410,6 @@ object TextAnalysis {
     * scale. Shares are single divisions of exact BIGINT sums —
     * deterministic doubles on both engines. */
   def mixReport(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     withSplit(Tables(spark, dir, "documents"))
       .select(col("lang"), col("split"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -440,7 +427,6 @@ object TextAnalysis {
     * digest (AQE broadcasts the distinct-train-hash side when small;
     * at 100 TB it stays a hash join on the digest, still linear). */
   def contamination(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val d = withSplit(Tables(spark, dir, "documents"))
       .select(col("doc_id"), col("split"), md5(col("text")).as("h"))
     val trainH = d.filter(col("split") === "train")
@@ -469,7 +455,6 @@ object TextAnalysis {
     * shingles and count as clean, from the base doc set (not the
     * shingle frame), so the per-split totals match [[contamination]]'s. */
   def contaminationNgram(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val d = withSplit(Tables(spark, dir, "documents"))
       .select(col("doc_id"), col("split"), split(col("text"), " ").as("w"))
     val shingles = d
@@ -559,7 +544,6 @@ object TextAnalysis {
     * equivalent column-expression pipeline (bit-identical, pinned in
     * TextAnalysisSpec); the DuckDB oracle spells the same BIGINT math. */
   def winnow(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val fps = org.apache.spark.sql.GraftBridge.column(
       graft.functions.WinnowFingerprints(
         org.apache.spark.sql.GraftBridge.expression(col("text")), KGram, WinnowWindow))
@@ -575,7 +559,6 @@ object TextAnalysis {
     * code-point array, k-gram polynomial hashes, window mins, dedupe —
     * all `transform`-based. */
   def winnowSpec(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .filter(length(col("text")) >= KGram + WinnowWindow - 1)
       .withColumn("cs", expr("transform(split(text, ''), c -> ascii(c))"))
@@ -592,7 +575,6 @@ object TextAnalysis {
     * structure on a known doc). Not registered: per-k-gram md5 is a
     * scale-killer (one digest + 32-char hex string per character). */
   def winnowMd5(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .filter(length(col("text")) >= KGram + WinnowWindow - 1)
       .withColumn("hashes",
@@ -612,7 +594,6 @@ object TextAnalysis {
     * O(len²) HOF spelling is deliberately avoided: document length is
     * unbounded at 100 TB, shuffle volume is not). */
   def repetition(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val d = Tables(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("arr"))
     // ONE (doc, token) count frame feeds all three token stats: total
@@ -653,7 +634,6 @@ object TextAnalysis {
   val DigitRunRe = "[0-9]{9,}"
 
   def piiScrub(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val raw = concat(col("text"),
       when(pmod(col("doc_id"), lit(7)) === 0,
         concat(lit(" contact user"), col("doc_id").cast("string"), lit("@example.com now")))
@@ -678,7 +658,6 @@ object TextAnalysis {
   val RareDf = 2
 
   def rareRatio(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val types = Tables(spark, dir, "documents")
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("token"))
       .filter(col("token") =!= "")
@@ -713,7 +692,6 @@ object TextAnalysis {
   }
 
   def sampleStratified(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val rate = when(col("lang") === "en", lit(SampleRates("en")))
       .otherwise(lit(SampleRates("other")))
     Tables(spark, dir, "documents")
@@ -740,7 +718,6 @@ object TextAnalysis {
     * to keep 20 rows (the exact shape the round-9 verdict flagged on
     * trunc/rerank; plan-asserted here as there). */
   def sampleQuota(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("lang"), col("doc_id"),
         md5(col("doc_id").cast("string")).as("hkey"))
@@ -755,7 +732,6 @@ object TextAnalysis {
     * + one grouped count with map-side partial aggregation; top-k plans
     * as TakeOrderedAndProject (no global sort materialization). */
   def topBigrams(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(split(col("text"), " ").as("arr"))
       .filter(size(col("arr")) >= 2)
@@ -780,7 +756,6 @@ object TextAnalysis {
     * never a third scan; the two unigram joins broadcast vocab-sized
     * sides and the top-20 plans as TakeOrderedAndProject. */
   def collocations(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val arrs = Tables(spark, dir, "documents")
       .select(split(col("text"), " ").as("arr"))
     val uni = arrs.select(explode(col("arr")).as("w"))
@@ -815,7 +790,6 @@ object TextAnalysis {
     * syllable proxy (runs of vowels) is the standard dictionary-free
     * approximation. */
   def readability(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val per = Tables(spark, dir, "documents")
       .select(col("lang"),
         size(expr("filter(split(text, '[.!?]+'), s -> length(trim(s)) > 0)"))
@@ -846,7 +820,6 @@ object TextAnalysis {
     * not sentences. The means are single divisions of exact integer
     * sums — no float-summation-order contract. */
   def sentences(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), "[.!?]+")).as("s0"))
@@ -924,7 +897,6 @@ object TextAnalysis {
     * engines and partitionings. The profiling dual of
     * [[lengthQuantiles]] (moments vs order statistics). */
   def charMoments(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .groupBy("lang")
       .agg(graft.functions.MomentsUdaf(col("n_chars")).as("m"))
@@ -996,7 +968,6 @@ object TextAnalysis {
     * then one exact-BIGINT division. The share window runs over the
     * 20-row aggregated frame, not the corpus. */
   def mixWeights(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     Tables(spark, dir, "documents")
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -1019,7 +990,6 @@ object TextAnalysis {
     * One corpus aggregate feeds all three weightings; the share
     * windows run over the |sources|-row frame. */
   def mixTempSweep(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val base = Tables(spark, dir, "documents")
       .select(col("source"),
@@ -1043,7 +1013,6 @@ object TextAnalysis {
     * [[pplBuckets]] (which buckets within it). Model and quantization
     * exactly as documented on [[perplexity]]. */
   private def docSurprisal(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("arr"))
     val bg = docs.filter(size(col("arr")) >= 2)
@@ -1149,7 +1118,6 @@ object TextAnalysis {
     * Round 1's pair statistics coincide with [[bpePairs]] by
     * construction (char-level init), spec-pinned in TextAnalysisSpec. */
   def bpeVocab(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sep2 = BpeSep + BpeSep
     // r18 optimization (guide §2.3 "aggregate before you shuffle", §1.2
     // step 1): the trainer loop runs over the DISTINCT word table with
@@ -1257,7 +1225,6 @@ object TextAnalysis {
   }
 
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     bpeEncodeFrom(tokens(spark, dir).select("doc_id", "token"), BpeMergeRounds)
   }
 
@@ -1278,7 +1245,6 @@ object TextAnalysis {
     * read_parquet + a recursive CTE, so the cross-engine gate covers
     * the stored bytes, not a retrain. */
   def bpeEncodeServed(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val sep2 = BpeSep + BpeSep
     val artifact = graft.similarity.IndexStore
       .ensure(spark, dir, "bpe_merges")(bpeVocab(spark, dir))
@@ -1492,7 +1458,6 @@ object TextAnalysis {
     * BMP-only, so both engines' character indexing agrees (probed; a
     * surrogate-pair corpus would need byte-domain slicing instead). */
   def chunkWindows(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     chunkWindowsOf(Tables(spark, dir, "documents"))
   }
 
@@ -1523,7 +1488,6 @@ object TextAnalysis {
     * 1-row frames — pipeline_curation's shape with the chunking tail
     * swapped in. */
   def ragFunnel(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = Tables(spark, dir, "documents")
     val q = quality(spark, dir).filter(col("quality") === 1).select("doc_id")
     // dedup key = the normalized fingerprint (sorted distinct tokens, the
@@ -1575,7 +1539,6 @@ object TextAnalysis {
     * per-doc aggregate — linear at any corpus size. */
   def dsirScores(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    Engine.tune(spark)
     val tok = withSplit(Tables(spark, dir, "documents"))
       .select(col("doc_id"), col("split"),
         explode(split(col("text"), " ")).as("token"))
@@ -1619,7 +1582,6 @@ object TextAnalysis {
   def lenHistogram(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    Engine.tune(spark)
     val hist = Tables(spark, dir, "documents")
       .select(least(lit(LenHistBuckets - 1L),
         expr(s"length(text) div $LenHistWidth")).as("b"))
@@ -1660,7 +1622,6 @@ object TextAnalysis {
     * dropped rest on mean quantized importance. */
   def dsirResample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    Engine.tune(spark)
     val meta = withSplit(Tables(spark, dir, "documents"))
       .select(col("doc_id"), col("source"), col("split"))
     val scored = dsirScores(spark, dir).join(meta, Seq("doc_id"))
@@ -1719,7 +1680,6 @@ object TextAnalysis {
       .limit(DupSpanTopK)
 
   def dupSpans(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     dupSpansFrom(Tables(spark, dir, "documents"))
   }
 
@@ -1759,7 +1719,6 @@ object TextAnalysis {
     * 100 TB both sides shuffle once on the line hash; keep-first is an
     * argmin, not a window sort. */
   def lineDedup(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val lines = lineStream(Tables(spark, dir, "documents"))
     val key = col("doc_id") * LineKeyStride + col("line_idx")
     val keeper = lines.groupBy("line_md5").agg(min(key).as("keep_key"))
@@ -1801,7 +1760,6 @@ object TextAnalysis {
   }
 
   def dupCoverage(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     dupCoverageFrom(Tables(spark, dir, "documents"))
   }
 
@@ -1814,7 +1772,6 @@ object TextAnalysis {
     * rounded to 6 decimals to absorb the oracle engine's own summation
     * order. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val ent = org.apache.spark.sql.GraftBridge.column(
       graft.functions.CharEntropyExpr(
         org.apache.spark.sql.GraftBridge.expression(col("text"))))
@@ -1920,7 +1877,6 @@ object TextAnalysis {
     * watches. All counts exact integers — engine-identical. At 100 TB
     * the train pass runs on a sample; the plan shape is unchanged. */
   def langIdChargram(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val docs = withSplit(Tables(spark, dir, "documents"))
       .select(col("doc_id"), col("lang"), col("split"),
         explode(expr(
@@ -1959,7 +1915,6 @@ object TextAnalysis {
     * summary; the pair frames are the operator's intermediates. All
     * counts and gaps exact integers. */
   def trainingPairs(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"),
@@ -1992,7 +1947,6 @@ object TextAnalysis {
     * over the |docs| frame (the Moments-aggregate discipline); the
     * pairwise table is a 3×3 self-join of the 3-row aggregate. */
   def splitDrift(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     val s = withSplit(Tables(spark, dir, "documents"))
       .groupBy("split")
       .agg(count(lit(1)).as("n"),
@@ -2022,7 +1976,6 @@ object TextAnalysis {
     * window finishes the curve. The corpus size joins as a 1-row
     * broadcast to form the decile key. */
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val nd = Tables(spark, dir, "documents").agg(count(lit(1)).as("n_docs"))
     val toks = tokens(spark, dir)

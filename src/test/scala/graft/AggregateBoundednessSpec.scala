@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Static guard behind `Engine.tune`'s raised ObjectHashAggregate
   * sort-fallback threshold (512k live groups per task, Engine.scala —
@@ -20,23 +18,9 @@ import scala.jdk.CollectionConverters._
   */
 class AggregateBoundednessSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[Path] = {
-    val root = Paths.get("src/main/scala")
-    val s = Files.walk(root)
-    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally s.close()
-  }
-
-  private def stripComments(src: String): String =
-    src.replaceAll("(?s)/\\*.*?\\*/", "")
-      .linesIterator.map { l =>
-        val i = l.indexOf("//")
-        if (i >= 0) l.substring(0, i) else l
-      }.mkString("\n")
-
   test("no unbounded-buffer aggregate (collect_list/collect_set) in main source") {
-    val offenders = mainSources.flatMap { p =>
-      val body = stripComments(Files.readString(p))
+    val offenders = MainSources.files.flatMap { p =>
+      val body = MainSources.code(p)
       if (body.contains("collect_list") || body.contains("collect_set"))
         Some(p.toString)
       else None
@@ -52,8 +36,8 @@ class AggregateBoundednessSpec extends AnyFunSuite {
 
   test("every TypedImperativeAggregate in main source is a known bounded one") {
     val bounded = Set("BottomK.scala", "TopKValues.scala")
-    val offenders = mainSources.flatMap { p =>
-      val body = stripComments(Files.readString(p))
+    val offenders = MainSources.files.flatMap { p =>
+      val body = MainSources.code(p)
       if (body.contains("extends TypedImperativeAggregate") &&
         !bounded.contains(p.getFileName.toString))
         Some(p.toString)

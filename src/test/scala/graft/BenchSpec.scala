@@ -21,8 +21,8 @@ class BenchSpec extends AnyFunSuite {
 
   test("loadPriors parses a compact detail file at the same sf") {
     withDetailFile(
-      """{"metric":"total","value":2.0,"queries":{"q_a":1.25,"q_b":0.75},"sf":"/root/testdata/sf0.1","runs":2}""") { p =>
-      val priors = Bench.loadPriors("/root/testdata/sf0.1", p)
+      """{"metric":"total","value":2.0,"queries":{"q_a":1.25,"q_b":0.75},"sf":"/data/sf0.1","runs":2}""") { p =>
+      val priors = Bench.loadPriors("/data/sf0.1", p).times
       assert(priors == Map("q_a" -> 1.25, "q_b" -> 0.75))
     }
   }
@@ -36,38 +36,38 @@ class BenchSpec extends AnyFunSuite {
          |    "q_a": 1.25,
          |    "q_b": 0.75
          |  },
-         |  "sf": "/root/testdata/sf0.1",
+         |  "sf": "/data/sf0.1",
          |  "runs": 2
          |}""".stripMargin) { p =>
-      val priors = Bench.loadPriors("/root/testdata/sf0.1", p)
+      val priors = Bench.loadPriors("/data/sf0.1", p).times
       assert(priors == Map("q_a" -> 1.25, "q_b" -> 0.75))
     }
   }
 
   test("loadPriors normalizes sf paths before comparing") {
     withDetailFile(
-      """{"queries":{"q_a":1.0},"sf":"/root/testdata/sf0.1/"}""") { p =>
-      assert(Bench.loadPriors("/root/testdata/sf0.1", p) == Map("q_a" -> 1.0))
-      assert(Bench.loadPriors("/root/testdata/./sf0.1", p) == Map("q_a" -> 1.0))
+      """{"queries":{"q_a":1.0},"sf":"/data/sf0.1/"}""") { p =>
+      assert(Bench.loadPriors("/data/sf0.1", p).times == Map("q_a" -> 1.0))
+      assert(Bench.loadPriors("/data/./sf0.1", p).times == Map("q_a" -> 1.0))
     }
   }
 
   test("loadPriors drops queries that failed in the prior run") {
     // a failed query's recorded time is a fail-fast stand-in, not a prior
     withDetailFile(
-      """{"queries":{"q_ok":2.0,"q_broken":0.011},"failed":["q_broken"],"sf":"/root/testdata/sf0.1"}""") { p =>
-      assert(Bench.loadPriors("/root/testdata/sf0.1", p) == Map("q_ok" -> 2.0))
+      """{"queries":{"q_ok":2.0,"q_broken":0.011},"failed":["q_broken"],"sf":"/data/sf0.1"}""") { p =>
+      assert(Bench.loadPriors("/data/sf0.1", p).times == Map("q_ok" -> 2.0))
     }
   }
 
   test("loadPriors rejects a different-sf record and survives garbage") {
-    withDetailFile("""{"queries":{"q_a":1.0},"sf":"/root/testdata/sf0.001"}""") { p =>
-      assert(Bench.loadPriors("/root/testdata/sf0.1", p).isEmpty)
+    withDetailFile("""{"queries":{"q_a":1.0},"sf":"/data/sf0.001"}""") { p =>
+      assert(Bench.loadPriors("/data/sf0.1", p).times.isEmpty)
     }
     withDetailFile("""not json at all""") { p =>
-      assert(Bench.loadPriors("/root/testdata/sf0.1", p).isEmpty)
+      assert(Bench.loadPriors("/data/sf0.1", p).times.isEmpty)
     }
-    assert(Bench.loadPriors("/root/testdata/sf0.1", "/nonexistent/x.json").isEmpty)
+    assert(Bench.loadPriors("/data/sf0.1", "/nonexistent/x.json").times.isEmpty)
   }
 
   test("measureOne retries a run >3x over its prior and keeps the better min") {
@@ -207,24 +207,24 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.ioDrift(a.copy(input = 300L << 20), a), "input drift counts")
   }
 
-  test("loadBytesPriors parses queries_bytes at the same sf, rejects others") {
+  test("loadPriors parses queries_bytes at the same sf, rejects others") {
     withDetailFile(
       """{"queries":{"q_a":1.0},"queries_bytes":{"q_a":{"shuffle":100,"spill":0,"input":200}},""" +
-        """"sf":"/root/testdata/sf0.1"}""") { p =>
+        """"sf":"/data/sf0.1"}""") { p =>
       // a pre-r16 entry with no cpu_ms parses it as -1 (ABSENT), never 0
-      assert(Bench.loadBytesPriors("/root/testdata/sf0.1", p) ==
+      assert(Bench.loadPriors("/data/sf0.1", p).bytes ==
         Map("q_a" -> IoBytes(100L, 0L, 200L, -1L)))
-      assert(Bench.loadBytesPriors("/root/testdata/sf0.01", p).isEmpty)
+      assert(Bench.loadPriors("/data/sf0.01", p).bytes.isEmpty)
     }
     // pre-round-15 detail files have no queries_bytes → empty, never throws
-    withDetailFile("""{"queries":{"q_a":1.0},"sf":"/root/testdata/sf0.1"}""") { p =>
-      assert(Bench.loadBytesPriors("/root/testdata/sf0.1", p).isEmpty)
+    withDetailFile("""{"queries":{"q_a":1.0},"sf":"/data/sf0.1"}""") { p =>
+      assert(Bench.loadPriors("/data/sf0.1", p).bytes.isEmpty)
     }
     // round 16: cpu_ms rides each entry
     withDetailFile(
       """{"queries":{"q_a":1.0},"queries_bytes":{"q_a":{"shuffle":100,"spill":0,"input":200,"cpu_ms":4500}},""" +
-        """"sf":"/root/testdata/sf0.1"}""") { p =>
-      assert(Bench.loadBytesPriors("/root/testdata/sf0.1", p) ==
+        """"sf":"/data/sf0.1"}""") { p =>
+      assert(Bench.loadPriors("/data/sf0.1", p).bytes ==
         Map("q_a" -> IoBytes(100L, 0L, 200L, 4500L)))
     }
   }

@@ -150,4 +150,22 @@ class OracleLintSpec extends AnyFunSuite {
         "add the query to auditedBareSums:\n  " + violations.mkString("\n  ")
     )
   }
+
+  test("every oracle NDJSON scan keeps sparse fields typed") {
+    // DuckDB collapses a field seen on under 10 % of sampled rows to JSON
+    // (field_appearance_threshold), and a lambda over a JSON column fails
+    // to bind — q6's `includes.places` at real geo coverage
+    val scanRe = "(?i)read_json_auto\\s*\\(".r
+    val violations = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+      case (name, sql) =>
+        scanRe.findAllMatchIn(sql).flatMap { m =>
+          val args = balancedArg(sql, sql.indexOf('(', m.start))
+          if (args.replaceAll("\\s+", "").contains("field_appearance_threshold=0")) None
+          else Some(s"$name: read_json_auto(${args.take(60)}...)")
+        }
+    }
+    assert(violations.isEmpty,
+      "read_json_auto without field_appearance_threshold=0:\n  " +
+        violations.mkString("\n  "))
+  }
 }

@@ -5,27 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one forked test JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // "local[4, 2]": 4 threads, maxFailures=2 — ChaosSpec injects a
-      // task failure and asserts the retried job's result is identical;
-      // deterministic failures still fail (both attempts throw). Known
-      // trade: one silent retry can mask an INTERMITTENT task-level race
-      // in any suite — accepted deliberately, because every real cluster
-      // runs maxFailures=4, so retry-tolerance is the contract the code
-      // must satisfy anyway (a test that only passes at maxFailures=1 is
-      // asserting flakiness, not correctness)
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.TempDirs.create("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession =
+    // "local[4, 2]": 4 threads, maxFailures=2 — ChaosSpec injects a
+    // task failure and asserts the retried job's result is identical;
+    // deterministic failures still fail (both attempts throw). Known
+    // trade: one silent retry can mask an INTERMITTENT task-level race
+    // in any suite — accepted deliberately, because every real cluster
+    // runs maxFailures=4, so retry-tolerance is the contract the code
+    // must satisfy anyway (a test that only passes at maxFailures=1 is
+    // asserting flakiness, not correctness)
+    Sessions.local("local[4, 2]",
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" -> graft.TempDirs.create("graft-warehouse").toString)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

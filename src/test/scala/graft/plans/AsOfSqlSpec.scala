@@ -12,7 +12,7 @@ class AsOfSqlSpec extends AnyFunSuite {
   // the ONE extensions-enabled session the library itself memoizes (the
   // registered ev_asof_sql path) - no second copy of the registry swap
   private lazy val s: SparkSession =
-    graft.queries.EventQueries.extensionSession(graft.TestSpark.spark)
+    graft.Sessions.withExtensions(graft.TestSpark.spark)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MaintenanceSqlSpec extends AnyFunSuite {
 
   private lazy val s: SparkSession =
-    graft.queries.EventQueries.extensionSession(graft.TestSpark.spark)
+    graft.Sessions.withExtensions(graft.TestSpark.spark)
 
   private def freshCatalog(): String = {
     val cat = s"moptspec${System.nanoTime() % 100000}"

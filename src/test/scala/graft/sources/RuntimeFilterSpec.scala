@@ -28,8 +28,7 @@ class RuntimeFilterSpec extends SparkSpec {
     assert(defaultRows.map(_._1) == Seq("1-URGENT", "2-HIGH"))
 
     // build the SAME DataFrame, then flip to cluster posture BEFORE the
-    // first action (optimization reads conf at action time; the query
-    // function's Engine.tune must run before the flip or it would undo it)
+    // first action (optimization reads conf at action time)
     val df = Formats.runtimeFilterJoin(spark, sf)
     val conf = spark.conf
     val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
