@@ -54,5 +54,10 @@ object Engine {
     // unbounded aggregate cannot silently ride this setting later.
     set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       (512 * 1024).toString)
+    // events.ts of the pre-r8 fixtures is parquet TIMESTAMP(NANOS), which
+    // Spark reads only as a raw long (Tables.normalizeEvents truncates it
+    // to micros); later fixtures carry timestamp[us], which this leaves
+    // alone. Set once here, so no query flips it on the caller's session.
+    set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 }

@@ -28,13 +28,12 @@ object PlanSnapshot {
   /** Queries whose builder EXECUTES a stream and returns a sink scan: the
     * returned DataFrame's digest carries none of the stream's operators,
     * so the ledger digests the last micro-batch's EXECUTED plan instead
-    * (captured by [[graft.streaming.StreamingOps]] at drain time) — the
+    * (the `plan` of [[graft.streaming.StreamingOps.lastRun]]) — the
     * state-operator placement is exactly the scale-relevant structure
     * (round 14, VERDICT r13 #2). A foreachBatch sink contributes only its
     * source scan to that plan — its merge/commit work runs as separate
     * batch jobs — so builders doing real plan-shaped work per batch also
-    * record the last batch frame's plan
-    * ([[graft.streaming.StreamingOps.lastForeachBatchPlan]], round 15,
+    * record the last batch frame's plan (the run's `batchPlan`, round 15,
     * ADVICE r14 #3) and both are digested together. */
   def streaming(name: String): Boolean =
     name.startsWith("stream_") || name.startsWith("tw_q2_stream")
@@ -50,14 +49,13 @@ object PlanSnapshot {
     graft.similarity.IndexStore.nonPublishing {
       SparkEntry.queries.keys.toSeq.sorted.map { name =>
         if (streaming(name)) {
-          graft.streaming.StreamingOps.lastExecutedPlan = ""
-          graft.streaming.StreamingOps.lastForeachBatchPlan = ""
+          val before = graft.streaming.StreamingOps.lastRun
           SparkEntry.queries(name)(spark, PinnedSf) // runs the stream(s)
-          val plan = graft.streaming.StreamingOps.lastExecutedPlan
-          require(plan.nonEmpty, s"$name executed no capturable micro-batch plan")
-          val batchPlan = graft.streaming.StreamingOps.lastForeachBatchPlan
+          val run = graft.streaming.StreamingOps.lastRun
+          require((run ne before) && run.plan.nonEmpty,
+            s"$name executed no capturable micro-batch plan")
           name -> PlanDigest.ofPlanString(
-            if (batchPlan.isEmpty) plan else plan + "\n" + batchPlan)
+            if (run.batchPlan.isEmpty) run.plan else run.plan + "\n" + run.batchPlan)
         } else
           name -> PlanDigest.of(SparkEntry.queries(name)(spark, PinnedSf))
       }

@@ -11,7 +11,7 @@ package graft
   *  - CORRECTNESS: exactly 4·(H−1) emitted window rows, every one with
   *    cnt = 900 and sum_val = 900.0 (the planted census);
   *  - BOUNDED STATE: the final progress entry's total state rows
-  *    ([[graft.streaming.StreamingOps.lastStateRows]]) must NOT grow
+  *    (`stateRows` of [[graft.streaming.StreamingOps.lastRun]]) must NOT grow
   *    with the input — it is the open-window set (≤ 2 hours × 4 types
   *    plus watermark bookkeeping), the property that makes a 100 TB
   *    stream runnable at all. The soak REQUIRES state ≤ [[StateCap]]
@@ -44,7 +44,7 @@ object SoakStream {
         val t0 = System.nanoTime()
         val rows = graft.streaming.StreamingOps.hourlyAppend(spark, dir).collect()
         val sec = (System.nanoTime() - t0) / 1e9
-        (sec, rows.length.toLong, graft.streaming.StreamingOps.lastStateRows)
+        (sec, rows.length.toLong, graft.streaming.StreamingOps.lastRun.stateRows)
       }
 
       // gate run: closed-form census + bounded state, BEFORE timing counts
@@ -55,7 +55,7 @@ object SoakStream {
         require(r.getAs[Long]("cnt") == 900L && r.getAs[Double]("sum_val") == 900.0,
           s"n=$n planted census violated: $r")
       }
-      val stateRows = graft.streaming.StreamingOps.lastStateRows
+      val stateRows = graft.streaming.StreamingOps.lastRun.stateRows
       require(stateRows >= 0 && stateRows <= StateCap,
         s"n=$n end-state rows $stateRows exceed the bounded-state cap $StateCap " +
           "(closed windows are not being evicted)")

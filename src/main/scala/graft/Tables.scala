@@ -15,7 +15,8 @@ object Tables {
 
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark 4
     * rejects outright — PARQUET_TYPE_ILLEGAL — so we read nanos as raw long
-    * via the legacy conf and truncate to micros) and, since the fixtures
+    * via the legacy conf [[Engine.tune]] sets and truncate to micros) and,
+    * since the fixtures
     * were regenerated, as timestamp[us] with no timezone annotation, which
     * Spark reads as TIMESTAMP_NTZ. Event-time operators (unix_micros,
     * window, watermark) want TIMESTAMP_LTZ; with the session timezone
@@ -29,9 +30,6 @@ object Tables {
       case _                => df
     }
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeEvents(spark.read.parquet(s"$dir/$name.parquet"))
-  }
 }

@@ -62,7 +62,7 @@ object PlanDigest {
 
   /** Digest of a raw executed-plan string — the streaming path, where the
     * plan is captured from the micro-batch execution rather than a
-    * DataFrame ([[graft.streaming.StreamingOps.lastExecutedPlan]]). */
+    * DataFrame (the `plan` of [[graft.streaming.StreamingOps.lastRun]]). */
   def ofPlanString(plan: String): String =
     counts(plan).toSeq.sorted.map { case (k, n) => s"$k=$n" }.mkString(" ")
 

@@ -3,11 +3,13 @@ package graft.streaming
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 import java.util.UUID
+import java.util.concurrent.atomic.AtomicReference
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryProgress, Trigger}
 import graft.Tables
 
 /** Output row of the stateful session summary (update-mode sink schema). */
@@ -185,10 +187,8 @@ object StreamingOps {
     * exercises distributed state and won the round-9 sweep over 8 and 16
     * in BOTH run orders (~10% family total, BENCH_NOTES); a production
     * job sizes this to cluster width × keys-per-partition, not to the
-    * session default. Env-overridable for measurement sweeps (never set
-    * by the driver). */
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
+    * session default. */
+  private val StreamShufflePartitions = "4"
 
   /** Default state store provider for the family. The fixture-scale state
     * is tiny (hundreds of keys), where provider fixed costs — native DB
@@ -198,8 +198,7 @@ object StreamingOps {
     * REQUIRE RocksDB (`transformWithState`) pin it explicitly, and a
     * production job with state past executor memory picks RocksDB via
     * the same parameter. */
-  private val DefaultRocksDb =
-    sys.env.get("SPARK_GRAFT_STREAM_PROVIDER").contains("rocksdb")
+  private val DefaultRocksDb = false
 
   /** Streaming checkpoint root on tmpfs when the platform has one. Every
     * trigger fsyncs the offset/commit logs and uploads per-partition
@@ -233,80 +232,170 @@ object StreamingOps {
     ckptRoot.map(r => "checkpointLocation" ->
       Files.createTempDirectory(r, "q").toString).toMap
 
-  /** Executed physical plan of the LAST micro-batch drained through this
-    * module — the streaming half of the plan ledger (round 14, VERDICT
-    * r13 #2). Batch digests can't see a streaming query's state-operator
-    * placement (StateStoreSave vs session-window stores vs stream-join
-    * state) — exactly the structure that determines state size and
-    * per-trigger cost at scale — so [[graft.PlanSnapshot]] reads this
-    * after executing each registered streaming query. Introspection uses
-    * the runtime's own classes and is best-effort: a failure leaves ""
-    * rather than failing the query. */
-  @volatile private[graft] var lastExecutedPlan: String = ""
-
-  /** The last foreachBatch BODY plan (round 15, ADVICE r14 #3): a
-    * foreachBatch sink's merge/commit work runs as separate batch jobs
-    * the captured micro-batch plan never sees — for `stream_merge_upsert`
-    * the micro-batch plan is just the source FileScan, while the actual
-    * scale structure (the per-batch rank pushdown Window, the
-    * target⋈batch full-outer join) lives here. Builders whose foreachBatch
-    * does real plan-shaped work record the batch frame's plan into this
-    * var (last batch wins); [[graft.PlanSnapshot]] digests it together
-    * with the micro-batch plan. */
-  @volatile private[graft] var lastForeachBatchPlan: String = ""
-
-  /** Observed-metrics record of one drained streaming run (round 16,
-    * VERDICT r15 #7 — the streaming face of `Dataset.observe`):
-    *  - `sums`: for each named observe node, every numeric metric column
-    *    summed across the run's micro-batches (each
-    *    `StreamingQueryProgress.observedMetrics` row covers one batch's
-    *    rows). Per-run and at-least-once under batch REPLAY like
-    *    foreachBatch itself — exact on a clean drain, which is what the
-    *    multi-trigger contract already certifies.
+  /** The record of one drained streaming run, returned by [[drain]] and
+    * kept as this thread's [[lastRun]].
+    *  - `plan`: the last micro-batch's EXECUTED plan — the streaming half
+    *    of the plan ledger (round 14, VERDICT r13 #2). Batch digests
+    *    can't see a streaming query's state-operator placement
+    *    (StateStoreSave vs session-window stores vs stream-join state),
+    *    so [[graft.PlanSnapshot]] digests this. Best-effort: "" when the
+    *    runtime exposes no execution.
+    *  - `batchPlan`: the last foreachBatch BODY plan (round 15, ADVICE
+    *    r14 #3) for sinks whose merge/commit work runs as separate batch
+    *    jobs the micro-batch plan never sees (the per-batch rank Window
+    *    and target⋈batch join of `stream_merge_upsert`); "" otherwise.
+    *  - `observedSums`: for each named observe node, every numeric metric
+    *    column summed across the run's micro-batches — the streaming face
+    *    of `Dataset.observe` (round 16, VERDICT r15 #7). At-least-once
+    *    under batch REPLAY like foreachBatch itself, exact on a clean
+    *    drain.
     *  - `complete`: false when the run produced at least as many progress
     *    entries as `spark.sql.streaming.numRecentProgressUpdates` retains
-    *    — earlier batches may have been EVICTED from `recentProgress`, so
-    *    `sums` could undercount. A consumer that derives result rows from
-    *    the sums must refuse them in that state.
-    *  - `stateRows`: total state-store rows at the END of the run (summed
-    *    over the final progress entry's state operators; -1 when the run
-    *    had no progress). THE bounded-state scale signal: for a
-    *    watermarked append aggregate this is the open-window set — it
-    *    must stay flat while the input grows, and [[graft.SoakStream]]
-    *    records it next to wall time at 1×/3×/10× input. */
-  private[graft] final case class ObservedRun(
-      sums: Map[String, Map[String, Long]],
+    *    — earlier batches may have been EVICTED, so `observedSums` and
+    *    `inputRows` could undercount; a consumer deriving result rows from
+    *    them must refuse them in that state.
+    *  - `stateRows`: total state-store rows at the END of the run (-1
+    *    without progress) — THE bounded-state scale signal
+    *    [[graft.SoakStream]] records at 1×/3×/10× input.
+    *  - `dataBatches`: micro-batches that carried input rows.
+    *  - `inputRows`: input rows summed over the run's micro-batches.
+    *  - `selfTerminated`: an AvailableNow run ended itself. */
+  private[graft] final case class StreamRun(
+      plan: String,
+      batchPlan: String,
+      observedSums: Map[String, Map[String, Long]],
       complete: Boolean,
-      stateRows: Long)
+      stateRows: Long,
+      dataBatches: Int,
+      inputRows: Long,
+      selfTerminated: Boolean)
 
   /** PER-THREAD record of the last drained run (round 17, ADVICE r16: a
-    * process-global @volatile let two streaming queries drained from
-    * different threads — a SoakStream next to a spec suite — clobber each
-    * other's metrics). The builder that starts a run and the consumer
-    * that reads its record execute on the same thread, exactly like the
-    * result DataFrame that is threaded back as the return value, so
-    * thread scope IS run scope for every drain in this module. */
-  private val observedRun = new ThreadLocal[ObservedRun] {
-    override def initialValue(): ObservedRun = ObservedRun(Map.empty, true, -1L)
+    * process-global record let two streaming queries drained from
+    * different threads clobber each other). The builder that drains a
+    * run and the consumer that reads its record execute on the same
+    * thread, exactly like the result DataFrame threaded back as the
+    * return value, so thread scope IS run scope for every drain. */
+  private val runs = new ThreadLocal[StreamRun] {
+    override def initialValue(): StreamRun =
+      StreamRun("", "", Map.empty, true, -1L, 0, 0L, false)
   }
 
-  private[graft] def lastObservedSums: Map[String, Map[String, Long]] =
-    observedRun.get().sums
-  private[graft] def lastObservedComplete: Boolean = observedRun.get().complete
-  private[graft] def lastStateRows: Long = observedRun.get().stateRows
+  private[graft] def lastRun: StreamRun = runs.get()
 
-  /** Record `q`'s summed per-batch observed metrics and final state size
-    * into this THREAD's [[ObservedRun]]. */
-  private def recordObserved(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val stateRows = Option(q.lastProgress)
-      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    import scala.jdk.CollectionConverters._
+  /** Guards the session conf across a stream's start (see [[drain]]). */
+  private val startLock = new Object
+
+  /** Per-query state confs: shuffle (= state) partitions, the state store
+    * provider (None unsets to Spark's HDFS-backed default), and RocksDB
+    * CHANGELOG checkpointing (round 15, VERDICT r14 #4: each commit
+    * uploads the delta since the last one instead of a full SST snapshot
+    * — at 100 TB state, shipping what changed instead of the store). */
+  private def stateConfs(parts: String, rocksDb: Boolean = DefaultRocksDb,
+      changelog: Boolean = false): Map[String, Option[String]] =
+    Map("spark.sql.shuffle.partitions" -> Some(parts),
+      "spark.sql.streaming.stateStore.providerClass" -> Option.when(rocksDb)(
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) ++
+      (if (changelog) Map("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled" -> Some("true")) else Map.empty)
+
+  /** Record the plan `df` executes into a foreachBatch run's holder —
+    * called on the stream's own thread, folded into the run's
+    * [[StreamRun]] by [[drain]]. */
+  private def recordPlan(holder: AtomicReference[String], df: DataFrame): Unit =
+    try holder.set(df.queryExecution.executedPlan.toString)
+    catch { case scala.util.control.NonFatal(_) => () }
+
+  /** How every stream in this module starts, drains and is recorded.
+    *
+    * START: `confs` (Some sets, None unsets) hold only across `start()`,
+    * on the caller's session, under [[startLock]]. `StreamExecution`
+    * clones the session in its constructor, so the stream's partitions
+    * and state store are fixed when `start()` returns; restoring right
+    * after leaves the caller's session as it was, and two threads
+    * starting streams on one session cannot see each other's confs (a
+    * batch job planned on another thread inside that window can; the
+    * registered results declare their order, so only its partition
+    * count moves).
+    * Streams are NOT started in a child session: the listener bus reports
+    * progress only for streams started through the session's own
+    * manager, so a child session would hide them from the caller's
+    * listeners. `table` starts the writer with `toTable` instead.
+    *
+    * DRAIN (outside the lock): the default trigger runs until
+    * `processAllAvailable` returns, then the query is stopped;
+    * `availableNow` runs under `Trigger.AvailableNow()` (round 16,
+    * VERDICT r15 #1) — the query drains the source's backlog snapshot
+    * across bounded micro-batches and STOPS ITSELF, the production
+    * backfill/catch-up contract (the 300 s bound is a harness safety net,
+    * only a hang hits it). The executed plan is captured before the stop
+    * while the execution is still current.
+    *
+    * RECORD: the [[StreamRun]] becomes this thread's [[lastRun]], then
+    * the multi-trigger contract is checked: at least `minDataBatches`
+    * micro-batches must carry input, so a registered query proves its
+    * execution spanned triggers (cross-batch state). `what` names the
+    * query in that failure. */
+  private[graft] def drain(spark: SparkSession, writer: DataStreamWriter[Row],
+      confs: Map[String, Option[String]], minDataBatches: Int, what: String,
+      availableNow: Boolean = false, table: Option[String] = None,
+      batchPlan: AtomicReference[String] = new AtomicReference("")): StreamRun = {
+    val w = if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer
+    val q = startLock.synchronized {
+      // getAll holds only the explicitly set keys: getOption would read a
+      // default back and restore it as an explicit setting
+      val set = spark.conf.getAll
+      val saved = confs.keys.map(k => k -> set.get(k)).toMap
+      def put(c: Map[String, Option[String]]): Unit = c.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      put(confs)
+      try table.fold(w.start())(w.toTable) finally put(saved)
+    }
+    val (plan, selfTerminated) =
+      try {
+        val ended = availableNow && q.awaitTermination(300000L)
+        if (availableNow && !ended) throw new IllegalStateException(
+          s"$what: AvailableNow query did not self-terminate within 300 s")
+        if (!availableNow) q.processAllAvailable()
+        (executedPlan(q), ended)
+      } finally q.stop()
+    val progress = q.recentProgress.toSeq
     val retained = scala.util.Try(q.sparkSession.conf
       .get("spark.sql.streaming.numRecentProgressUpdates").toInt).getOrElse(100)
-    val complete = q.recentProgress.length < retained
-    val sums = q.recentProgress.toSeq
-      .flatMap(_.observedMetrics.asScala.toSeq)
+    val run = StreamRun(plan, batchPlan.get, observedSums(progress),
+      complete = progress.length < retained,
+      stateRows = Option(q.lastProgress)
+        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L),
+      dataBatches = progress.count(_.numInputRows > 0),
+      inputRows = progress.map(_.numInputRows).sum,
+      selfTerminated = selfTerminated)
+    runs.set(run)
+    if (run.dataBatches < minDataBatches) throw new IllegalStateException(
+      s"$what ran ${run.dataBatches} data-carrying micro-batches, " +
+        s"expected >= $minDataBatches (multi-trigger contract)")
+    run
+  }
+
+  /** `q`'s last executed micro-batch plan, "" when none is exposed. */
+  private def executedPlan(q: StreamingQuery): String =
+    try {
+      import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
+      val exec = q match {
+        case w: StreamingQueryWrapper => Some(w.streamingQuery)
+        case s: StreamExecution => Some(s)
+        case _ => None
+      }
+      exec.flatMap(se => Option(se.lastExecution))
+        .map(_.executedPlan.toString).getOrElse("")
+    } catch { case scala.util.control.NonFatal(_) => "" }
+
+  /** Per observe node, each numeric metric summed over the batches. */
+  private def observedSums(progress: Seq[StreamingQueryProgress])
+      : Map[String, Map[String, Long]] = {
+    import scala.jdk.CollectionConverters._
+    progress.flatMap(_.observedMetrics.asScala.toSeq)
       .groupBy(_._1)
       .map { case (name, batches) =>
         name -> batches.flatMap { case (_, row) =>
@@ -318,81 +407,6 @@ object StreamingOps {
           }
         }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
       }
-    observedRun.set(ObservedRun(sums, complete, stateRows))
-  }
-
-  /** Capture `q`'s last executed micro-batch plan into the ledger var —
-    * must run while the execution is still current (before/at stop). */
-  private def capturePlan(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try {
-      import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
-      val exec = q match {
-        case w: StreamingQueryWrapper => Some(w.streamingQuery)
-        case s: StreamExecution => Some(s)
-        case _ => None
-      }
-      exec.flatMap(se => Option(se.lastExecution))
-        .foreach(e => lastExecutedPlan = e.executedPlan.toString)
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Drain `q` to completion, capture its final executed plan for the
-    * ledger, then stop it — the way every DEFAULT-trigger stream in this
-    * module ends (capture sits BEFORE stop so the execution is still
-    * current). AvailableNow streams end themselves instead
-    * ([[awaitSelfTermination]]). */
-  private def drainAndStop(q: org.apache.spark.sql.streaming.StreamingQuery,
-      capture: Boolean = true): Unit =
-    try {
-      q.processAllAvailable()
-      if (capture) capturePlan(q)
-      profileProgress(q)
-    } finally q.stop()
-
-  /** Opt-in per-trigger cost breakdown (GRAFT_STREAM_PROF=1): one stderr
-    * line per micro-batch with the planner/state/sink durations from
-    * StreamingQueryProgress — the measurement layer for "is this query
-    * per-batch-fixed-cost bound or per-row bound". Never on in bench or
-    * driver runs (env unset). */
-  private def profileProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("GRAFT_STREAM_PROF"))
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        System.err.println(s"[stream-prof] ${q.name} batch=${p.batchId} " +
-          s"rows=${p.numInputRows} total=${d.get("triggerExecution")}ms " +
-          s"addBatch=${d.getOrDefault("addBatch", -1L)} " +
-          s"getBatch=${d.getOrDefault("getBatch", -1L)} " +
-          s"latestOffset=${d.getOrDefault("latestOffset", -1L)} " +
-          s"queryPlanning=${d.getOrDefault("queryPlanning", -1L)} " +
-          s"commitOffsets=${d.getOrDefault("commitOffsets", -1L)} " +
-          s"walCommit=${d.getOrDefault("walCommit", -1L)} " +
-          s"stateRows=${Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L)}")
-      }
-
-  /** Did the last [[runToMemory]] AvailableNow query terminate ITSELF
-    * (awaitTermination returned, no drainAndStop) — pinned by the spec. */
-  @volatile private[graft] var lastAvailableNowSelfTerminated = false
-
-  /** Data-carrying micro-batches of the last AvailableNow run. */
-  @volatile private[graft] var lastAvailableNowDataBatches = 0
-
-  /** Wait for an AvailableNow query to DRAIN ITSELF: the trigger admits
-    * the backlog snapshot across bounded micro-batches (the source's own
-    * read limits apply — maxFilesPerTrigger, rowsPerBatch) and then
-    * STOPS the query from inside, which is the production
-    * backfill/catch-up contract: bounded resources, clean termination,
-    * no external drain loop. The bounded await is a harness safety net —
-    * a healthy run terminates in seconds; only a hang hits it. */
-  private def awaitSelfTermination(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val terminated = q.awaitTermination(300000L)
-    lastAvailableNowSelfTerminated = terminated
-    capturePlan(q)
-    if (!terminated) {
-      q.stop()
-      throw new IllegalStateException(
-        "AvailableNow query did not self-terminate within 300 s")
-    }
-    lastAvailableNowDataBatches = q.recentProgress.count(_.numInputRows > 0)
   }
 
   /** Hard cap on rows a memory sink may hand the driver. The memory sink
@@ -407,9 +421,9 @@ object StreamingOps {
     * invocations in one session (Bench/Explain/Verify loops) must not
     * accumulate orphaned in-memory tables.
     *
-    * State tuning is scoped to the query: shuffle partitions are lowered
-    * for the stateful exchange (restored after), and the state store
-    * provider is per-query selectable with the measured family default
+    * State tuning is scoped to the query ([[drain]]): shuffle partitions
+    * are lowered for the stateful exchange, and the state store provider
+    * is per-query selectable with the measured family default
     * ([[DefaultRocksDb]]); `transformWithState` pins RocksDB, which is
     * the only provider it supports.
     *
@@ -417,76 +431,27 @@ object StreamingOps {
     *        carried input rows — lets a registered query *prove* its
     *        execution spanned multiple triggers (cross-batch state).
     * @param maxRows fail loudly if the sink result exceeds this.
-    * @param availableNow run under `Trigger.AvailableNow()` (round 16,
-    *        VERDICT r15 #1): the query drains the source's CURRENT
-    *        backlog across bounded micro-batches and terminates ITSELF —
-    *        the production backfill/catch-up run-mode, taking the
-    *        admission path through the source's offset snapshot instead
-    *        of the default as-fast-as-possible trigger + external
-    *        drainAndStop. */
+    * @param availableNow run under `Trigger.AvailableNow()` ([[drain]]). */
   def runToMemory(spark: SparkSession, streamed: DataFrame,
       mode: String = "complete", minDataBatches: Int = 0,
       maxRows: Long = MaxSinkRows,
       stateParts: String = StreamShufflePartitions,
       rocksDb: Boolean = DefaultRocksDb,
       changelog: Boolean = false,
-      availableNow: Boolean = false,
-      capturePlanLedger: Boolean = true): DataFrame = {
+      availableNow: Boolean = false): DataFrame = {
     val name = "graft_mem_" + UUID.randomUUID().toString.replace("-", "")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    // RocksDB CHANGELOG checkpointing (round 15, VERDICT r14 #4): each
-    // commit uploads the delta since the last commit instead of a full
-    // SST snapshot (snapshots move to a background cadence) — at 100 TB
-    // state this is the difference between shipping the whole store per
-    // trigger and shipping what changed. Scoped per query like the
-    // provider, restored after.
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = spark.conf.getOption(changelogKey)
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    if (rocksDb) spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else spark.conf.unset(providerKey)
-    if (changelog) spark.conf.set(changelogKey, "true")
     try {
-      val writer = streamed.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .options(ckptOption)
-      val q =
-        (if (availableNow)
-          writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        else writer).start()
-      if (availableNow) awaitSelfTermination(q)
-      else drainAndStop(q, capture = capturePlanLedger)
-      recordObserved(q)
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      if (dataBatches < minDataBatches) throw new IllegalStateException(
-        s"streaming query ran $dataBatches data-carrying micro-batches, " +
-          s"expected >= $minDataBatches (multi-trigger contract)")
+      drain(spark, streamed.writeStream.outputMode(mode).format("memory")
+          .queryName(name).options(ckptOption),
+        stateConfs(stateParts, rocksDb, changelog), minDataBatches,
+        "streaming query", availableNow)
       val t = spark.table(name)
       val n = t.count()
       if (n > maxRows) throw new IllegalStateException(
         s"memory sink holds $n rows > cap $maxRows; an unaggregated stream " +
           "must not be materialized through the driver — write to a file sink")
-      val out = spark.createDataFrame(
-        java.util.Arrays.asList(t.collect(): _*), t.schema)
-      spark.catalog.dropTempView(name)
-      out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      prevChangelog match {
-        case Some(p) => spark.conf.set(changelogKey, p)
-        case None => spark.conf.unset(changelogKey)
-      }
-    }
+      spark.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** File-sink escape hatch for results past [[MaxSinkRows]]: each
@@ -507,44 +472,21 @@ object StreamingOps {
     require(mode == "complete" || mode == "append",
       s"runToFiles supports complete|append, got '$mode'")
     val out = outDir.getOrElse(graft.TempDirs.create("graft-sink").toString)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    if (rocksDb) spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else spark.conf.unset(providerKey)
-    try {
-      val complete = mode == "complete"
-      val q = streamed.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+    val complete = mode == "complete"
+    drain(spark, streamed.writeStream.outputMode(mode)
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
           writeBatchIdempotent(out, batch.toDF(), id, complete)
         }
-        .options(ckptOption)
-        .start()
-      drainAndStop(q)
-      recordObserved(q)
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      if (dataBatches < minDataBatches) throw new IllegalStateException(
-        s"streaming query ran $dataBatches data-carrying micro-batches, " +
-          s"expected >= $minDataBatches (multi-trigger contract)")
-      // an empty stream (append mode, no finalized rows) writes no file;
-      // reading the bare dir would die with an unrelated schema-inference
-      // error, so return a typed empty frame with the streamed schema
-      val wroteAny = Files.walk(java.nio.file.Paths.get(out))
-      val hasData = try wroteAny.anyMatch(p => p.toString.endsWith(".parquet"))
-        finally wroteAny.close()
-      if (hasData) readBatchDirs(spark, out)
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), streamed.schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+        .options(ckptOption),
+      stateConfs(stateParts, rocksDb), minDataBatches, "streaming query")
+    // an empty stream (append mode, no finalized rows) writes no file;
+    // reading the bare dir would die with an unrelated schema-inference
+    // error, so return a typed empty frame with the streamed schema
+    val wroteAny = Files.walk(java.nio.file.Paths.get(out))
+    val hasData = try wroteAny.anyMatch(p => p.toString.endsWith(".parquet"))
+      finally wroteAny.close()
+    if (hasData) readBatchDirs(spark, out)
+    else spark.createDataFrame(new java.util.ArrayList[Row](), streamed.schema)
   }
 
   /** Replay-idempotent file-sink write (round 13 — foreachBatch is
@@ -571,7 +513,7 @@ object StreamingOps {
   /** The per-trigger SERVE skeleton shared by the foreachBatch-transform
     * queries ([[streamAnnServe]], [[streamAsofEnrich]]): run `stream`
     * in append mode, apply `transform` to each micro-batch, ledger the
-    * transformed plan via [[lastForeachBatchPlan]], land it idempotently
+    * transformed plan as the run's `batchPlan`, land it idempotently
     * by batch id, prove the multi-trigger contract, and read the landed
     * tree back. One definition so the drain/count protocol and the
     * idempotent-landing discipline cannot drift between serve queries. */
@@ -579,20 +521,15 @@ object StreamingOps {
       prefix: String, minDataBatches: Int, what: String)(
       transform: DataFrame => DataFrame): DataFrame = {
     val out = graft.TempDirs.create(prefix).toString
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val result = transform(batch.toDF())
-        try lastForeachBatchPlan = result.queryExecution.executedPlan.toString
-        catch { case scala.util.control.NonFatal(_) => () }
-        writeBatchIdempotent(out, result, id, complete = false)
-      }
-      .options(ckptOption)
-      .start()
-    drainAndStop(q)
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches < minDataBatches) throw new IllegalStateException(
-      s"$what ran $dataBatches data-carrying micro-batches, " +
-        s"expected >= $minDataBatches (input must arrive across triggers)")
+    val batchPlan = new AtomicReference("")
+    drain(spark, stream.writeStream.outputMode("append")
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+          val result = transform(batch.toDF())
+          recordPlan(batchPlan, result)
+          writeBatchIdempotent(out, result, id, complete = false)
+        }
+        .options(ckptOption),
+      Map.empty, minDataBatches, what, batchPlan = batchPlan)
     readBatchDirs(spark, out)
   }
 
@@ -600,9 +537,6 @@ object StreamingOps {
     * nanosecond-timestamp normalization (Tables.normalizeEvents) applies on
     * top of the streaming source exactly as it does on the batch scan. */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    // deliberately sticky: the returned stream tails the raw nanos-typed
-    // fixture, so the conf must hold at every micro-batch, not just here
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = eventsSchema(spark, dir)
     // the file-stream source tails a *directory* (reference S2 semantics);
     // the glob filter selects the events table out of the fixture dir
@@ -642,11 +576,9 @@ object StreamingOps {
     * state files, no replay, no code change to the job. */
   def stateReader(spark: SparkSession, dir: String): DataFrame = {
     val ckpt = graft.TempDirs.create("graft-state-read").toString
-    val q = eventTypeCounts(spark, dir).writeStream.outputMode("complete")
-      .format("noop")
-      .option("checkpointLocation", ckpt)
-      .start()
-    drainAndStop(q)
+    drain(spark, eventTypeCounts(spark, dir).writeStream.outputMode("complete")
+        .format("noop").option("checkpointLocation", ckpt),
+      Map.empty, 0, "state reader")
     val raw = spark.read.format("statestore").load(ckpt)
     // key carries the group column; the value struct carries the agg
     // buffer. State format v2 (the default since Spark 2.4) stores ONLY
@@ -775,12 +707,7 @@ object StreamingOps {
     * 100 TB deployment would actually use. Shares hourlyCounts' oracle:
     * the sink route must not change the result. */
   def hourlyCountsFiles(spark: SparkSession, dir: String): DataFrame = {
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val agg = Tables.normalizeEvents(stream)
+    val agg = timeSplitStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -819,43 +746,34 @@ object StreamingOps {
       Files.copy(f.toPath, dst)
       dst.toFile.setLastModified(f.lastModified)
     }
-    // sticky on purpose: the stream tails the raw nanos-typed slices at
-    // every micro-batch of both runs (same contract as eventStream)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = eventsSchema(spark, dir)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
-      def runOnce(): Long = {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-        val agg = Tables.normalizeEvents(stream)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_val"))
-        val q = agg.writeStream.outputMode("complete")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    def runOnce(): Long = {
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+      val agg = Tables.normalizeEvents(stream)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_val"))
+      drain(spark, agg.writeStream.outputMode("complete")
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             batch.write.mode("overwrite").parquet(out)
           }
-          .option("checkpointLocation", ckpt)
-          .start()
-        drainAndStop(q)
-        q.recentProgress.map(_.numInputRows).sum
-      }
-      admit(slices.head)
-      val in1 = runOnce() // sees only slice 0, then is stopped
-      slices.tail.foreach(admit) // data lands while the query is DOWN
-      val in2 = runOnce() // SAME checkpoint: must resume, not replay
-      val total = spark.read.parquet(s"$dir/events.parquet").count()
-      require(in1 > 0 && in2 > 0 && in1 + in2 == total,
-        s"exactly-once recovery violated: run1=$in1 + run2=$in2 != $total " +
-          "batch rows (replayed or lost input across the restart)")
-      spark.read.parquet(out)
-        .select(col("window.start").as("hr"), col("event_type"), col("cnt"), col("sum_val"))
-        .orderBy("hr", "event_type")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .option("checkpointLocation", ckpt),
+        stateConfs(StreamShufflePartitions), 0, "restart recovery").inputRows
+    }
+    admit(slices.head)
+    val in1 = runOnce() // sees only slice 0, then is stopped
+    slices.tail.foreach(admit) // data lands while the query is DOWN
+    val in2 = runOnce() // SAME checkpoint: must resume, not replay
+    val total = spark.read.parquet(s"$dir/events.parquet").count()
+    require(in1 > 0 && in2 > 0 && in1 + in2 == total,
+      s"exactly-once recovery violated: run1=$in1 + run2=$in2 != $total " +
+        "batch rows (replayed or lost input across the restart)")
+    spark.read.parquet(out)
+      .select(col("window.start").as("hr"), col("event_type"), col("cnt"), col("sum_val"))
+      .orderBy("hr", "event_type")
   }
 
   /** Streaming MERGE sink (SCD1 apply per trigger) — the most common
@@ -914,62 +832,48 @@ object StreamingOps {
 
   private def mergedFinalState(spark: SparkSession, dir: String,
       targetPrefix: String): DataFrame = {
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-      val events = Tables.normalizeEvents(stream)
-        .select(col("user_id"), col("event_type"), col("value"),
-          col("ts"), col("event_id"))
-      // run-local version pointer (fresh target per run); the PUBLICATION
-      // of each version is IndexStore.commit's atomic symlink protocol.
-      // foreachBatch bodies run serially on the driver. The name is
-      // SF-SCOPED (ADVICE r13): two driver processes at different scale
-      // factors (bench + verify) must not interleave the published link
-      // a cross-process readCurrent would resolve; the commit grace is
-      // short because this name takes one commit PER MICRO-BATCH — the
-      // default 10-minute grace would pile up a full target copy per
-      // trigger per run on disk (the previous version is still always
-      // kept, so the swap-safety guarantee is unchanged)
-      val target = targetPrefix + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      var current: Option[java.nio.file.Path] = None
-      var nextV = 0L
-      val q = events.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    val events = timeSplitStream(spark, dir)
+      .select(col("user_id"), col("event_type"), col("value"),
+        col("ts"), col("event_id"))
+    // run-local version pointer (fresh target per run); the PUBLICATION
+    // of each version is IndexStore.commit's atomic symlink protocol.
+    // foreachBatch bodies run serially on the driver. The name is
+    // SF-SCOPED (ADVICE r13): two driver processes at different scale
+    // factors (bench + verify) must not interleave the published link
+    // a cross-process readCurrent would resolve; the commit grace is
+    // short because this name takes one commit PER MICRO-BATCH — the
+    // default 10-minute grace would pile up a full target copy per
+    // trigger per run on disk (the previous version is still always
+    // kept, so the swap-safety guarantee is unchanged)
+    val target = targetPrefix + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    var current: Option[java.nio.file.Path] = None
+    var nextV = 0L
+    val batchPlan = new AtomicReference("")
+    drain(spark, events.writeStream.outputMode("append")
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
           val s = batch.sparkSession
           val latest = latestPerKey(batch.toDF())
           // the persisted target carries the output names (last_*); map it
           // back to the event shape the merge classifier joins on
           val cur = current match {
             case Some(d) => targetAsEvents(s.read.parquet(d.toString))
-            case None => s.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), latest.schema)
+            case None => s.createDataFrame(new java.util.ArrayList[Row](), latest.schema)
           }
           val merged = mergeClassify(cur, latest)
           // ledger visibility (ADVICE r14 #3): the merge's plan shape —
           // rank-pushdown Window + target⋈batch full-outer join — exists
           // only in these foreachBatch jobs, never in the micro-batch plan
-          try lastForeachBatchPlan = merged.queryExecution.executedPlan.toString
-          catch { case scala.util.control.NonFatal(_) => () }
+          recordPlan(batchPlan, merged)
           current = Some(graft.similarity.IndexStore
             .commit(target, s"batch-$nextV", graceMs = 60000L)(merged))
           nextV += 1
         }
-        .options(ckptOption)
-        .start()
-      drainAndStop(q)
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      if (dataBatches < 3) throw new IllegalStateException(
-        s"streaming merge ran $dataBatches data-carrying micro-batches, " +
-          "expected >= 3 (the upsert must prove itself across triggers)")
-      spark.read.parquet(current.getOrElse(
-        throw new IllegalStateException("streaming merge produced no target version"))
-        .toString)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        .options(ckptOption),
+      stateConfs(StreamShufflePartitions), 3, "streaming merge",
+      batchPlan = batchPlan)
+    spark.read.parquet(current.getOrElse(
+      throw new IllegalStateException("streaming merge produced no target version"))
+      .toString)
   }
 
   /** Batch-side rank pushdown of the MERGE source: the newest row per
@@ -1023,23 +927,6 @@ object StreamingOps {
     * so one prep per (dir, n) is sound with no invalidation. */
   private val feedDirs = TrieMap.empty[String, String]
 
-  /** Runs `body` with the legacy nanos-as-long parquet conf set,
-    * restoring the previous value after — for the feed builders, whose
-    * batch read of the nanos-typed fixture completes eagerly inside the
-    * call. NOT used where the conf must outlive the call: a streaming
-    * tail of the raw fixture ([[eventStream]]) needs the conf at every
-    * micro-batch, so those sites set it sticky on purpose. */
-  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Events-table schema per source dir. Every streaming query bootstraps
     * its stream schema from the static file (reference S3); the footer
     * read is a driver-side file-listing + parse that costs ~0.1–0.3 s —
@@ -1048,9 +935,8 @@ object StreamingOps {
   private val schemaCache = TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
   private def eventsSchema(spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
-    schemaCache.getOrElseUpdate(dir, withNanosAsLong(spark) {
-      spark.read.parquet(s"$dir/events.parquet").schema
-    })
+    schemaCache.getOrElseUpdate(dir,
+      spark.read.parquet(s"$dir/events.parquet").schema)
 
   /** ONE slice-to-feed discipline for every feed builder (round 16,
     * ADVICE r15 — the fourth copy was drifting): range-partition the
@@ -1058,31 +944,25 @@ object StreamingOps {
     * key slice), land each part under a strictly increasing modification
     * time so the file-stream source (oldest-first under
     * maxFilesPerTrigger) replays the slices in key order — the rotation
-    * discipline of reference S4 applied to a parquet feed. `nanos` wraps
-    * the whole build (read AND write) in the legacy nanos-as-long conf
-    * for the raw events fixture, so the feed's schema matches the batch
-    * file exactly. Memoized per cache key ([[feedDirs]]). */
+    * discipline of reference S4 applied to a parquet feed. Memoized per
+    * cache key ([[feedDirs]]). */
   private def splitFeed(spark: SparkSession, cacheKey: String,
-      prefix: String, sourceFile: String, keyCol: String, n: Int,
-      nanos: Boolean = false): String =
+      prefix: String, sourceFile: String, keyCol: String, n: Int): String =
     feedDirs.getOrElseUpdate(cacheKey, {
-      def build: String = {
-        val raw = spark.read.parquet(sourceFile)
-        val feed = graft.TempDirs.create(prefix)
-        val tmp = feed.resolve(".tmp")
-        raw.repartitionByRange(n, col(keyCol)).write.parquet(tmp.toString)
-        val parts = tmp.toFile.listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-        parts.zipWithIndex.foreach { case (part, i) =>
-          val dst = feed.resolve(f"b$i%04d.parquet")
-          Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-          dst.toFile.setLastModified(1700000000000L + i * 60000L)
-        }
-        tmp.toFile.listFiles().foreach(_.delete()); tmp.toFile.delete()
-        feed.toString
+      val raw = spark.read.parquet(sourceFile)
+      val feed = graft.TempDirs.create(prefix)
+      val tmp = feed.resolve(".tmp")
+      raw.repartitionByRange(n, col(keyCol)).write.parquet(tmp.toString)
+      val parts = tmp.toFile.listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .sortBy(_.getName)
+      parts.zipWithIndex.foreach { case (part, i) =>
+        val dst = feed.resolve(f"b$i%04d.parquet")
+        Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
+        dst.toFile.setLastModified(1700000000000L + i * 60000L)
       }
-      if (nanos) withNanosAsLong(spark)(build) else build
+      tmp.toFile.listFiles().foreach(_.delete()); tmp.toFile.delete()
+      feed.toString
     })
 
   /** Splits the events table into `n` files covering disjoint, ascending
@@ -1092,7 +972,14 @@ object StreamingOps {
     * arrival guarantees no late drops). */
   private def timeSplitFeed(spark: SparkSession, dir: String, n: Int): String =
     splitFeed(spark, s"$dir#$n", "graft-feed",
-      s"$dir/events.parquet", "ts", n, nanos = true)
+      s"$dir/events.parquet", "ts", n)
+
+  /** The 3-slice [[timeSplitFeed]] as a normalized event stream, one
+    * slice per trigger — the multi-trigger contract's minimum (every extra
+    * trigger is pure state-machinery cost). */
+  private def timeSplitStream(spark: SparkSession, dir: String): DataFrame =
+    Tables.normalizeEvents(spark.readStream.schema(eventsSchema(spark, dir))
+      .option("maxFilesPerTrigger", "1").parquet(timeSplitFeed(spark, dir, n = 3)))
 
   /** [[timeSplitFeed]] for the EMBEDDINGS table (round 15): slices by
     * vec_id range into `n` feed files — the arrival shape of an online
@@ -1117,7 +1004,7 @@ object StreamingOps {
     * because the slices are global id ranges. */
   private def idSplitFeed(spark: SparkSession, dir: String, n: Int): String =
     splitFeed(spark, s"$dir#id$n", "graft-feed-id",
-      s"$dir/events.parquet", "event_id", n, nanos = true)
+      s"$dir/events.parquet", "event_id", n)
 
   /** Streaming watermark-delay monitor — the online dual of the batch
     * `ev_lateness` profile (same oracle, duality by construction): each
@@ -1131,7 +1018,6 @@ object StreamingOps {
   def streamLateness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val feed = idSplitFeed(spark, dir, n = 3)
     val schema = eventsSchema(spark, dir)
     val stream = spark.readStream.schema(schema)
@@ -1174,13 +1060,7 @@ object StreamingOps {
     * BOUNDED: closed windows are evicted, so state size tracks the
     * watermark lag, not the stream length. */
   def hourlyAppend(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val agg = Tables.normalizeEvents(stream)
+    val agg = timeSplitStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -1206,13 +1086,7 @@ object StreamingOps {
     * a single emitted window. Self-termination and the multi-batch
     * drain are pinned in StreamingStateSpec. */
   def hourlyAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val agg = Tables.normalizeEvents(stream)
+    val agg = timeSplitStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -1319,7 +1193,7 @@ object StreamingOps {
     * query set — streaming arrival must not change a single ranking
     * (the published artifact's content is byte-identical to the inline
     * recompute, so the oracle is unchanged). The retrieval plan reaches
-    * the ledger via [[lastForeachBatchPlan]]; the pure-scan shape of
+    * the ledger via the run's `batchPlan`; the pure-scan shape of
     * the resolved index is pinned in StreamingDualitySpec. */
   def streamAnnServe(spark: SparkSession, dir: String): DataFrame = {
     val feed = embSplitFeed(spark, dir, n = 3)
@@ -1381,32 +1255,23 @@ object StreamingOps {
     // spelling paid. Results are unchanged — each query's own drain
     // protocol (processAllAvailable + multi-trigger proof) is untouched.
     // The feed dir is built HERE, before the fork, so the cached
-    // build is never raced; the shuffle-partition conf both runs scope
-    // is re-pinned after the join (the inner save/restore pairs can
-    // interleave and leave the session at the streaming value).
+    // build is never raced. Each drain's run record is per thread, so the
+    // census run on the helper thread leaves this thread's record — the
+    // survivor (stateful dedup) plan the ledger digests — alone.
     val censusStream = curationGate(curationDocsStream(spark, dir)).groupBy()
       .agg(count(lit(1)).as("n_raw"), sum("quality").as("n_quality"))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     val (counts, survivors) =
       try {
-        // the census run skips the plan-ledger capture: with both drains
-        // in flight the last-writer-wins capture slot would make the
-        // ledger digest nondeterministic; the survivor (stateful dedup)
-        // plan is the one the sequential spelling recorded, so it stays
-        // the recorded one
         val countsF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
           override def call(): DataFrame = runToMemory(spark, censusStream,
-            mode = "complete", minDataBatches = 3, capturePlanLedger = false)
+            mode = "complete", minDataBatches = 3)
         })
         // stage 2: bounded-state exact dedup of the gate-passing texts;
         // per-trigger survivors land as append batch dirs (retention ledger)
         val s = curationSurvivors(spark, dir)
         (countsF.get(), s)
-      } finally {
-        pool.shutdown()
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally pool.shutdown()
     counts.select(lit(0).as("stage_no"), lit("raw").as("stage"),
         col("n_raw").cast("long").as("n_docs"))
       .unionAll(counts.select(lit(1).as("stage_no"), lit("quality").as("stage"),
@@ -1423,7 +1288,7 @@ object StreamingOps {
     * the quality filter) counts raw and gate-passing rows AS THEY FLOW
     * INTO the dedup state operator, reported per micro-batch through
     * `StreamingQueryProgress.observedMetrics` and summed across the
-    * drain ([[lastObservedSums]]). Stage 2 is the landed survivor ledger,
+    * drain (the run's `observedSums`). Stage 2 is the landed survivor ledger,
     * as before. Same three-row funnel, same oracle — but the feed is
     * read ONCE instead of twice, which at 100 TB is the difference
     * between one ingest scan and two. Streaming-vs-batch caveat is the
@@ -1442,12 +1307,13 @@ object StreamingOps {
     // fail LOUDLY if the metrics the stage rows derive from are missing
     // or possibly truncated — a fabricated zero funnel must never ride a
     // noop-sink bench run as a "successful" result
-    if (!lastObservedComplete) throw new IllegalStateException(
+    val run = lastRun
+    if (!run.complete) throw new IllegalStateException(
       "recentProgress may have evicted early batches; observed sums untrusted")
-    val gate = lastObservedSums.getOrElse("curation_gate",
+    val gate = run.observedSums.getOrElse("curation_gate",
       throw new IllegalStateException(
         s"observe node 'curation_gate' reported no metrics: " +
-          s"${lastObservedSums.keySet}"))
+          s"${run.observedSums.keySet}"))
     def metric(k: String): Long = gate.getOrElse(k,
       throw new IllegalStateException(s"observed metric '$k' absent: $gate"))
     import spark.implicits._
@@ -1572,12 +1438,7 @@ object StreamingOps {
       changelog: Boolean): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val sessions = Tables.normalizeEvents(stream)
+    val sessions = timeSplitStream(spark, dir)
       .withWatermark("ts", "0 seconds")
       .select(col("user_id"), col("ts"))
       .as[(Long, java.sql.Timestamp)]
@@ -1670,19 +1531,13 @@ object StreamingOps {
     val stream = spark.readStream.format("graft.sources.SyntheticDocsSource")
       .option("rows", "20000").option("parts", "4").option("rowsPerBatch", "5000")
       .load()
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val w = batch.writeTo(s"$cat.sink").option("commitTag", s"sinkbatch-$id")
-        if (id == 0L) w.overwrite(lit(true)) else w.append()
-      }
-      .options(ckptOption)
-      .start()
-    drainAndStop(q)
-    recordObserved(q)
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches < 3) throw new IllegalStateException(
-      s"streaming sink ran $dataBatches data-carrying micro-batches, " +
-        "expected >= 3 (multi-trigger contract)")
+    drain(spark, stream.writeStream
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+          val w = batch.writeTo(s"$cat.sink").option("commitTag", s"sinkbatch-$id")
+          if (id == 0L) w.overwrite(lit(true)) else w.append()
+        }
+        .options(ckptOption),
+      Map.empty, 3, "streaming sink")
     spark.sql(
       s"""SELECT bucket, count(*) AS cnt,
          |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
@@ -1707,15 +1562,8 @@ object StreamingOps {
     val stream = spark.readStream.format("graft.sources.SyntheticDocsSource")
       .option("rows", "20000").option("parts", "4").option("rowsPerBatch", "5000")
       .load()
-    val q = stream.writeStream
-      .options(ckptOption)
-      .toTable(s"$cat.nsink")
-    drainAndStop(q)
-    recordObserved(q)
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches < 3) throw new IllegalStateException(
-      s"native streaming sink ran $dataBatches data-carrying micro-batches, " +
-        "expected >= 3 (multi-trigger contract)")
+    drain(spark, stream.writeStream.options(ckptOption), Map.empty, 3,
+      "native streaming sink", table = Some(s"$cat.nsink"))
     spark.sql(
       s"""SELECT bucket, count(*) AS cnt,
          |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
@@ -1735,7 +1583,6 @@ object StreamingOps {
     * arithmetic — a version skipped, replayed, or an epoch
     * double-committed breaks the hash. */
   def dsv2Medallion(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val cat = graft.sources.Formats.ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.bronze")
     spark.sql(s"DROP TABLE IF EXISTS $cat.silver")
@@ -1743,19 +1590,15 @@ object StreamingOps {
     spark.sql(s"CREATE TABLE $cat.silver (id BIGINT, bucket INT, boosted DOUBLE)")
     for (b <- 0 until 4)
       spark.sql(s"INSERT INTO $cat.bronze ${graft.sources.Formats.rowsSql(b * 5000L, (b + 1) * 5000L)}")
-    val q = spark.readStream.table(s"$cat.bronze")
-      .filter(col("bucket") < 8) // silver keeps the low half
-      .select(col("id"), col("bucket"),
-        (col("score") * lit(2.0)).as("boosted"))
-      .writeStream
-      .options(ckptOption)
-      .trigger(Trigger.AvailableNow())
-      .toTable(s"$cat.silver")
-    awaitSelfTermination(q)
-    val dataBatches = lastAvailableNowDataBatches
-    if (dataBatches < 3) throw new IllegalStateException(
-      s"medallion hop ran $dataBatches data-carrying micro-batches, " +
-        "expected >= 3 (one per bronze version)")
+    // >= 3 data-carrying batches: one per bronze version
+    drain(spark, spark.readStream.table(s"$cat.bronze")
+        .filter(col("bucket") < 8) // silver keeps the low half
+        .select(col("id"), col("bucket"),
+          (col("score") * lit(2.0)).as("boosted"))
+        .writeStream
+        .options(ckptOption),
+      Map.empty, 3, "medallion hop", availableNow = true,
+      table = Some(s"$cat.silver"))
     spark.sql(
       s"""SELECT bucket, count(*) AS cnt,
          |  CAST(sum(CAST(boosted AS DECIMAL(18,6))) AS DOUBLE) AS sum_boosted
@@ -1857,13 +1700,7 @@ object StreamingOps {
     * only strictly-overlapping windows), and a session is emitted when
     * `end <= watermark` (ms-floored max event time − 10 min). */
   def sessionWindows(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val agg = Tables.normalizeEvents(stream)
+    val agg = timeSplitStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"))
@@ -1891,19 +1728,14 @@ object StreamingOps {
     * eagerly per batch; the per-user rollup happens on the materialized
     * result (batch aggregate over sink-sized data). */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // 3 slices = the minimum that still proves cross-batch matches; each
     // extra trigger costs a full state-store open/commit cycle per
     // partition on BOTH join sides (4 stores each), the dominant cost at
     // fixture scale
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    def feedStream(): DataFrame = Tables.normalizeEvents(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed))
-    val clicks = feedStream().filter(col("event_type") === "click")
+    val clicks = timeSplitStream(spark, dir).filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
       .withWatermark("c_ts", "10 minutes")
-    val purchases = feedStream().filter(col("event_type") === "purchase")
+    val purchases = timeSplitStream(spark, dir).filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("value").as("p_value"))
       .withWatermark("p_ts", "10 minutes")
@@ -1936,14 +1768,8 @@ object StreamingOps {
   def milestones(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
     val step = MilestoneStep
-    val out = Tables.normalizeEvents(stream)
+    val out = timeSplitStream(spark, dir)
       .select(col("user_id")).as[Long]
       .groupByKey(identity)
       .flatMapGroupsWithState[Long, (Long, Long)](
@@ -1974,13 +1800,7 @@ object StreamingOps {
   def streamPaths(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val pairs = Tables.normalizeEvents(stream)
+    val pairs = timeSplitStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("t_us"),
         col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
@@ -2015,13 +1835,7 @@ object StreamingOps {
   def streamAttribution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val credits = Tables.normalizeEvents(stream)
+    val credits = timeSplitStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("t_us"),
         col("event_id"), col("event_type"), col("value"))
       .as[(Long, Long, Long, String, Double)]
@@ -2071,15 +1885,9 @@ object StreamingOps {
     * columns only, so which same-key row arrived first is irrelevant to
     * the result. */
   def streamDedupWm(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // 3 slices = the multi-trigger contract's minimum; the emitted set
     // (global distinct keys — delay > span) is slicing-independent
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val deduped = Tables.normalizeEvents(stream)
+    val deduped = timeSplitStream(spark, dir)
       .select(col("ts"), col("user_id"), col("event_type"))
       .withWatermark("ts", "30 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -2100,7 +1908,7 @@ object StreamingOps {
     * enriched against the static deduplicated click table through
     * [[graft.plans.AsOf]] — the merge-pass exec runs INSIDE foreachBatch,
     * its per-trigger plan digested into the ledger via
-    * [[lastForeachBatchPlan]]. Enrichment against the complete static
+    * the run's `batchPlan`. Enrichment against the complete static
     * right side is arrival-invariant (each purchase is matched on its
     * own event time, not on when it arrives), so the ORACLE is
     * `ev_asof_enrich`'s DuckDB native ASOF LEFT JOIN verbatim — the
@@ -2109,18 +1917,13 @@ object StreamingOps {
     * purchases enrich on arrival, per-trigger output lands idempotently
     * by batch id. */
   def streamAsofEnrich(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
     // the static right side: clicks deduplicated per (user, micros) so
     // the as-of match is unique; bounded, loaded once, cached across
     // triggers
     val clicks = graft.queries.EventQueries.asofClicks(spark, dir).persist()
     try {
       clicks.count() // materialize the enrichment table before the stream
-      val purchases = Tables.normalizeEvents(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feed))
+      val purchases = timeSplitStream(spark, dir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("t_us"), col("value"))
@@ -2144,17 +1947,12 @@ object StreamingOps {
     * side, so the landed union is arrival-invariant and the ORACLE is
     * `ev_interval_join`'s DuckDB IEJoin query verbatim. */
   def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
     val clicks = graft.queries.EventQueries
       .impactWindows(spark, dir, "click", "c_").persist()
     try {
       clicks.count() // materialize the static side before the stream
       val w = graft.queries.EventQueries.ImpactWindowUs
-      val errors = Tables.normalizeEvents(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feed))
+      val errors = timeSplitStream(spark, dir)
         .filter(col("event_type") === "error")
         .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
           unix_micros(col("ts")).as("e_start"),
@@ -2185,12 +1983,7 @@ object StreamingOps {
   def streamAsofStateful(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val feed = timeSplitFeed(spark, dir, n = 3)
-    val schema = eventsSchema(spark, dir)
-    val enriched = Tables.normalizeEvents(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed))
+    val enriched = timeSplitStream(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), unix_micros(col("ts")).as("t_us"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),

@@ -1,20 +1,25 @@
 package graft
 
-/** The session policy lives in one layer: `Sessions` builds every
-  * session the library makes, and `Engine.tune` runs only through the
-  * registry (`SparkEntry.queries` / `entry`) and `Sessions` — never
-  * hand-written at a query top. */
-class SessionLayerSpec extends SparkSpec {
+object SessionLayerSpec {
 
   /** The keys `Engine.tune` sets. */
-  private val tuneKeys = Seq(
+  val tuneKeys: Seq[String] = Seq(
     "spark.sql.adaptive.enabled",
     "spark.sql.adaptive.coalescePartitions.enabled",
     "spark.sql.adaptive.skewJoin.enabled",
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.optimizer.nestedSchemaPruning.enabled",
     "spark.sql.session.timeZone",
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+    "spark.sql.legacy.parquet.nanosAsLong")
+}
+
+/** The session policy lives in one layer: `Sessions` builds every
+  * session the library makes, and `Engine.tune` runs only through the
+  * registry (`SparkEntry.queries` / `entry`) and `Sessions` — never
+  * hand-written at a query top. */
+class SessionLayerSpec extends SparkSpec {
+  import SessionLayerSpec.tuneKeys
 
   private def offenders(needle: String, allowed: Set[String]): Seq[String] =
     MainSources.files

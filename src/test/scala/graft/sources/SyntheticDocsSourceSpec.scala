@@ -83,8 +83,8 @@ class SyntheticDocsSourceSpec extends SparkSpec {
     val out = StreamingOps.runToMemory(spark, growingStream(),
       minDataBatches = 2, availableNow = true)
     assert(out.head() == org.apache.spark.sql.Row(1000L, 0L, 999L))
-    assert(StreamingOps.lastAvailableNowSelfTerminated)
-    assert(StreamingOps.lastAvailableNowDataBatches >= 2)
+    assert(StreamingOps.lastRun.selfTerminated)
+    assert(StreamingOps.lastRun.dataBatches >= 2)
   }
 
   test("a default-trigger drain keeps consuming the grown backlog") {

@@ -310,7 +310,7 @@ class StreamingDualitySpec extends SparkSpec {
     // (>= 3 data batches by the runToFiles contract) must cover the whole
     // corpus — any batch failing to report would undercount n_raw below
     // the raw stage row the assertion above already proved correct
-    val sums = StreamingOps.lastObservedSums("curation_gate")
+    val sums = StreamingOps.lastRun.observedSums("curation_gate")
     assert(sums("n_raw") == batch.head._3, sums.toString)
     assert(sums("n_quality") == batch(1)._3, sums.toString)
   }

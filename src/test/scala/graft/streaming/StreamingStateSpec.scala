@@ -69,13 +69,14 @@ class StreamingStateSpec extends SparkSpec {
     val an = rows(StreamingOps.hourlyAvailableNow(spark, sf))
     // the run-mode's contract: the query ended because the trigger drained
     // the offset snapshot and stopped itself — awaitTermination returned
-    // true, no drainAndStop/processAllAvailable was involved
-    assert(StreamingOps.lastAvailableNowSelfTerminated,
+    // true, no processAllAvailable/external stop was involved
+    val run = StreamingOps.lastRun
+    assert(run.selfTerminated,
       "AvailableNow must end via self-termination, not an external stop")
     // the backlog drained under the source's admission limit: one slice
     // per micro-batch over the 3-way feed
-    assert(StreamingOps.lastAvailableNowDataBatches >= 3,
-      s"expected >=3 data batches, got ${StreamingOps.lastAvailableNowDataBatches}")
+    assert(run.dataBatches >= 3,
+      s"expected >=3 data batches, got ${run.dataBatches}")
     // and the run-mode changed nothing about WHAT was emitted
     val dflt = rows(StreamingOps.hourlyAppend(spark, sf))
     assert(an == dflt && an.nonEmpty,
