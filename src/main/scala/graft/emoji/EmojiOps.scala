@@ -92,10 +92,13 @@ object EmojiOps {
     * intersection quirk — JVM-only, pinned in unit tests). The `Spec`
     * variants are the intended semantics spelled portably (same class
     * compiles in Java regex and RE2), used by every oracle-verified query;
-    * they additionally strip the artifact `\|` the quirk class misses. */
+    * they additionally strip the artifact `\|` the quirk class misses.
+    * `WordNoiseSpec` names the categories of `\p{C}` except `Cn`: JDK 17's
+    * tables put code points newer than its Unicode version (U+1FAE0, 🫠)
+    * in `Cn`, so `\p{C}` deleted them in Spark and not in RE2. */
   val WordNoise: String = "[(\\s)(\\p{C})(\\p{Cntrl}&&[^\\r\\n\\t])()]"
   val WordValid: String = "^[A-Za-z0-9']+$"
-  val WordNoiseSpec: String = "[\\s\\p{C}()|]"
+  val WordNoiseSpec: String = "[\\s\\p{Cc}\\p{Cf}\\p{Co}\\p{Cs}()|]"
   val WordValidSpec: String = WordValid
 
   def cleanWord(w: Column): Column = regexp_replace(w, WordNoise, "")

@@ -1,7 +1,13 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.emoji.EmojiOps
 
@@ -11,7 +17,8 @@ import graft.emoji.EmojiOps
   * missing fields). This module is the true reference-parity surface:
   *
   *  - S1: `spark.read.json` directory batch scan with schema inference
-  *    (reference q1/Runner.scala:93).
+  *    (reference q1/Runner.scala:93), inferred once per corpus snapshot
+  *    ([[corpusSchema]]).
   *  - S2/S3: static-then-stream schema bootstrap + JSON file-stream source
   *    (q2/Runner.scala:95-97) — [[streamTopEmoji]].
   *  - P1/P2: nested-field and array-of-struct path projection
@@ -75,9 +82,50 @@ object TweetQueries {
   private val WordNoiseSpec = EmojiOps.WordNoiseSpec
   private val WordValidSpec = EmojiOps.WordValidSpec
 
-  private def tweets(spark: SparkSession, dir: String): DataFrame = {
-    spark.read.json(tweetsDir(dir))
+  private def tweets(spark: SparkSession, dir: String): DataFrame =
+    readCorpus(spark, tweetsDir(dir))
+
+  /** Confs that JSON schema inference reads: a change re-infers. */
+  private val InferenceConfs = Seq("spark.sql.caseSensitive",
+    "spark.sql.columnNameOfCorruptRecord", "spark.sql.session.timeZone",
+    "spark.sql.timestampType", "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.files.ignoreCorruptFiles", "spark.sql.files.ignoreMissingFiles",
+    "spark.sql.legacy.json.allowEmptyString.enabled")
+
+  /** A corpus snapshot: (path, size, mtime) of every file, and the
+    * [[InferenceConfs]] values. */
+  private type Snapshot = (Vector[(String, Long, FileTime)], Seq[Option[String]])
+
+  /** Corpus directory -> (snapshot, schema) of its last inference. */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, (Snapshot, StructType)]
+
+  /** The schema `spark.read.json(dir)` infers, inferred once per snapshot
+    * of `dir`: its file listing (path, size, mtime, every file under it)
+    * and the [[InferenceConfs]]. A new, removed or touched file or a
+    * changed conf infers again; S1/S3 semantics are those of a fresh
+    * inference. A path that does not exist is left to Spark's own error. */
+  private[queries] def corpusSchema(spark: SparkSession, dir: String): StructType = {
+    val root = Paths.get(dir).toAbsolutePath
+    if (!Files.exists(root)) return spark.read.json(dir).schema
+    val walk = Files.walk(root)
+    val listing =
+      try walk.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(f => (root.relativize(f).toString, Files.size(f), Files.getLastModifiedTime(f)))
+        .toVector.sortBy(_._1)
+      finally walk.close()
+    val snapshot: Snapshot = (listing, InferenceConfs.map(spark.conf.getOption))
+    schemas.get(root.toString).collect { case (s, schema) if s == snapshot => schema }
+      .getOrElse {
+        val inferred = spark.read.json(dir).schema
+        schemas.put(root.toString, (snapshot, inferred))
+        inferred
+      }
   }
+
+  /** Every corpus read: one scan with the snapshot's [[corpusSchema]]
+    * instead of an inference scan before each query. */
+  private def readCorpus(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(corpusSchema(spark, dir)).json(dir)
 
   /** text → exploded individual emoji code points (T1–T3+F2 in one pass). */
   private def emojiRows(spark: SparkSession, dir: String): DataFrame =
@@ -161,8 +209,7 @@ object TweetQueries {
     * deterministic 100k-tweet generated corpus (TweetCorpus) — the entry
     * that actually measures the tokenizer instead of session overhead. */
   def topEmojiScaled(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = graft.ingest.TweetCorpus.ensureScaled()
-    spark.read.json(corpus)
+    readCorpus(spark, graft.ingest.TweetCorpus.ensureScaled())
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
@@ -254,7 +301,7 @@ object TweetQueries {
   //      (pptx slide 19) reproduced as a verifiable result.
 
   def histTopEmoji(subdir: String, textCol: String)(spark: SparkSession, dir: String): DataFrame = {
-    spark.read.json(s"$FixturesRoot/$subdir")
+    readCorpus(spark, s"$FixturesRoot/$subdir")
       .select(col(textCol).as("text"))
       .filter(col("text").isNotNull)
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
@@ -272,15 +319,21 @@ object TweetQueries {
   //      Streaming (S2/S3 file-stream source, A6 complete-mode state, O5
   //      sort-on-streaming-aggregate, memory sink standing in for console).
 
+  /** The O5 sort runs on one partition: a sort over the aggregate's state
+    * partitions plans a range exchange whose sampling job runs the
+    * stateful stage a second time per trigger, and the memory sink
+    * collects the result to the driver anyway. */
   def streamTopEmoji(spark: SparkSession, dir: String): DataFrame = {
     val corpus = tweetsDir(dir)
-    val static = spark.read.json(corpus)                     // S3 schema bootstrap
-    val stream = spark.readStream.schema(static.schema).json(corpus)
+    val stream = spark.readStream
+      .schema(corpusSchema(spark, corpus))                   // S3 schema bootstrap
+      .json(corpus)
     val agg = stream
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
       .groupBy("emoji").agg(count(lit(1)).as("cnt"))
+      .repartition(1)                                        // no range exchange
       .orderBy(desc("cnt"), asc("emoji"))                    // O5: legal in complete mode
     graft.streaming.StreamingOps.runToMemory(spark, agg)
       .orderBy(desc("cnt"), asc("emoji"))
@@ -293,14 +346,16 @@ object TweetQueries {
     * (streaming/batch duality of the quirk census). */
   def streamTopEmojiQuirk(spark: SparkSession, dir: String): DataFrame = {
     val corpus = tweetsDir(dir)
-    val static = spark.read.json(corpus)                     // S3 schema bootstrap
-    val stream = spark.readStream.schema(static.schema).json(corpus)
+    val stream = spark.readStream
+      .schema(corpusSchema(spark, corpus))                   // S3 schema bootstrap
+      .json(corpus)
     val agg = stream
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull)
       .select(explode(EmojiOps.referenceTokenize(col("text"))).as("token"))
       .filter(EmojiOps.isEmojiToken(col("token")))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
+      .repartition(1)                                        // as in streamTopEmoji
       .orderBy(desc("cnt"), asc("token"))                    // O5: legal in complete mode
     graft.streaming.StreamingOps.runToMemory(spark, agg)
       .orderBy(desc("cnt"), asc("token"))
@@ -397,7 +452,7 @@ object TweetQueries {
       s"""WITH t AS (SELECT data.text AS text FROM $tweetsSql),
          |e AS (SELECT CAST(sum(len(regexp_extract_all(text, '$EmojiClassSql'))) AS BIGINT) AS emoji_cnt FROM t),
          |w AS (SELECT count(*) AS word_cnt FROM (
-         |   SELECT regexp_replace(token, '[\\s\\p{C}()|]', '', 'g') AS w
+         |   SELECT regexp_replace(token, '$WordNoiseSpec', '', 'g') AS w
          |   FROM t, UNNEST(string_split(text, ' ')) tt(token)) x
          |   WHERE regexp_matches(w, '^[A-Za-z0-9'']+$$'))
          |SELECT emoji_cnt, word_cnt, emoji_cnt * 1.0 / word_cnt AS ratio FROM e, w""".stripMargin,

@@ -8,6 +8,7 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryProgress, Trigger}
 import graft.Tables
@@ -299,6 +300,12 @@ object StreamingOps {
       (if (changelog) Map("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled" -> Some("true")) else Map.empty)
 
+  /** Every stream's checkpoint files (offset and commit logs, metadata,
+    * state) go through [[LocalCheckpointFileManager]]: no process fork per
+    * file on a local checkpoint. */
+  private val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
+  private val CheckpointManager = classOf[LocalCheckpointFileManager].getName
+
   /** Record the plan `df` executes into a foreachBatch run's holder —
     * called on the stream's own thread, folded into the run's
     * [[StreamRun]] by [[drain]]. */
@@ -308,15 +315,17 @@ object StreamingOps {
 
   /** How every stream in this module starts, drains and is recorded.
     *
-    * START: `confs` (Some sets, None unsets) hold only across `start()`,
-    * on the caller's session, under [[startLock]]. `StreamExecution`
-    * clones the session in its constructor, so the stream's partitions
-    * and state store are fixed when `start()` returns; restoring right
-    * after leaves the caller's session as it was, and two threads
-    * starting streams on one session cannot see each other's confs (a
-    * batch job planned on another thread inside that window can; the
-    * registered results declare their order, so only its partition
-    * count moves).
+    * START: `confs` (Some sets, None unsets) and the checkpoint file
+    * manager ([[CheckpointManagerConf]]) hold only across `start()` and
+    * the stream's initialization (its sources are built on its own thread
+    * from the caller's session), on the caller's session, under
+    * [[startLock]]. `StreamExecution` clones the session in its
+    * constructor, so the stream's partitions and state store are fixed
+    * by then; restoring right after leaves the caller's session as it
+    * was, and two threads starting streams on one session cannot see
+    * each other's confs (a batch job planned on another thread inside
+    * that window can; the registered results declare their order, so
+    * only its partition count moves).
     * Streams are NOT started in a child session: the listener bus reports
     * progress only for streams started through the session's own
     * manager, so a child session would hide them from the caller's
@@ -341,17 +350,24 @@ object StreamingOps {
       availableNow: Boolean = false, table: Option[String] = None,
       batchPlan: AtomicReference[String] = new AtomicReference("")): StreamRun = {
     val w = if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer
+    val startConfs = confs + (CheckpointManagerConf -> Some(CheckpointManager))
     val q = startLock.synchronized {
       // getAll holds only the explicitly set keys: getOption would read a
       // default back and restore it as an explicit setting
       val set = spark.conf.getAll
-      val saved = confs.keys.map(k => k -> set.get(k)).toMap
+      val saved = startConfs.keys.map(k => k -> set.get(k)).toMap
       def put(c: Map[String, Option[String]]): Unit = c.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-      put(confs)
-      try table.fold(w.start())(w.toTable) finally put(saved)
+      put(startConfs)
+      try {
+        val started = table.fold(w.start())(w.toTable)
+        // the stream's thread builds its sources from the caller's session
+        // (not the clone): hold the confs until they exist
+        execution(started).foreach(_.awaitInitialization(300000L))
+        started
+      } finally put(saved)
     }
     val (plan, selfTerminated) =
       try {
@@ -378,18 +394,18 @@ object StreamingOps {
     run
   }
 
+  /** `q`'s execution, when the runtime exposes it. */
+  private def execution(q: StreamingQuery): Option[StreamExecution] = q match {
+    case w: StreamingQueryWrapper => Some(w.streamingQuery)
+    case s: StreamExecution => Some(s)
+    case _ => None
+  }
+
   /** `q`'s last executed micro-batch plan, "" when none is exposed. */
   private def executedPlan(q: StreamingQuery): String =
-    try {
-      import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
-      val exec = q match {
-        case w: StreamingQueryWrapper => Some(w.streamingQuery)
-        case s: StreamExecution => Some(s)
-        case _ => None
-      }
-      exec.flatMap(se => Option(se.lastExecution))
-        .map(_.executedPlan.toString).getOrElse("")
-    } catch { case scala.util.control.NonFatal(_) => "" }
+    try execution(q).flatMap(se => Option(se.lastExecution))
+      .map(_.executedPlan.toString).getOrElse("")
+    catch { case scala.util.control.NonFatal(_) => "" }
 
   /** Per observe node, each numeric metric summed over the batches. */
   private def observedSums(progress: Seq[StreamingQueryProgress])

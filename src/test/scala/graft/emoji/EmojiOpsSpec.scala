@@ -112,4 +112,16 @@ class EmojiOpsSpec extends SparkSpec {
     // ZWJ (a category-C char) is stripped by cleanWord so "a<zwj>b" -> "ab"
     assert(kept == Seq("RT", "asdf", "covfefe", "en", "y", "ab", "don't"))
   }
+
+  test("word cleaner keeps code points newer than the JDK's Unicode tables") {
+    // U+1FAE0 (🫠, Unicode 14) is unassigned (Cn) in JDK 17, so `\p{C}`
+    // deleted it and `🫠a|b` became the word `ab`; RE2 keeps it
+    val melt = new String(Character.toChars(0x1FAE0))
+    val cleaned = Seq(melt + "a|b", "a" + Zwj + "b", "x\u00ADy")
+      .toDF("w")
+      .select(regexp_replace(col("w"), EmojiOps.WordNoiseSpec, "").as("c"))
+      .as[String].collect().toSeq
+    assert(cleaned == Seq(melt + "ab", "ab", "xy"))
+    assert(!cleaned.head.matches(EmojiOps.WordValidSpec))
+  }
 }

@@ -84,4 +84,46 @@ class TweetQueriesSpec extends SparkSpec {
     // and the catalog surface really resolved through a temp view
     assert(spark.catalog.tableExists("graft_tweets"))
   }
+
+  test("one JSON schema inference per corpus snapshot; a new or touched " +
+      "file infers again; rows equal a plain spark.read.json") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = graft.TempDirs.create("graft-snapshot")
+    val corpus = root.resolve("tweets")
+    FileFeeder.feed(corpus, Seq(
+      Seq("""{"data": {"text": "a 😀 b 🔥😀"}}""", """{"data": {"text": "none"}}"""),
+      Seq("""{"data": {"text": "🔥", "lang": "en"}}""")))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    // building a census (no action) runs only its schema inference
+    def inferenceJobs(build: => Any): Int = {
+      graft.Bench.drainListenerBus(spark.sparkContext)
+      val before = jobs.get
+      build
+      graft.Bench.drainListenerBus(spark.sparkContext)
+      jobs.get - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(inferenceJobs(TweetQueries.topEmoji(spark, root.toString)) == 1)
+      assert(inferenceJobs(TweetQueries.leastEmoji(spark, root.toString)) == 0)
+      val first = corpus.resolve("feed-00000.json")
+      Files.setLastModifiedTime(first, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(first).toMillis + 5000L))
+      assert(inferenceJobs(TweetQueries.topEmoji(spark, root.toString)) == 1)
+      assert(inferenceJobs(TweetQueries.topEmoji(spark, root.toString)) == 0)
+      FileFeeder.feed(corpus, Seq(Seq("""{"data": {"text": "😀"}, "extra": 1}""")),
+        prefix = "more")
+      assert(inferenceJobs(TweetQueries.topEmoji(spark, root.toString)) == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val plain = spark.read.json(corpus.toString)
+    val cached = TweetQueries.corpusSchema(spark, corpus.toString)
+    assert(cached == plain.schema && cached.fieldNames.contains("extra"))
+    assert(spark.read.schema(cached).json(corpus.toString).collect().toSeq.map(_.toString).sorted ==
+      plain.collect().toSeq.map(_.toString).sorted)
+    val census = TweetQueries.topEmoji(spark, root.toString).collect().toSeq
+    assert(census.map(r => (r.getString(0), r.getLong(1))) == Seq(("😀", 3L), ("🔥", 2L)))
+  }
 }
