@@ -21,18 +21,23 @@ import scala.util.control.NonFatal
   * so it never gates the retry trigger — it refines the `load_noise`
   * classification from "very likely external" to "provably external". */
 final case class IoBytes(shuffle: Long, spill: Long, input: Long,
-    cpuMs: Long = 0L)
+    cpuMs: Long = 0L) {
+  def -(o: IoBytes): IoBytes =
+    IoBytes(shuffle - o.shuffle, spill - o.spill, input - o.input, cpuMs - o.cpuMs)
+}
 object IoBytes { val zero: IoBytes = IoBytes(0L, 0L, 0L, 0L) }
 
-/** Accumulates task-level metrics across all jobs on the session; the
-  * bench snapshots the running totals around each attempt and diffs.
-  * Thread-safe (listener-bus delivery is single-threaded per queue, but
-  * the bench reads from the main thread). */
-private[graft] class TaskBytesListener extends SparkListener {
+/** Accumulates task-level metrics across all jobs on `sc`, on which it
+  * registers itself; [[measure]] snapshots the running totals around a
+  * body and diffs. Thread-safe (listener-bus delivery is single-threaded
+  * per queue, but the totals are read from the caller's thread). */
+private[graft] class TaskBytesListener(sc: org.apache.spark.SparkContext)
+    extends SparkListener {
   private val shuffleW = new java.util.concurrent.atomic.AtomicLong
   private val spilled = new java.util.concurrent.atomic.AtomicLong
   private val inputR = new java.util.concurrent.atomic.AtomicLong
   private val cpuNs = new java.util.concurrent.atomic.AtomicLong
+  sc.addSparkListener(this)
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics
     if (m != null) {
@@ -42,8 +47,22 @@ private[graft] class TaskBytesListener extends SparkListener {
       cpuNs.addAndGet(m.executorCpuTime)
     }
   }
-  def snapshot(): IoBytes =
+  private def snapshot(): IoBytes =
     IoBytes(shuffleW.get, spilled.get, inputR.get, cpuNs.get / 1000000L)
+
+  /** The one measurement bracket of Bench and Soak: runs `body` and
+    * returns its value, its wall seconds and the task counters it moved.
+    * The bus is drained on both sides so a previous body's straggling
+    * task-end events never bleed into this delta. */
+  def measure[A](body: => A): (A, Double, IoBytes) = {
+    Bench.drainListenerBus(sc)
+    val before = snapshot()
+    val t0 = System.nanoTime()
+    val a = body
+    val sec = (System.nanoTime() - t0) / 1e9
+    Bench.drainListenerBus(sc)
+    (a, sec, snapshot() - before)
+  }
 }
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
@@ -361,8 +380,7 @@ object Bench {
     // (e.g. DAGScheduler "Failed to cancel job group") lands in the 4 KB
     // stdout tail right around the JSON line and crowds it out
     val spark = Sessions.local(s"local[$cpus]")
-    val byteCounter = new TaskBytesListener
-    spark.sparkContext.addSparkListener(byteCounter)
+    val byteCounter = new TaskBytesListener(spark.sparkContext)
     // Session warmup outside the timed region: first-scan/first-shuffle/
     // codegen JIT costs land here instead of on whichever query sorts first.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -376,23 +394,14 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
         def attempt(): Attempt = {
-          // the byte delta brackets the attempt; the bus is drained on both
-          // sides so a previous query's straggler events never bleed in
-          drainListenerBus(spark.sparkContext)
-          val before = byteCounter.snapshot()
-          val t0 = System.nanoTime()
-          val runOk =
+          val (runOk, sec, io) = byteCounter.measure {
             try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
             catch { case NonFatal(e) =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
               false
             }
-          val sec = (System.nanoTime() - t0) / 1e9
-          drainListenerBus(spark.sparkContext)
-          val after = byteCounter.snapshot()
-          Attempt(sec, runOk, IoBytes(after.shuffle - before.shuffle,
-            after.spill - before.spill, after.input - before.input,
-            after.cpuMs - before.cpuMs))
+          }
+          Attempt(sec, runOk, io)
         }
         val m = measureOne(name, runs, priors.times.get(name), () => attempt(),
           loaded = loadBefore > LoadedSampleThreshold,

@@ -103,8 +103,4 @@ object EmojiOps {
 
   def cleanWord(w: Column): Column = regexp_replace(w, WordNoise, "")
   def isWord(w: Column): Column = w.rlike(WordValid)
-
-  /** Full strict pipeline: text column → exploded-ready array of emoji
-    * tokens (the §2.9 normal form's T1..F4 stage as one expression). */
-  def emojiTokens(text: Column): Column = extractEmojis(text)
 }

@@ -83,7 +83,7 @@ object BasketCorpus {
 
   /** The closed-form BFS hop histogram rows (hops, n_nodes, min_node,
     * max_node) for the chain at `groups` cliques under `maxHops` — the
-    * gate [[graft.SoakBasket]] REQUIRES before timing counts. */
+    * gate `basket_decade` ([[graft.Soak]]) REQUIRES before timing counts. */
   def expectedBfs(groups: Long, maxHops: Int): Seq[(Int, Long, Long, Long)] = {
     val rows = Seq.newBuilder[(Int, Long, Long, Long)]
     rows += ((0, 1L, 0L, 0L))

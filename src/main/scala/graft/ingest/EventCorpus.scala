@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * `n = 3600·H`-event corpus emits hours 0..H−2: exactly `4(H−1)`
   * rows. Input volume scales linearly with H while the OPEN-window
   * state the append aggregate carries stays O(types × watermark lag)
-  * — the bounded-state property [[graft.SoakStream]] measures.
+  * — the bounded-state property `stream_decade` ([[graft.Soak]]) measures.
   */
 object EventCorpus {
 

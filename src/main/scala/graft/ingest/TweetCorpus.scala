@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.io.File
 import java.nio.file.Paths
 
 import scala.util.Random
@@ -100,52 +99,16 @@ object TweetCorpus {
     sb.toString
   }
 
-  /** Generates the corpus if absent and returns its directory. Cross-
-    * process safe: the corpus is written into a fresh temp directory and
-    * published with a single atomic rename, so a reader can never list a
-    * half-written ScaledDir (byte-determinism alone doesn't cover the
-    * window where a racing process has deleted files the other just
-    * wrote). The loser of the rename race discards its temp copy — both
-    * copies are byte-identical (same seed), so either winner is correct. */
-  def ensureScaled(): String = synchronized {
-    import java.nio.file.{Files, StandardCopyOption}
-    val target = Paths.get(ScaledDir)
-    val marker = new File(ScaledDir, "_COMPLETE")
-    if (!marker.exists()) {
-      val tmp = Files.createTempDirectory(target.getParent, "graft-tweets-gen-")
+  /** Generates the corpus if absent and returns its directory, published
+    * once across processes by [[graft.similarity.IndexStore.buildOnce]]:
+    * a reader can never list a half-written ScaledDir. */
+  def ensureScaled(): String =
+    graft.similarity.IndexStore.buildOnce(ScaledDir) { tmp =>
       val rnd = new Random(Seed)
       val perFile = ScaledTweets / FilesOut
       val batches = (0 until FilesOut).map { _ =>
         (0 until perFile).map(_ => line(rnd))
       }
-      FileFeeder.feed(tmp, batches, prefix = "tweets")
-      Files.createFile(tmp.resolve("_COMPLETE"))
-      def discardTmp(): Unit = {
-        tmp.toFile.listFiles().foreach(_.delete())
-        Files.deleteIfExists(tmp)
-      }
-      try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          // Another process published first, or a stale partial dir from a
-          // pre-atomic-rename writer occupies the path. Only a marker-less
-          // occupant is stale — replace it; a marked one is complete.
-          if (!marker.exists()) {
-            val dir = new File(ScaledDir)
-            if (dir.exists()) {
-              dir.listFiles().foreach(_.delete())
-              dir.delete()
-            }
-            // a second racer can win this replacement too; its corpus is
-            // byte-identical, so a marked target means success either way
-            try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case e: java.nio.file.FileSystemException =>
-                if (marker.exists()) discardTmp() else throw e
-            }
-          } else discardTmp()
-      }
+      FileFeeder.feed(Paths.get(tmp), batches, prefix = "tweets")
     }
-    ScaledDir
-  }
 }

@@ -73,10 +73,6 @@ object TweetQueries {
     if (candidate.isDirectory) candidate.getPath else FixtureDir
   }
 
-  /** RE2 spelling of [[EmojiOps.EmojiClass]] (identical semantics). */
-  private val EmojiClassSql =
-    """[\x{1F300}-\x{1F5FF}\x{1F600}-\x{1F64F}\x{1F900}-\x{1F9FF}]"""
-
   /** Word-pipeline spec (T4/T5, SURVEY.md §2.3) — single source of truth
     * in [[EmojiOps.WordNoiseSpec]]/[[EmojiOps.WordValidSpec]]. */
   private val WordNoiseSpec = EmojiOps.WordNoiseSpec
@@ -127,26 +123,38 @@ object TweetQueries {
   private def readCorpus(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(corpusSchema(spark, dir)).json(dir)
 
-  /** text → exploded individual emoji code points (T1–T3+F2 in one pass). */
-  private def emojiRows(spark: SparkSession, dir: String): DataFrame =
-    tweets(spark, dir)
+  /** A corpus's text → exploded individual emoji code points (T1–T3+F2
+    * in one pass); batch or streaming. */
+  private def emojiRows(corpus: DataFrame): DataFrame =
+    corpus
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
 
+  /** A corpus's text → the quirk pipeline's tokens (T1–T3 + F2/F4, see
+    * [[topEmojiQuirk]]); batch or streaming. */
+  private def quirkTokens(corpus: DataFrame): DataFrame =
+    corpus
+      .select(col("data.text").as("text"))
+      .filter(col("text").isNotNull)
+      .select(explode(EmojiOps.referenceTokenize(col("text"))).as("token"))
+      .filter(EmojiOps.isEmojiToken(col("token")))
+
+  /** The census tail: one `cnt` per `keys` group, in `order`. */
+  private def census(rows: DataFrame, keys: String*)(order: Column*): DataFrame =
+    rows.groupBy(keys.head, keys.tail: _*).agg(count(lit(1)).as("cnt")).orderBy(order: _*)
+
   private val emojiRowsSql =
-    s"""SELECT unnest(regexp_extract_all(data.text, '$EmojiClassSql')) AS emoji
+    s"""SELECT unnest(regexp_extract_all(data.text, '${EmojiOps.EmojiClass}')) AS emoji
        |FROM $tweetsSql""".stripMargin
 
   // ---- q1 family: most / least / parameterized emoji (q1:93-113,142-162,191-205)
 
   def topEmoji(spark: SparkSession, dir: String): DataFrame =
-    emojiRows(spark, dir).groupBy("emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("emoji"))
+    census(emojiRows(tweets(spark, dir)), "emoji")(desc("cnt"), asc("emoji"))
 
   def leastEmoji(spark: SparkSession, dir: String): DataFrame =
-    emojiRows(spark, dir).groupBy("emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(asc("cnt"), asc("emoji"))
+    census(emojiRows(tweets(spark, dir)), "emoji")(asc("cnt"), asc("emoji"))
 
   /** Quirk-parity census (reference q1:104-109 VERBATIM semantics, as
     * observed on the JVM): T1 deletes every char outside the quirk class
@@ -160,13 +168,7 @@ object TweetQueries {
     * SQL (T2 removed as the no-op it is), so DuckDB's RE2 oracle agrees
     * with Spark's Java regex exactly. */
   def topEmojiQuirk(spark: SparkSession, dir: String): DataFrame =
-    tweets(spark, dir)
-      .select(col("data.text").as("text"))
-      .filter(col("text").isNotNull)
-      .select(explode(EmojiOps.referenceTokenize(col("text"))).as("token"))
-      .filter(EmojiOps.isEmojiToken(col("token")))
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("token"))
+    census(quirkTokens(tweets(spark, dir)), "token")(desc("cnt"), asc("token"))
 
   /** Grapheme-cluster census (round 13, SURVEY §2.3 upgrade): maximal
     * emoji clusters — ZWJ families, skin-tone/VS-16 runs, flag RI pairs —
@@ -176,12 +178,11 @@ object TweetQueries {
     * two censuses provably diverge. Same plan shape as every census:
     * scan → extract-all → explode → one hash-agg shuffle → small sort. */
   def topEmojiGrapheme(spark: SparkSession, dir: String): DataFrame =
-    tweets(spark, dir)
+    census(tweets(spark, dir)
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull)
-      .select(explode(EmojiOps.extractEmojiClusters(col("text"))).as("cluster"))
-      .groupBy("cluster").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("cluster"))
+      .select(explode(EmojiOps.extractEmojiClusters(col("text"))).as("cluster")),
+      "cluster")(desc("cnt"), asc("cluster"))
 
   /** The q1 census authored as a SQL STRING over a registered temp view
     * (round 14, VERDICT r13 #4): a real user's first contact with the
@@ -208,21 +209,15 @@ object TweetQueries {
   /** The strict census at bench scale: same plan as [[topEmoji]], over the
     * deterministic 100k-tweet generated corpus (TweetCorpus) — the entry
     * that actually measures the tokenizer instead of session overhead. */
-  def topEmojiScaled(spark: SparkSession, dir: String): DataFrame = {
-    readCorpus(spark, graft.ingest.TweetCorpus.ensureScaled())
-      .select(col("data.text").as("text"))
-      .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
-      .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
-      .groupBy("emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("emoji"))
-  }
+  def topEmojiScaled(spark: SparkSession, dir: String): DataFrame =
+    census(emojiRows(readCorpus(spark, graft.ingest.TweetCorpus.ensureScaled())),
+      "emoji")(desc("cnt"), asc("emoji"))
 
   /** F3: the user-supplied regex reaches the filter as a parameter
     * (q1:204 `rlike userEmoji`); registered twice with different params. */
   def specificEmoji(pattern: String)(spark: SparkSession, dir: String): DataFrame =
-    emojiRows(spark, dir).filter(col("emoji").rlike(pattern))
-      .groupBy("emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("emoji"))
+    census(emojiRows(tweets(spark, dir)).filter(col("emoji").rlike(pattern)),
+      "emoji")(desc("cnt"), asc("emoji"))
 
   // ---- q3: emoji count / word count ratio (q3:104-113,161-176; A4 global aggs)
 
@@ -282,15 +277,13 @@ object TweetQueries {
       .select(col("country"), explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
 
   def countryEmojiIncl(pattern: String)(spark: SparkSession, dir: String): DataFrame =
-    countryEmoji(spark, dir).filter(col("country").rlike(pattern))
-      .groupBy("country", "emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(asc("country"), desc("cnt"), asc("emoji"))
+    census(countryEmoji(spark, dir).filter(col("country").rlike(pattern)),
+      "country", "emoji")(asc("country"), desc("cnt"), asc("emoji"))
 
   /** F5: negative substring filter (q6:219 `!contains`). */
   def countryEmojiExcl(substr: String)(spark: SparkSession, dir: String): DataFrame =
-    countryEmoji(spark, dir).filter(!col("country").contains(substr))
-      .groupBy("country", "emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(asc("country"), desc("cnt"), asc("emoji"))
+    census(countryEmoji(spark, dir).filter(!col("country").contains(substr)),
+      "country", "emoji")(asc("country"), desc("cnt"), asc("emoji"))
 
   // ---- q7: historical corpora, schema-polymorphic (q7:62-108). The same
   //      pipeline runs over the v1.1 schema (`full_text`, A.2) and the 2015
@@ -300,18 +293,16 @@ object TweetQueries {
   //      census is empty — the reference's own documented finding
   //      (pptx slide 19) reproduced as a verifiable result.
 
-  def histTopEmoji(subdir: String, textCol: String)(spark: SparkSession, dir: String): DataFrame = {
-    readCorpus(spark, s"$FixturesRoot/$subdir")
+  def histTopEmoji(subdir: String, textCol: String)(spark: SparkSession, dir: String): DataFrame =
+    census(readCorpus(spark, s"$FixturesRoot/$subdir")
       .select(col(textCol).as("text"))
       .filter(col("text").isNotNull)
-      .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
-      .groupBy("emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("emoji"))
-  }
+      .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji")),
+      "emoji")(desc("cnt"), asc("emoji"))
 
   private def histSql(subdir: String, textCol: String): String =
     s"""SELECT emoji, count(*) AS cnt FROM (
-       |  SELECT unnest(regexp_extract_all($textCol, '$EmojiClassSql')) AS emoji
+       |  SELECT unnest(regexp_extract_all($textCol, '${EmojiOps.EmojiClass}')) AS emoji
        |  FROM read_json_auto('$FixturesRoot/$subdir/*.json', $JsonOpts))
        |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin
 
@@ -319,47 +310,35 @@ object TweetQueries {
   //      Streaming (S2/S3 file-stream source, A6 complete-mode state, O5
   //      sort-on-streaming-aggregate, memory sink standing in for console).
 
-  /** The O5 sort runs on one partition: a sort over the aggregate's state
+  /** The census of `tokens(stream)` by `key` through Structured Streaming.
+    * The O5 sort runs on one partition: a sort over the aggregate's state
     * partitions plans a range exchange whose sampling job runs the
     * stateful stage a second time per trigger, and the memory sink
     * collects the result to the driver anyway. */
-  def streamTopEmoji(spark: SparkSession, dir: String): DataFrame = {
+  private def streamCensus(spark: SparkSession, dir: String, key: String,
+      tokens: DataFrame => DataFrame): DataFrame = {
     val corpus = tweetsDir(dir)
     val stream = spark.readStream
       .schema(corpusSchema(spark, corpus))                   // S3 schema bootstrap
       .json(corpus)
-    val agg = stream
-      .select(col("data.text").as("text"))
-      .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
-      .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
-      .groupBy("emoji").agg(count(lit(1)).as("cnt"))
+    val agg = tokens(stream)
+      .groupBy(key).agg(count(lit(1)).as("cnt"))
       .repartition(1)                                        // no range exchange
-      .orderBy(desc("cnt"), asc("emoji"))                    // O5: legal in complete mode
+      .orderBy(desc("cnt"), asc(key))                        // O5: legal in complete mode
     graft.streaming.StreamingOps.runToMemory(spark, agg)
-      .orderBy(desc("cnt"), asc("emoji"))
+      .orderBy(desc("cnt"), asc(key))
   }
+
+  def streamTopEmoji(spark: SparkSession, dir: String): DataFrame =
+    streamCensus(spark, dir, "emoji", emojiRows)
 
   /** The reference's LIVE path runs the QUIRK pipeline (q2:103-113 — the
     * same delete/split chain as q1), not the strict extractor; this is
     * [[streamTopEmoji]] with [[EmojiOps.referenceTokenize]] swapped in,
     * hash-gated against the identical oracle as `tw_q1_top_emoji_quirk`
     * (streaming/batch duality of the quirk census). */
-  def streamTopEmojiQuirk(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = tweetsDir(dir)
-    val stream = spark.readStream
-      .schema(corpusSchema(spark, corpus))                   // S3 schema bootstrap
-      .json(corpus)
-    val agg = stream
-      .select(col("data.text").as("text"))
-      .filter(col("text").isNotNull)
-      .select(explode(EmojiOps.referenceTokenize(col("text"))).as("token"))
-      .filter(EmojiOps.isEmojiToken(col("token")))
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .repartition(1)                                        // as in streamTopEmoji
-      .orderBy(desc("cnt"), asc("token"))                    // O5: legal in complete mode
-    graft.streaming.StreamingOps.runToMemory(spark, agg)
-      .orderBy(desc("cnt"), asc("token"))
-  }
+  def streamTopEmojiQuirk(spark: SparkSession, dir: String): DataFrame =
+    streamCensus(spark, dir, "token", quirkTokens)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "tw_q2_stream_top_emoji_quirk" -> (streamTopEmojiQuirk _),
@@ -385,45 +364,41 @@ object TweetQueries {
        |FROM (
        |  SELECT unnest($dimExpr) AS $dimName, data.text AS text, includes
        |  FROM $tweetsSql),
-       |  UNNEST(regexp_extract_all(text, '$EmojiClassSql')) e(emoji)
+       |  UNNEST(regexp_extract_all(text, '${EmojiOps.EmojiClass}')) e(emoji)
        |$where
        |GROUP BY $dimName, emoji
        |ORDER BY $dimName ASC, cnt DESC, emoji ASC""".stripMargin
 
+  /** The strict census oracle ([[topEmoji]] and its SQL and streaming
+    * twins). */
+  private val censusSql =
+    s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)
+       |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin
+
+  /** The quirk census oracle (batch and streaming): T1 delete (RE2
+    * spelling), T2 omitted as the no-op the JVM pipeline exhibits, T3
+    * split, F2/F4 filters — glued runs. */
+  private val quirkSql =
+    s"""WITH tok AS (
+       |  SELECT unnest(string_split(
+       |    regexp_replace(data.text, '${EmojiOps.QuirkNotEmojiClass}', '', 'g'),
+       |    ' ')) AS token
+       |  FROM $tweetsSql WHERE data.text IS NOT NULL)
+       |SELECT token, count(*) AS cnt FROM tok
+       |WHERE regexp_matches(token, '${EmojiOps.QuirkEmojiClass}')
+       |  AND NOT contains(token, '(') AND NOT contains(token, ')') AND NOT contains(token, '|')
+       |GROUP BY token ORDER BY cnt DESC, token""".stripMargin
+
   val oracles: Map[String, String] = Map(
-    "tw_q1_top_emoji" ->
-      s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)
-         |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin,
+    "tw_q1_top_emoji" -> censusSql,
     // the SQL-string twin shares the census oracle verbatim
-    "tw_q1_sql_entry" ->
-      s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)
-         |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin,
+    "tw_q1_sql_entry" -> censusSql,
     "tw_q1_least_emoji" ->
       s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)
          |GROUP BY emoji ORDER BY cnt ASC, emoji""".stripMargin,
-    // the quirk census: T1 delete (RE2 spelling), T2 omitted as the no-op
-    // the JVM pipeline exhibits, T3 split, F2/F4 filters — glued runs
-    "tw_q1_top_emoji_quirk" ->
-      s"""WITH tok AS (
-         |  SELECT unnest(string_split(
-         |    regexp_replace(data.text, '[^\\x{1F300}-\\x{1F5FF}\\x{1F600}-\\x{1F64F}\\x{1F900}-\\x{1F9FF}()|]', '', 'g'),
-         |    ' ')) AS token
-         |  FROM $tweetsSql WHERE data.text IS NOT NULL)
-         |SELECT token, count(*) AS cnt FROM tok
-         |WHERE regexp_matches(token, '[\\x{1F300}-\\x{1F5FF}\\x{1F600}-\\x{1F64F}\\x{1F900}-\\x{1F9FF}()|]')
-         |  AND NOT contains(token, '(') AND NOT contains(token, ')') AND NOT contains(token, '|')
-         |GROUP BY token ORDER BY cnt DESC, token""".stripMargin,
+    "tw_q1_top_emoji_quirk" -> quirkSql,
     // identical census through the streaming engine — same oracle text
-    "tw_q2_stream_top_emoji_quirk" ->
-      s"""WITH tok AS (
-         |  SELECT unnest(string_split(
-         |    regexp_replace(data.text, '[^\\x{1F300}-\\x{1F5FF}\\x{1F600}-\\x{1F64F}\\x{1F900}-\\x{1F9FF}()|]', '', 'g'),
-         |    ' ')) AS token
-         |  FROM $tweetsSql WHERE data.text IS NOT NULL)
-         |SELECT token, count(*) AS cnt FROM tok
-         |WHERE regexp_matches(token, '[\\x{1F300}-\\x{1F5FF}\\x{1F600}-\\x{1F64F}\\x{1F900}-\\x{1F9FF}()|]')
-         |  AND NOT contains(token, '(') AND NOT contains(token, ')') AND NOT contains(token, '|')
-         |GROUP BY token ORDER BY cnt DESC, token""".stripMargin,
+    "tw_q2_stream_top_emoji_quirk" -> quirkSql,
     // the cluster pattern is ONE shared literal (EmojiOps.GraphemeCluster),
     // valid in both Java regex and RE2 — the census and its oracle can
     // never drift apart on the pattern text
@@ -434,7 +409,7 @@ object TweetQueries {
          |GROUP BY cluster ORDER BY cnt DESC, cluster""".stripMargin,
     "tw_q1_top_emoji_scaled" ->
       s"""SELECT emoji, count(*) AS cnt FROM (
-         |  SELECT unnest(regexp_extract_all(data.text, '$EmojiClassSql')) AS emoji
+         |  SELECT unnest(regexp_extract_all(data.text, '${EmojiOps.EmojiClass}')) AS emoji
          |  FROM read_json_auto('${graft.ingest.TweetCorpus.ScaledDir}/*.json', $JsonOpts))
          |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin,
     "tw_q1_emoji_grin" ->
@@ -445,12 +420,10 @@ object TweetQueries {
       s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)
          |WHERE regexp_matches(emoji, '^🔥$$')
          |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin,
-    "tw_q2_stream_top_emoji" ->
-      s"""SELECT emoji, count(*) AS cnt FROM ($emojiRowsSql)
-         |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin,
+    "tw_q2_stream_top_emoji" -> censusSql,
     "tw_q3_ratio" ->
       s"""WITH t AS (SELECT data.text AS text FROM $tweetsSql),
-         |e AS (SELECT CAST(sum(len(regexp_extract_all(text, '$EmojiClassSql'))) AS BIGINT) AS emoji_cnt FROM t),
+         |e AS (SELECT CAST(sum(len(regexp_extract_all(text, '${EmojiOps.EmojiClass}'))) AS BIGINT) AS emoji_cnt FROM t),
          |w AS (SELECT count(*) AS word_cnt FROM (
          |   SELECT regexp_replace(token, '$WordNoiseSpec', '', 'g') AS w
          |   FROM t, UNNEST(string_split(text, ' ')) tt(token)) x

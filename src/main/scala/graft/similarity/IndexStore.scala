@@ -208,6 +208,50 @@ object IndexStore {
   def withArtifactLock[A](name: String)(body: => A): A =
     withPerNameLock(name)(body)
 
+  /** One-time LOCKED materialization of a fixed-path side artifact or
+    * corpus at `out`: concurrent bench/verify processes are a supported
+    * scenario, and a bare marker check would let two first-builders
+    * interleave writes into the same directory and persist the marker
+    * over a torn result. Cross-process writers serialize on
+    * [[withArtifactLock]]; `write` lands the artifact in a temp sibling,
+    * which ONE atomic rename publishes before the `_COMPLETE` marker is
+    * created — the marker can never legitimize a partial directory, and a
+    * crashed build leaves only an unpublished temp dir the next builder
+    * ignores. The fast path (marker present) costs one stat, no lock.
+    * Spark's file sources and a `*.json`/`*.parquet` glob skip the
+    * marker. */
+  def buildOnce(out: String)(write: String => Unit): String = {
+    val marker = Paths.get(out, "_COMPLETE")
+    if (!Files.exists(marker))
+      withArtifactLock(s"bld_${Paths.get(out).getFileName}") {
+        if (!Files.exists(marker)) {
+          val tmp = s"$out.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
+          write(tmp)
+          // a torn remnant of a pre-lock-era crash can't be trusted
+          if (Files.exists(Paths.get(out))) deleteRecursively(Paths.get(out))
+          Files.move(Paths.get(tmp), Paths.get(out),
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          // the marker carries a unique BUILD ID: derived artifacts (the
+          // stats manifests) key their ensure on it, so a layout rebuild
+          // — same sf, new part-file names — invalidates them instead of
+          // leaving them pointing at deleted files (see [[buildId]])
+          Files.writeString(marker, java.util.UUID.randomUUID().toString.take(12))
+        }
+      }
+    out
+  }
+
+  /** The build identity of a [[buildOnce]] artifact — the marker's
+    * content ("" for a legacy empty marker, which still forces one
+    * manifest rebuild on first contact because the ensure key changes
+    * shape). Derived artifacts append this to their ensure `dir` key:
+    * two builds of the same layout at the same sf are DIFFERENT
+    * artifacts (their file names differ), and a manifest must never
+    * outlive the exact build it indexed. */
+  def buildId(out: String): String =
+    try Files.readString(Paths.get(out, "_COMPLETE")).trim
+    catch { case NonFatal(_) => "" }
+
   /** Resolve the published version of `name` iff its in-directory marker
     * matches `want`. Returns the immutable REAL path, never the pointer. */
   private def published(name: String, want: String): Option[Path] =

@@ -7,6 +7,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, TempDirs}
+import graft.similarity.IndexStore.{buildId, buildOnce}
 
 /** Source-format coverage beyond parquet/JSON: ORC and CSV ingestion,
   * verified by ROUND-TRIP parity — each query materializes a lineitem
@@ -29,55 +30,6 @@ object Formats {
 
   private def sfTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** One-time LOCKED materialization of a fixed-path side artifact
-    * (round 15, generalizing the ADVICE r14 layout fix to every
-    * marker-guarded builder in this module): concurrent bench/verify
-    * processes are a supported scenario, and a bare marker check would
-    * let two first-builders interleave writes into the same directory
-    * and persist the marker over a torn result. Cross-process writers
-    * serialize on IndexStore's per-name advisory lock; `write` lands
-    * the artifact in a temp sibling, which ONE atomic rename publishes
-    * before the marker is created — the marker can never legitimize a
-    * partial directory, and a crashed build leaves only an unpublished
-    * temp dir the next builder ignores. The fast path (marker present)
-    * costs one stat, no lock. */
-  private def buildOnce(out: String)(write: String => Unit): String = {
-    if (!new File(out, "_COMPLETE").exists())
-      graft.similarity.IndexStore.withArtifactLock(s"bld_${new File(out).getName}") {
-        val marker = new File(out, "_COMPLETE")
-        if (!marker.exists()) {
-          val tmp = s"$out.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-          write(tmp)
-          // a torn remnant of a pre-lock-era crash can't be trusted
-          if (new File(out).exists())
-            graft.similarity.IndexStore.deleteRecursively(
-              java.nio.file.Paths.get(out))
-          java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-            java.nio.file.Paths.get(out),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          // the marker carries a unique BUILD ID: derived artifacts (the
-          // stats manifests) key their ensure on it, so a layout rebuild
-          // — same sf, new part-file names — invalidates them instead of
-          // leaving them pointing at deleted files (see [[buildId]])
-          java.nio.file.Files.writeString(marker.toPath,
-            java.util.UUID.randomUUID().toString.take(12))
-        }
-      }
-    out
-  }
-
-  /** The build identity of a [[buildOnce]] artifact — the marker's
-    * content ("" for a legacy empty marker, which still forces one
-    * manifest rebuild on first contact because the ensure key changes
-    * shape). Derived artifacts append this to their ensure `dir` key:
-    * two builds of the same layout at the same sf are DIFFERENT
-    * artifacts (their file names differ), and a manifest must never
-    * outlive the exact build it indexed. */
-  private def buildId(out: String): String =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get(out, "_COMPLETE")).trim
-    catch { case scala.util.control.NonFatal(_) => "" }
 
   /** Writes the lineitem projection as `fmt` once per (dir, fmt). */
   private def materialize(spark: SparkSession, dir: String, fmt: String): String =

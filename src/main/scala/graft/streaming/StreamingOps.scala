@@ -257,7 +257,7 @@ object StreamingOps {
     *    them must refuse them in that state.
     *  - `stateRows`: total state-store rows at the END of the run (-1
     *    without progress) — THE bounded-state scale signal
-    *    [[graft.SoakStream]] records at 1×/3×/10× input.
+    *    `stream_decade` ([[graft.Soak]]) records at 1×/3×/10× input.
     *  - `dataBatches`: micro-batches that carried input rows.
     *  - `inputRows`: input rows summed over the run's micro-batches.
     *  - `selfTerminated`: an AvailableNow run ended itself. */

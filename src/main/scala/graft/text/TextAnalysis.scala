@@ -1669,7 +1669,7 @@ object TextAnalysis {
           s"i -> array_join(slice(w, i + 1, $DupSpanN), ' '))")).as("gram"))
 
   /** The census body over any (doc_id, text) frame — shared verbatim by
-    * the registered query and [[graft.SoakText]]'s decade runs, so the
+    * the registered query and [[graft.Soak]]'s `text_decade` runs, so the
     * soak prices exactly the registered plan. */
   private[graft] def dupSpansFrom(docs: DataFrame): DataFrame =
     gramStream(docs)
@@ -1743,7 +1743,7 @@ object TextAnalysis {
     * join's right side bounded by the duplicated vocabulary, never a
     * doc-pair product. */
   /** The coverage body over any (doc_id, text) frame — shared by the
-    * registered query and [[graft.SoakText]]. The gram stream is
+    * registered query and [[graft.Soak]]'s `text_decade`. The gram stream is
     * [[gramStream]] (identical expression to the census's). */
   private[graft] def dupCoverageFrom(docs: DataFrame): DataFrame = {
     val grams = gramStream(docs)

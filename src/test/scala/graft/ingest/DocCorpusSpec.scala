@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The soak corpus (DocCorpus) must carry its planted structure exactly:
-  * the closed-form census SoakGraph REQUIREs at 50k docs is pinned here
-  * at suite scale, against the same registered components pipeline. */
+  * the closed-form census graft.Soak's `graph_decade` REQUIREs at 50k
+  * docs is pinned here at suite scale, against the same registered
+  * components pipeline. */
 class DocCorpusSpec extends SparkSpec {
 
   test("planted near-dup clusters recovered exactly by the registered pipeline") {
