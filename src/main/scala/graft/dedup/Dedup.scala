@@ -395,8 +395,6 @@ object Dedup {
         .forall(_.asInstanceOf[Long] == 0L)
       labels = next.select(col("doc"), col("root"))
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_PROF"))
-        System.err.println(s"[cc] round $rounds done converged=$converged")
     }
     require(converged,
       s"label propagation did not converge in $rounds rounds " +

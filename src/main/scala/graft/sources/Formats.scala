@@ -135,12 +135,8 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.docs (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(s"INSERT OVERWRITE TABLE $cat.docs ${rowsSql(0L, Dsv2WriteBase)}")
-    spark.sql(s"INSERT INTO $cat.docs ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.docs GROUP BY bucket ORDER BY bucket""".stripMargin)
+    overwriteThenAppend(spark, s"$cat.docs")
+    byBucket(spark, s"$cat.docs")
   }
 
   /** Registers the graft catalog on the session (idempotent — same
@@ -164,12 +160,56 @@ object Formats {
     * whole files, which the DV path legitimately DROPS (documented in
     * [[GraftCatalog]]). Found by the r17 optimization baseline bench:
     * green at 8 cores (verify) / failed at 32 (bench). */
-  private[graft] def rowsSql(lo: Long, hi: Long, slices: Int = 0): String = {
-    val range = if (slices > 0) s"range($lo, $hi, 1, $slices)" else s"range($lo, $hi)"
+  private[graft] def rowsSql(lo: Long, hi: Long, slices: Int = 0): String =
+    hashedRows(if (slices > 0) s"range($lo, $hi, 1, $slices)" else s"range($lo, $hi)")
+
+  /** The (id, bucket, score) rows of the ids `from` yields. */
+  private def hashedRows(from: String): String =
     s"""SELECT id,
        |  CAST(id * 2654435761 % 2147483648 % 16 AS INT) AS bucket,
        |  CAST(id * 2654435761 % 2147483648 % 1000 AS DOUBLE) / 1000.0 AS score
-       |FROM $range""".stripMargin
+       |FROM $from""".stripMargin
+
+  /** The write faces' read-back aggregate over `from` (a table with any
+    * snapshot clause or WHERE), grouped by bucket; `lead` prefixes the
+    * select list. */
+  private def bucketSums(from: String, lead: String = ""): String =
+    s"""SELECT ${lead}bucket, count(*) AS cnt,
+       |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+       |FROM $from GROUP BY bucket""".stripMargin
+
+  /** [[bucketSums]] over `from`, ordered by bucket. */
+  private def byBucket(spark: SparkSession, from: String): DataFrame =
+    spark.sql(bucketSums(from) + " ORDER BY bucket")
+
+  /** The time-travel faces' `past` and `current` snapshots side by side. */
+  private def pastAndCurrent(spark: SparkSession, past: String,
+      current: String): DataFrame =
+    spark.sql(bucketSums(past, "'past' AS snap, ") + "\nUNION ALL\n" +
+      bucketSums(current, "'current' AS snap, ") + "\nORDER BY snap, bucket")
+
+  /** Lands the write faces' base [0, base) by INSERT OVERWRITE, then
+    * appends [base, base + append) by INSERT INTO. */
+  private def overwriteThenAppend(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"INSERT OVERWRITE TABLE $table ${rowsSql(0L, Dsv2WriteBase)}")
+    spark.sql(s"INSERT INTO $table ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+  }
+
+  /** Inserts ids [0, 12000) SCATTERED by a modular bijection
+    * (i·2654435761 mod 12000 — the multiplier is coprime to 12000), so
+    * every writer task's file spans essentially the full id and score
+    * ranges: min/max skipping is provably useless on the result. */
+  private def scatterInsert(spark: SparkSession, table: String): Unit =
+    spark.sql(s"INSERT INTO $table\n" +
+      hashedRows("(SELECT (i * 2654435761) % 12000 AS id FROM range(0, 12000) t(i))"))
+
+  /** (files scanned, files in the manifest) of the graft scan in `q`'s
+    * executed plan — the `files=K/N` of its description. */
+  private def scannedFiles(q: DataFrame): (Int, Int) = {
+    val plan = q.queryExecution.executedPlan.toString
+    val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(plan).getOrElse(
+      throw new IllegalStateException(s"no graft scan in plan:\n$plan"))
+    (m.group(1).toInt, m.group(2).toInt)
   }
 
   /** SQL row-level DELETE on the catalog table (round 17 continuation):
@@ -185,13 +225,9 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.del (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(s"INSERT OVERWRITE TABLE $cat.del ${rowsSql(0L, Dsv2WriteBase)}")
-    spark.sql(s"INSERT INTO $cat.del ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+    overwriteThenAppend(spark, s"$cat.del")
     spark.sql(s"DELETE FROM $cat.del WHERE bucket = 3")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.del GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.del")
   }
 
   /** TIME TRAVEL on the catalog table (round 17 continuation): the
@@ -207,20 +243,11 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.tt (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(s"INSERT OVERWRITE TABLE $cat.tt ${rowsSql(0L, Dsv2WriteBase)}")
-    spark.sql(s"INSERT INTO $cat.tt ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+    overwriteThenAppend(spark, s"$cat.tt")
     val cur = GraftCatalog.seqOf(graft.similarity.IndexStore.pointer
       .resolve(java.nio.file.Paths.get(catalogRoot, "tt"),
         GraftCatalog.PointerName).get)
-    spark.sql(
-      s"""SELECT 'past' AS snap, bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.tt VERSION AS OF '${cur - 1}' GROUP BY bucket
-         |UNION ALL
-         |SELECT 'current' AS snap, bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.tt GROUP BY bucket
-         |ORDER BY snap, bucket""".stripMargin)
+    pastAndCurrent(spark, s"$cat.tt VERSION AS OF '${cur - 1}'", s"$cat.tt")
   }
 
   /** TIME TRAVEL BY INSTANT (`TIMESTAMP AS OF` — the other half of the
@@ -236,20 +263,12 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ttts")
     spark.sql(s"CREATE TABLE $cat.ttts (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(s"INSERT OVERWRITE TABLE $cat.ttts ${rowsSql(0L, Dsv2WriteBase)}")
-    val tdir = java.nio.file.Paths.get(catalogRoot, "ttts")
-    val firstPublishMs = GraftCatalog.describeHistory(tdir).last.modifiedMs
-    spark.sql(s"INSERT INTO $cat.ttts ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+    overwriteThenAppend(spark, s"$cat.ttts")
+    // history is newest first: the last entry is the overwrite's commit
+    val firstPublishMs = GraftCatalog.describeHistory(
+      java.nio.file.Paths.get(catalogRoot, "ttts")).last.modifiedMs
     val asOf = java.time.Instant.ofEpochMilli(firstPublishMs).toString
-    spark.sql(
-      s"""SELECT 'past' AS snap, bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.ttts TIMESTAMP AS OF '$asOf' GROUP BY bucket
-         |UNION ALL
-         |SELECT 'current' AS snap, bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.ttts GROUP BY bucket
-         |ORDER BY snap, bucket""".stripMargin)
+    pastAndCurrent(spark, s"$cat.ttts TIMESTAMP AS OF '$asOf'", s"$cat.ttts")
   }
 
   /** COMPACTION of the catalog table (round 17 continuation — the
@@ -266,17 +285,13 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.cmp (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(s"INSERT OVERWRITE TABLE $cat.cmp ${rowsSql(0L, Dsv2WriteBase)}")
-    spark.sql(s"INSERT INTO $cat.cmp ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+    overwriteThenAppend(spark, s"$cat.cmp")
     val tdir = java.nio.file.Paths.get(catalogRoot, "cmp")
     GraftCatalog.compact(tdir)
     val files = GraftCatalog.currentManifest(tdir)
     require(files.size == 1,
       s"compaction must leave one pool file, found ${files.size}")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.cmp GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.cmp")
   }
 
   /** FILE SKIPPING on the catalog table (round 17 continuation — the
@@ -297,14 +312,8 @@ object Formats {
     spark.sql(s"INSERT INTO $cat.skip ${rowsSql(3000L, 6000L)}")
     spark.sql(s"INSERT INTO $cat.skip ${rowsSql(6000L, 9000L)}")
     spark.sql(s"INSERT INTO $cat.skip ${rowsSql(9000L, 12000L)}")
-    val q = spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.skip WHERE id >= 9000 GROUP BY bucket ORDER BY bucket""".stripMargin)
-    val desc = q.queryExecution.executedPlan.toString
-    val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(desc).getOrElse(
-      throw new IllegalStateException(s"no graft scan in plan:\n$desc"))
-    val (live, total) = (m.group(1).toInt, m.group(2).toInt)
+    val q = byBucket(spark, s"$cat.skip WHERE id >= 9000")
+    val (live, total) = scannedFiles(q)
     require(live < total && live > 0,
       s"stats must prune the pre-9000 batches' files, scanned $live/$total")
     q
@@ -350,13 +359,9 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.upd (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(s"INSERT OVERWRITE TABLE $cat.upd ${rowsSql(0L, Dsv2WriteBase)}")
-    spark.sql(s"INSERT INTO $cat.upd ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+    overwriteThenAppend(spark, s"$cat.upd")
     spark.sql(s"UPDATE $cat.upd SET score = score + 1.0 WHERE bucket = 3")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.upd GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.upd")
   }
 
   /** SQL `MERGE INTO` the catalog table — the upsert every incremental
@@ -385,10 +390,7 @@ object Formats {
       GraftCatalog.currentManifest(mdir).map(_.file).toSet)
     require(carried.nonEmpty,
       "runtime group filtering must carry match-free files by reference")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.mrg GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.mrg")
   }
 
   /** The `OPTIMIZE <catalog>.<table>` SQL VERB (round 17 continuation):
@@ -405,15 +407,11 @@ object Formats {
     val cat = ensureCatalog(s)
     s.sql(
       s"CREATE TABLE IF NOT EXISTS $cat.opt (id BIGINT, bucket INT, score DOUBLE)")
-    s.sql(s"INSERT OVERWRITE TABLE $cat.opt ${rowsSql(0L, Dsv2WriteBase)}")
-    s.sql(s"INSERT INTO $cat.opt ${rowsSql(Dsv2WriteBase, Dsv2WriteBase + Dsv2WriteAppend)}")
+    overwriteThenAppend(s, s"$cat.opt")
     val r = s.sql(s"OPTIMIZE $cat.opt").head()
     require(r.getInt(2) == 1 && r.getLong(3) == Dsv2WriteBase + Dsv2WriteAppend,
       s"OPTIMIZE must compact to one file conserving rows, got $r")
-    s.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.opt GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(s, s"$cat.opt")
   }
 
   /** CLUSTERED REWRITE restores file skipping (the OPTIMIZE/ORDER BY
@@ -433,19 +431,9 @@ object Formats {
     val cat = ensureCatalog(spark)
     spark.sql(s"DROP TABLE IF EXISTS $cat.clus")
     spark.sql(s"CREATE TABLE $cat.clus (id BIGINT, bucket INT, score DOUBLE)")
-    spark.sql(
-      s"""INSERT INTO $cat.clus
-         |SELECT id,
-         |  CAST(id * 2654435761 % 2147483648 % 16 AS INT) AS bucket,
-         |  CAST(id * 2654435761 % 2147483648 % 1000 AS DOUBLE) / 1000.0 AS score
-         |FROM (SELECT (i * 2654435761) % 12000 AS id FROM range(0, 12000) t(i))""".stripMargin)
-    def scanned(pred: String): (Int, Int) = {
-      val plan = spark.sql(s"SELECT count(*) AS n FROM $cat.clus WHERE $pred")
-        .queryExecution.executedPlan.toString
-      val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(plan).getOrElse(
-        throw new IllegalStateException(s"no graft scan in plan:\n$plan"))
-      (m.group(1).toInt, m.group(2).toInt)
-    }
+    scatterInsert(spark, s"$cat.clus")
+    def scanned(pred: String): (Int, Int) =
+      scannedFiles(spark.sql(s"SELECT count(*) AS n FROM $cat.clus WHERE $pred"))
     val (preLive, preTotal) = scanned("id >= 9000")
     require(preLive == preTotal && preTotal >= 4,
       s"striped layout must defeat skipping, got $preLive/$preTotal")
@@ -460,10 +448,7 @@ object Formats {
     val (postLive, postTotal) = scanned("id >= 9000")
     require(postLive < postTotal && postLive > 0,
       s"sorted rewrite must restore skipping, got $postLive/$postTotal")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.clus WHERE id >= 9000 GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.clus WHERE id >= 9000")
   }
 
   /** SCHEMA EVOLUTION on the catalog table: `ALTER TABLE ADD COLUMN`
@@ -578,10 +563,7 @@ object Formats {
       "failed commits must publish no version")
     // the conforming update lands (bucket-3 scores move to [1, 2))
     spark.sql(s"UPDATE $cat.cons SET score = score + 1.0 WHERE bucket = 3")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.cons GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.cons")
   }
 
   /** DELETION-VECTOR deletes (round 17 continuation VI — merge-on-read,
@@ -622,10 +604,7 @@ object Formats {
     require(after.size == 1 && after.forall(_.dv.isEmpty) &&
       after.head.rows == 10500L,
       s"OPTIMIZE must materialize the masks away, got $after")
-    spark.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.dv GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(spark, s"$cat.dv")
   }
 
   /** The change feed over DV deletes: a mask-only commit's change set is
@@ -670,21 +649,9 @@ object Formats {
     val cat = ensureCatalog(s)
     s.sql(s"DROP TABLE IF EXISTS $cat.zo")
     s.sql(s"CREATE TABLE $cat.zo (id BIGINT, bucket INT, score DOUBLE)")
-    // modular-bijection scatter: every writer task's file spans
-    // essentially the full id AND score ranges — min/max useless
-    s.sql(
-      s"""INSERT INTO $cat.zo
-         |SELECT id,
-         |  CAST(id * 2654435761 % 2147483648 % 16 AS INT) AS bucket,
-         |  CAST(id * 2654435761 % 2147483648 % 1000 AS DOUBLE) / 1000.0 AS score
-         |FROM (SELECT (i * 2654435761) % 12000 AS id FROM range(0, 12000) t(i))""".stripMargin)
-    def live(pred: String): (Int, Int) = {
-      val plan = s.sql(s"SELECT count(*) AS n FROM $cat.zo WHERE $pred")
-        .queryExecution.executedPlan.toString
-      val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(plan).getOrElse(
-        throw new IllegalStateException(s"no graft scan in plan:\n$plan"))
-      (m.group(1).toInt, m.group(2).toInt)
-    }
+    scatterInsert(s, s"$cat.zo")
+    def live(pred: String): (Int, Int) =
+      scannedFiles(s.sql(s"SELECT count(*) AS n FROM $cat.zo WHERE $pred"))
     val box = "id >= 9000 AND score < 0.1"
     val (preLive, preTotal) = live(box)
     require(preLive == preTotal && preTotal >= 4,
@@ -701,10 +668,7 @@ object Formats {
       s"z-order must prune on the score dimension, got $scLive/$t2")
     require(boxLive > 0 && boxLive <= math.min(idLive, scLive),
       s"the 2-dim box must prune hardest: $boxLive vs $idLive/$scLive")
-    s.sql(
-      s"""SELECT bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM $cat.zo WHERE $box GROUP BY bucket ORDER BY bucket""".stripMargin)
+    byBucket(s, s"$cat.zo WHERE $box")
   }
 
   /** Writes documents hive-partitioned by `lang` once per dir (marker
@@ -1003,21 +967,6 @@ object Formats {
     * identical. */
   val TargetFileBytes: Long = 8L << 20
 
-  /** Fragments documents into 64 small files, then compacts by size
-    * budget. Round 15 (VERDICT r14 #5): BOTH layouts land through
-    * `IndexStore.commit` — compaction was the one layout-rewriting
-    * operation not behind the snapshot protocol, so a concurrent reader
-    * could catch a half-compacted directory under a bare marker, and the
-    * rewrite was invisible to time travel. Now the fragmented layout is
-    * version v1 and the compacted rewrite is version v2 with v1 as its
-    * `_GRAFT_PREV`: readers resolve one complete immutable version
-    * (either pre- or post-compaction, never a mixture), and
-    * `previousVersion` time-travels to the pre-compaction layout — the
-    * audit read a table format's OPTIMIZE keeps. Idempotent per sf dir:
-    * a current version tagged `compacted` with its predecessor on disk
-    * is recognized and reused, so the rewrite cost is paid once.
-    * Returns (fragmented, compacted) version paths so the spec can
-    * assert the file-count reduction and the lineage. */
   /** Test hook: drop the per-JVM memo for `dir`'s compaction so a spec
     * can force the commit path to re-run (the IndexStore reuse check
     * still applies — wipe the artifact too to force a real rewrite). */
@@ -1036,6 +985,21 @@ object Formats {
   private[graft] def compactionName(dir: String): String =
     s"compact_docs_${sfTag(dir)}"
 
+  /** Fragments documents into 64 small files, then compacts by size
+    * budget. Round 15 (VERDICT r14 #5): BOTH layouts land through
+    * `IndexStore.commit` — compaction was the one layout-rewriting
+    * operation not behind the snapshot protocol, so a concurrent reader
+    * could catch a half-compacted directory under a bare marker, and the
+    * rewrite was invisible to time travel. Now the fragmented layout is
+    * version v1 and the compacted rewrite is version v2 with v1 as its
+    * `_GRAFT_PREV`: readers resolve one complete immutable version
+    * (either pre- or post-compaction, never a mixture), and
+    * `previousVersion` time-travels to the pre-compaction layout — the
+    * audit read a table format's OPTIMIZE keeps. Idempotent per sf dir:
+    * a current version tagged `compacted` with its predecessor on disk
+    * is recognized and reused, so the rewrite cost is paid once.
+    * Returns (fragmented, compacted) version paths so the spec can
+    * assert the file-count reduction and the lineage. */
   def compactionDirs(spark: SparkSession, dir: String): (String, String) = {
     import graft.similarity.IndexStore
     val name = compactionName(dir)
@@ -1306,6 +1270,18 @@ object Formats {
         col("sum_val"))
   }
 
+  /** One logical version of the growing per-user census the snapshot
+    * queries commit: `v` thirds of the events table (v=3 ⇒ all of it),
+    * tagged with its version number. Shared by [[snapshotReader]] and
+    * [[snapshotHistory]] so their committed content — and their oracles'
+    * arithmetic — can never drift apart. */
+  private def userCensusVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
+    Tables(spark, dir, "events")
+      .select(col("user_id"), col("event_id"))
+      .filter(col("event_id") % 3 < v)
+      .groupBy("user_id").agg(count(lit(1)).as("n_events"))
+      .withColumn("version", lit(v.toLong))
+
   /** Transactional snapshot target (round 13, VERDICT r12 #7 — the
     * manifest-snapshot protocol generalized from the trained-index store):
     * a writer lands three GROWING versions of a keyed table through
@@ -1320,18 +1296,6 @@ object Formats {
     * reader is any concurrent job: the guarantee under test — no torn,
     * mixed, or half-committed scans, ever — is the one a table format
     * exists to provide. */
-  /** One logical version of the growing per-user census the snapshot
-    * queries commit: `v` thirds of the events table (v=3 ⇒ all of it),
-    * tagged with its version number. Shared by [[snapshotReader]] and
-    * [[snapshotHistory]] so their committed content — and their oracles'
-    * arithmetic — can never drift apart. */
-  private def userCensusVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
-    Tables(spark, dir, "events")
-      .select(col("user_id"), col("event_id"))
-      .filter(col("event_id") % 3 < v)
-      .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-      .withColumn("version", lit(v.toLong))
-
   def snapshotReader(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.IndexStore
     // SF-SCOPED name (ADVICE r13): the reader compares row counts against
@@ -1422,21 +1386,6 @@ object Formats {
       .orderBy("snap", "user_id")
   }
 
-  /** Z-order clustering census (round 13) — the multi-dimensional layout
-    * technique behind OPTIMIZE ZORDER BY: bucket two scan dims into 16
-    * range cells each, interleave the bucket bits into an 8-bit z-value,
-    * and chunk the table into 16 "files" by z prefix. The census reports
-    * per-file min/max of BOTH dims next to the same chunking done
-    * linearly by orderkey: the z layout bounds every file to ~¼ of the
-    * partkey range × ¼ of the suppkey range SIMULTANEOUSLY (so a
-    * predicate on either dim skips ~¾ of the files), while the linear
-    * layout leaves both dims' spans at the full range in every file —
-    * the reason z-ordering exists. All integer arithmetic (bucket = div,
-    * bit = div/mod), so the DuckDB oracle re-derives every cell exactly;
-    * the extrema are one bounded driver row folded into literals. At
-    * 100 TB the chunking column feeds
-    * `repartitionByRange(zval)` before the write and the report reads
-    * the format's file-stats — the arithmetic is unchanged. */
   /** The three lineitem key extrema as ONE bounded driver row (the
     * merges-artifact / convergence-scalar class of driver read) — folded
     * into literals so each downstream layout census costs one fact scan
@@ -1457,6 +1406,21 @@ object Formats {
       |((bxx div 4) % 2) * 16 + ((byy div 4) % 2) * 32 +
       |((bxx div 8) % 2) * 64 + ((byy div 8) % 2) * 128""".stripMargin
 
+  /** Z-order clustering census (round 13) — the multi-dimensional layout
+    * technique behind OPTIMIZE ZORDER BY: bucket two scan dims into 16
+    * range cells each, interleave the bucket bits into an 8-bit z-value,
+    * and chunk the table into 16 "files" by z prefix. The census reports
+    * per-file min/max of BOTH dims next to the same chunking done
+    * linearly by orderkey: the z layout bounds every file to ~¼ of the
+    * partkey range × ¼ of the suppkey range SIMULTANEOUSLY (so a
+    * predicate on either dim skips ~¾ of the files), while the linear
+    * layout leaves both dims' spans at the full range in every file —
+    * the reason z-ordering exists. All integer arithmetic (bucket = div,
+    * bit = div/mod), so the DuckDB oracle re-derives every cell exactly;
+    * the extrema are one bounded driver row folded into literals. At
+    * 100 TB the chunking column feeds
+    * `repartitionByRange(zval)` before the write and the report reads
+    * the format's file-stats — the arithmetic is unchanged. */
   def zorderCluster(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
@@ -1795,6 +1759,21 @@ object Formats {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
+  /** The oracles' spelling of [[rowsSql]]'s bucket and score over
+    * `h`, the id's Knuth hash. */
+  private val OracleBucket = "CAST(h % 16 AS INTEGER)"
+  private val OracleScore = "CAST(h % 1000 AS DOUBLE) / 1000.0"
+
+  /** Oracle of a write face's read-back over the ids [lo, hi); `where`
+    * (with a trailing space) filters them. */
+  private def oracleByBucket(lo: Long, hi: Long, where: String = ""): String =
+    s"""WITH src AS (
+       |  SELECT (i * 2654435761) % 2147483648 AS h
+       |  FROM range($lo, $hi) t(i))
+       |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+       |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+       |FROM src ${where}GROUP BY bucket ORDER BY bucket""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // identical bucket/interleave/chunk arithmetic in RE2-free SQL —
     // one wrong bit weight or an off-by-one bucket shifts a cell extremum
@@ -2126,55 +2105,33 @@ object Formats {
     "src_json_roundtrip" -> pricingSql,
     // the connector's arithmetic reproduced from range(): same Knuth
     // multiplicative hash in exact BIGINT, same decimal-summed doubles
-    "src_dsv2_scan" ->
-      """WITH src AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 100000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+    "src_dsv2_scan" -> oracleByBucket(0L, 100000L),
     // the write face: overwrite lands [0, base), append adds
     // [base, base+append) — the oracle re-derives the union from range()
     // arithmetic, so the codec round-trip and the manifest accumulation
     // are both under the hash without DuckDB reading the custom format
-    "src_dsv2_write" ->
-      s"""WITH src AS (
-         |  SELECT (i * 2654435761) % 2147483648 AS h
-         |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+    "src_dsv2_write" -> oracleByBucket(0L, Dsv2WriteBase + Dsv2WriteAppend),
     // compaction must not change a row: the write-face oracle verbatim
-    "src_dsv2_compact" ->
-      s"""WITH src AS (
-         |  SELECT (i * 2654435761) % 2147483648 AS h
-         |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+    "src_dsv2_compact" -> oracleByBucket(0L, Dsv2WriteBase + Dsv2WriteAppend),
     // the survivor set after DELETE WHERE bucket = 3, re-derived from
     // the same arithmetic
     "src_dsv2_delete" ->
-      s"""WITH src AS (
-         |  SELECT (i * 2654435761) % 2147483648 AS h
-         |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-         |FROM src WHERE h % 16 <> 3 GROUP BY bucket ORDER BY bucket""".stripMargin,
+      oracleByBucket(0L, Dsv2WriteBase + Dsv2WriteAppend,
+        "WHERE h % 16 <> 3 "),
     // past = the overwrite snapshot [0, base); current = base + append —
     // a time-travel read that leaks or loses an appended row mismatches
     "src_dsv2_time_travel" ->
       s"""WITH cur AS (
          |  SELECT (i * 2654435761) % 2147483648 AS h, i
          |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT 'current' AS snap, CAST(h % 16 AS INTEGER) AS bucket,
+         |SELECT 'current' AS snap, $OracleBucket AS bucket,
          |  count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
          |FROM cur GROUP BY 2
          |UNION ALL
-         |SELECT 'past' AS snap, CAST(h % 16 AS INTEGER) AS bucket,
+         |SELECT 'past' AS snap, $OracleBucket AS bucket,
          |  count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
          |FROM cur WHERE i < $Dsv2WriteBase GROUP BY 2
          |ORDER BY snap, bucket""".stripMargin,
     // the TIMESTAMP AS OF twin: same two snapshots, resolved by the
@@ -2183,27 +2140,21 @@ object Formats {
       s"""WITH cur AS (
          |  SELECT (i * 2654435761) % 2147483648 AS h, i
          |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT 'current' AS snap, CAST(h % 16 AS INTEGER) AS bucket,
+         |SELECT 'current' AS snap, $OracleBucket AS bucket,
          |  count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
          |FROM cur GROUP BY 2
          |UNION ALL
-         |SELECT 'past' AS snap, CAST(h % 16 AS INTEGER) AS bucket,
+         |SELECT 'past' AS snap, $OracleBucket AS bucket,
          |  count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
          |FROM cur WHERE i < $Dsv2WriteBase GROUP BY 2
          |ORDER BY snap, bucket""".stripMargin,
     // file skipping prunes the pre-9000 batches at planning time; the
     // oracle gates the SURVIVING range's aggregate, so a non-conservative
     // skip (a lost row) breaks the hash and the query's own files=K/N
     // require breaks a skip-nothing regression
-    "src_dsv2_skipping" ->
-      """WITH src AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(9000, 12000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+    "src_dsv2_skipping" -> oracleByBucket(9000L, 12000L),
     // the 16-row graft dimension joined to the 100k derived fact — the
     // query itself requires the unhinted BroadcastHashJoin; the oracle
     // gates the join arithmetic
@@ -2225,123 +2176,111 @@ object Formats {
       s"""WITH src AS (
          |  SELECT (i * 2654435761) % 2147483648 AS h
          |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0
+         |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(sum(CAST($OracleScore
          |    + CASE WHEN h % 16 = 3 THEN 1.0 ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
          |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
     // MERGE regimes: [0,6000) untouched, [6000,12000) matched (score
     // doubles), [12000,18000) inserted — re-derived from the arithmetic
     "src_dsv2_merge" ->
-      """WITH src AS (
-        |  SELECT i, (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 18000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0
-        |    * CASE WHEN i >= 6000 AND i < 12000 THEN 2.0 ELSE 1.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
-    // OPTIMIZE must not change a row: the write-face oracle verbatim
-    "src_dsv2_optimize" ->
       s"""WITH src AS (
-         |  SELECT (i * 2654435761) % 2147483648 AS h
-         |  FROM range(0, ${Dsv2WriteBase + Dsv2WriteAppend}) t(i))
-         |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-         |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |  SELECT i, (i * 2654435761) % 2147483648 AS h
+         |  FROM range(0, 18000) t(i))
+         |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(sum(CAST($OracleScore
+         |    * CASE WHEN i >= 6000 AND i < 12000 THEN 2.0 ELSE 1.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
          |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+    // OPTIMIZE must not change a row: the write-face oracle verbatim
+    "src_dsv2_optimize" -> oracleByBucket(0L, Dsv2WriteBase + Dsv2WriteAppend),
     // the striped-then-sorted table holds exactly the [0,12000) id set
     // at every step; the gated aggregate is the surviving range, same
     // shape as the skipping oracle
-    "src_dsv2_cluster" ->
-      """WITH src AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(9000, 12000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+    "src_dsv2_cluster" -> oracleByBucket(9000L, 12000L),
     // the net change feed over the scripted lifecycle: update pre/post
     // images for the matched bucket-3 rows, deletes for bucket 5,
     // inserts for the append — compaction invisible (asserted in-query)
     "src_dsv2_changes" ->
-      """WITH pre AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 12000) t(i)),
-        |app AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(12000, 14000) t(i)),
-        |changes AS (
-        |  SELECT 'update_preimage' AS change_type,
-        |    CAST(h % 16 AS INTEGER) AS bucket,
-        |    CAST(h % 1000 AS DOUBLE) / 1000.0 AS score
-        |  FROM pre WHERE h % 16 = 3
-        |  UNION ALL
-        |  SELECT 'update_postimage', CAST(h % 16 AS INTEGER),
-        |    CAST(h % 1000 AS DOUBLE) / 1000.0 + 1.0
-        |  FROM pre WHERE h % 16 = 3
-        |  UNION ALL
-        |  SELECT 'delete', CAST(h % 16 AS INTEGER),
-        |    CAST(h % 1000 AS DOUBLE) / 1000.0
-        |  FROM pre WHERE h % 16 = 5
-        |  UNION ALL
-        |  SELECT 'insert', CAST(h % 16 AS INTEGER),
-        |    CAST(h % 1000 AS DOUBLE) / 1000.0
-        |  FROM app)
-        |SELECT change_type, bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM changes GROUP BY change_type, bucket
-        |ORDER BY change_type, bucket""".stripMargin,
+      s"""WITH pre AS (
+         |  SELECT (i * 2654435761) % 2147483648 AS h
+         |  FROM range(0, 12000) t(i)),
+         |app AS (
+         |  SELECT (i * 2654435761) % 2147483648 AS h
+         |  FROM range(12000, 14000) t(i)),
+         |changes AS (
+         |  SELECT 'update_preimage' AS change_type,
+         |    $OracleBucket AS bucket,
+         |    $OracleScore AS score
+         |  FROM pre WHERE h % 16 = 3
+         |  UNION ALL
+         |  SELECT 'update_postimage', $OracleBucket,
+         |    $OracleScore + 1.0
+         |  FROM pre WHERE h % 16 = 3
+         |  UNION ALL
+         |  SELECT 'delete', $OracleBucket,
+         |    $OracleScore
+         |  FROM pre WHERE h % 16 = 5
+         |  UNION ALL
+         |  SELECT 'insert', $OracleBucket,
+         |    $OracleScore
+         |  FROM app)
+         |SELECT change_type, bucket, count(*) AS cnt,
+         |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |FROM changes GROUP BY change_type, bucket
+         |ORDER BY change_type, bucket""".stripMargin,
     // violating commits rejected atomically (asserted in-query); the
     // surviving state is the 12k load with the conforming bucket-3 +1.0
     // update — the src_dsv2_update shape on the 12k base
     "src_dsv2_constraint" ->
-      """WITH src AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 12000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0
-        |    + CASE WHEN h % 16 = 3 THEN 1.0 ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+      s"""WITH src AS (
+         |  SELECT (i * 2654435761) % 2147483648 AS h
+         |  FROM range(0, 12000) t(i))
+         |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(sum(CAST($OracleScore
+         |    + CASE WHEN h % 16 = 3 THEN 1.0 ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
     // survivors after the two masked ranges, materialized by OPTIMIZE
     // (in-query asserts pin the zero-rewrite and mask accounting)
     "src_dsv2_dv_delete" ->
-      """WITH src AS (
-        |  SELECT (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 12000) t(i)
-        |  WHERE (i < 4000 OR i >= 5000) AND (i < 9000 OR i >= 9500))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
+      s"""WITH src AS (
+         |  SELECT (i * 2654435761) % 2147483648 AS h
+         |  FROM range(0, 12000) t(i)
+         |  WHERE (i < 4000 OR i >= 5000) AND (i < 9000 OR i >= 9500))
+         |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin,
     // per-commit delta deletes: seq 2 masks [4000,5000), seq 3 masks
     // only the NEWLY masked [4500,6000) minus the already-dead overlap
     "src_dsv2_dv_changes" ->
-      """WITH d AS (
-        |  SELECT 2 AS seq, (i * 2654435761) % 2147483648 AS h
-        |  FROM range(4000, 5000) t(i)
-        |  UNION ALL
-        |  SELECT 3, (i * 2654435761) % 2147483648
-        |  FROM range(5000, 6000) t(i))
-        |SELECT 'delete' AS change_type, CAST(seq AS BIGINT) AS seq,
-        |  CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM d GROUP BY change_type, seq, bucket
-        |ORDER BY change_type, seq, bucket""".stripMargin,
+      s"""WITH d AS (
+         |  SELECT 2 AS seq, (i * 2654435761) % 2147483648 AS h
+         |  FROM range(4000, 5000) t(i)
+         |  UNION ALL
+         |  SELECT 3, (i * 2654435761) % 2147483648
+         |  FROM range(5000, 6000) t(i))
+         |SELECT 'delete' AS change_type, CAST(seq AS BIGINT) AS seq,
+         |  $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |FROM d GROUP BY change_type, seq, bucket
+         |ORDER BY change_type, seq, bucket""".stripMargin,
     // the z-ordered rewrite is content-identical: the box aggregate is
     // plain arithmetic over the surviving (id, score) region
     "src_dsv2_zorder" ->
-      """WITH src AS (
-        |  SELECT i AS id, (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 12000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(sum(CAST(CAST(h % 1000 AS DOUBLE) / 1000.0 AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src
-        |WHERE id >= 9000 AND CAST(h % 1000 AS DOUBLE) / 1000.0 < 0.1
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
+      s"""WITH src AS (
+         |  SELECT i AS id, (i * 2654435761) % 2147483648 AS h
+         |  FROM range(0, 12000) t(i))
+         |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(sum(CAST($OracleScore AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |FROM src
+         |WHERE id >= 9000 AND $OracleScore < 0.1
+         |GROUP BY bucket ORDER BY bucket""".stripMargin,
     // two schema eras: [0,6000) written pre-ALTER (score NULL via the
     // width ledger), [6000,12000) post-ALTER with real scores
     "src_dsv2_evolve" ->
-      """WITH src AS (
-        |  SELECT i, (i * 2654435761) % 2147483648 AS h
-        |  FROM range(0, 12000) t(i))
-        |SELECT CAST(h % 16 AS INTEGER) AS bucket, count(*) AS cnt,
-        |  CAST(count(CASE WHEN i >= 6000 THEN 1 END) AS BIGINT) AS cnt_scored,
-        |  CAST(sum(CAST(CASE WHEN i >= 6000 THEN CAST(h % 1000 AS DOUBLE) / 1000.0 ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
-        |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin)
+      s"""WITH src AS (
+         |  SELECT i, (i * 2654435761) % 2147483648 AS h
+         |  FROM range(0, 12000) t(i))
+         |SELECT $OracleBucket AS bucket, count(*) AS cnt,
+         |  CAST(count(CASE WHEN i >= 6000 THEN 1 END) AS BIGINT) AS cnt_scored,
+         |  CAST(sum(CAST(CASE WHEN i >= 6000 THEN $OracleScore ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS sum_score
+         |FROM src GROUP BY bucket ORDER BY bucket""".stripMargin)
 }

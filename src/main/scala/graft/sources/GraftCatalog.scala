@@ -608,30 +608,6 @@ object GraftCatalog {
       }
     }
 
-  /** Row-level DELETE (driver-orchestrated here; at 100 TB the per-file
-    * rewrite is a distributed job — the PROTOCOL is identical): under
-    * the commit lock, scan each referenced pool file once to find
-    * matches, rewrite ONLY the files that have any (survivors stream
-    * into a fresh pool file; clean files carry over BY REFERENCE in the
-    * new manifest), and publish the survivor manifest as a new version.
-    * The superseded version still references the pre-delete files, so
-    * in-flight readers and `VERSION AS OF` keep working until GC. */
-  /** Row of the table's FULL current width from a file row of prefix
-    * width `cols` — the evolved tail stays null (ADD COLUMN contract).
-    * Shared with the constraint validator. */
-  private[sources] def padded(row: InternalRow, cols: Int,
-      schema: StructType): InternalRow =
-    if (cols == schema.length) row
-    else {
-      val out = new GenericInternalRow(schema.length)
-      var i = 0
-      while (i < cols) {
-        out.update(i, row.get(i, schema.fields(i).dataType))
-        i += 1
-      }
-      out
-    }
-
   /** FILE SKIPPING for the maintenance paths: a delete predicate that
     * provably matches nothing in a file (by its manifest stats) lets the
     * file carry over WITHOUT the per-row scan — the same pruning the
@@ -641,137 +617,58 @@ object GraftCatalog {
     e.stats.exists(st => filters.exists(f =>
       GraftStatsSkip.canSkip(f, schema, st, e.rows)))
 
+  /** Row-level DELETE (driver-orchestrated here; at 100 TB the per-file
+    * rewrite is a distributed job — the PROTOCOL is identical): under
+    * the commit lock, scan each referenced pool file the stats cannot
+    * skip once for its matched live ordinals. A file with no match
+    * carries over BY REFERENCE in the new manifest, a fully matched one
+    * drops out, and the rest follow `graft.delete.mode`:
+    *
+    *  - COPY-ON-WRITE (the default): the file's rows outside (old mask ∪
+    *    matched) stream into a fresh `part-delete-…` pool file — the copy
+    *    loop [[compact]] runs, so the fresh file carries no DV;
+    *  - MERGE-ON-READ (`dv`, the deletion-vector design every modern
+    *    format grew for exactly this reason): a delete touching k rows of
+    *    an f-row file writes a DV of the union mask instead of rewriting
+    *    f rows — cost O(matched rows) + one scan of unskippable files,
+    *    ZERO data-file writes. The new manifest carries the SAME data
+    *    files with fattened masks (a further delete unions into a fresh
+    *    immutable DV file, so each version pins its exact mask and time
+    *    travel is free). Readers pay a forward cursor per file;
+    *    `OPTIMIZE` materializes masks away.
+    *
+    * The survivor manifest publishes as a new version. The superseded
+    * version still references the pre-delete files, so in-flight readers
+    * and `VERSION AS OF` keep working until GC. */
   private[sources] def deleteWhere(tableDir: Path, schema: StructType,
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
     IndexStore.withArtifactLock(lockName(tableDir)) {
-      if (readProps(tableDir).get("graft.delete.mode").contains("dv"))
-        deleteWhereDv(tableDir, schema, filters)
-      else deleteWhereCow(tableDir, schema, filters)
-    }
-
-  /** MERGE-ON-READ delete (`graft.delete.mode` = `dv`, the deletion-
-    * vector design every modern format grew for exactly this reason): a
-    * delete touching k rows of an f-row file writes a DV of k ordinals
-    * instead of rewriting f rows — cost O(matched rows) + one scan of
-    * unskippable files, ZERO data-file writes. The new manifest carries
-    * the SAME data files with fattened masks (a further delete unions
-    * into a fresh immutable DV file, so each version pins its exact
-    * mask and time travel is free); a fully-masked file drops out.
-    * Readers pay a forward cursor per file; `OPTIMIZE` materializes
-    * masks away. Caller holds the table lock. */
-  private def deleteWhereDv(tableDir: Path, schema: StructType,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    def hit(row: InternalRow): Boolean =
-      filters.forall(f => GraftFilterEval.matches(f, row, schema))
-    val entries = currentManifest(tableDir)
-    var changed = false
-    val updated = entries.flatMap { e =>
-      val fileSchema = StructType(schema.fields.take(e.colsOr(schema.length)))
-      if (statsProveNoMatch(e, schema, filters)) Some(e)
-      else {
-        val mask = GraftDv.cursor(tableDir, e.dv)
+      val dvMode = readProps(tableDir).get("graft.delete.mode").contains("dv")
+      def hit(row: InternalRow): Boolean =
+        filters.forall(f => GraftFilterEval.matches(f, row, schema))
+      var changed = false
+      val updated = currentManifest(tableDir).flatMap { e =>
         val matched = Array.newBuilder[Long]
-        val in = new DataInputStream(new java.io.BufferedInputStream(
-          Files.newInputStream(tableDir.resolve(DataDir).resolve(e.file))))
-        try {
-          var pos = -1L
-          var row = GraftRowCodec.read(in, fileSchema)
-          while (row != null) {
-            pos += 1
-            if (!mask.masked(pos) && hit(padded(row, fileSchema.length, schema)))
-              matched += pos
-            row = GraftRowCodec.read(in, fileSchema)
+        if (!statsProveNoMatch(e, schema, filters))
+          GraftPool.foreachRow(tableDir, e, schema) { (pos, row) =>
+            if (hit(row)) matched += pos
           }
-        } finally in.close()
         val fresh = matched.result()
         if (fresh.isEmpty) Some(e)
         else {
           changed = true
-          val old = e.dv.map(d =>
-            GraftDv.read(tableDir.resolve(DataDir).resolve(d.file)))
-            .getOrElse(Array.emptyLongArray)
-          val union = (old ++ fresh).sorted
+          val union = (GraftPool.mask(tableDir, e) ++ fresh).sorted
           if (union.length.toLong >= e.rows) None // fully masked: drop
-          else {
-            val name = s"part-dv-${UUID.randomUUID().toString.take(12)}.gdv"
-            GraftDv.write(tableDir.resolve(DataDir).resolve(name), union)
-            Some(e.copy(dv = Some(Dv(name, union.length.toLong))))
-          }
-        }
-      }
-    }
-    if (changed)
-      publishLocked(tableDir, updated, kind = Kind.Delete)
-  }
-
-  /** COPY-ON-WRITE delete (the default `graft.delete.mode`): files with
-    * matches are rewritten without them. Caller holds the table lock. */
-  private def deleteWhereCow(tableDir: Path, schema: StructType,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-      def hit(row: InternalRow): Boolean =
-        filters.forall(f => GraftFilterEval.matches(f, row, schema))
-      val entries = currentManifest(tableDir)
-      var changed = false
-      val rewritten = entries.flatMap { e =>
-        val src = tableDir.resolve(DataDir).resolve(e.file)
-        val fileSchema = StructType(schema.fields.take(e.colsOr(schema.length)))
-        def scanMatches(): Boolean = {
-          val mask = GraftDv.cursor(tableDir, e.dv)
-          val in = new DataInputStream(new java.io.BufferedInputStream(
-            Files.newInputStream(src)))
-          try {
-            var pos = -1L
-            var row = GraftRowCodec.read(in, fileSchema)
-            var found = false
-            while (row != null && !found) {
-              pos += 1
-              if (!mask.masked(pos) &&
-                hit(padded(row, fileSchema.length, schema))) found = true
-              else row = GraftRowCodec.read(in, fileSchema)
-            }
-            found
-          } finally in.close()
-        }
-        if (statsProveNoMatch(e, schema, filters)) Some(e) // skipped by stats
-        else if (!scanMatches()) Some(e) // untouched: carried by reference
-        else {
-          changed = true
-          val newName = s"part-delete-${UUID.randomUUID().toString.take(12)}.gbin"
-          val types = schema.fields.map(_.dataType)
-          val stats = new GraftStats.Collector(schema)
-          val in = new DataInputStream(new java.io.BufferedInputStream(
-            Files.newInputStream(src)))
-          val dst = tableDir.resolve(DataDir).resolve(newName)
-          val out = new DataOutputStream(new BufferedOutputStream(
-            Files.newOutputStream(dst)))
-          var kept = 0L
-          try {
-            val mask = GraftDv.cursor(tableDir, e.dv)
-            var pos = -1L
-            var row = GraftRowCodec.read(in, fileSchema)
-            while (row != null) {
-              pos += 1
-              val full = padded(row, fileSchema.length, schema)
-              // already-masked rows died earlier: the rewrite drops them
-              // physically (and the fresh file carries no DV)
-              if (!mask.masked(pos) && !hit(full)) {
-                GraftRowCodec.write(out, types, full)
-                stats.update(full)
-                kept += 1
-              }
-              row = GraftRowCodec.read(in, fileSchema)
-            }
-          } finally { in.close(); out.close() }
-          if (kept > 0) Some(ManifestEntry(newName, kept, schema.length,
-            Files.size(dst), Some(stats.result())))
-          else {
-            Files.deleteIfExists(dst)
-            None // every row matched: the file disappears from the manifest
+          else if (dvMode)
+            Some(e.copy(dv = Some(GraftPool.writeMask(tableDir, union))))
+          else GraftPool.write(tableDir, "part-delete", schema) { w =>
+            GraftPool.foreachRow(tableDir, e, schema, Some(union))(
+              (_, row) => w.write(row))
           }
         }
       }
       if (changed)
-        publishLocked(tableDir, rewritten, kind = Kind.Delete)
+        publishLocked(tableDir, updated, kind = Kind.Delete)
     }
 
   /** Schema of the table at `tableDir` (from its committed schema.json). */
@@ -800,40 +697,15 @@ object GraftCatalog {
         previous.map(seqOf).getOrElse(0L)
       else {
         val schema = tableSchema(tableDir)
-        val types = schema.fields.map(_.dataType)
-        val stats = new GraftStats.Collector(schema)
-        val newName = s"part-compact-${UUID.randomUUID().toString.take(12)}.gbin"
-        val dst = tableDir.resolve(DataDir).resolve(newName)
-        val out = new DataOutputStream(new BufferedOutputStream(
-          Files.newOutputStream(dst)))
-        var rows = 0L
-        try entries.foreach { e =>
-          val fileSchema =
-            StructType(schema.fields.take(e.colsOr(schema.length)))
-          val mask = GraftDv.cursor(tableDir, e.dv)
-          val in = new DataInputStream(new java.io.BufferedInputStream(
-            Files.newInputStream(tableDir.resolve(DataDir).resolve(e.file))))
-          try {
-            var pos = -1L
-            var row = GraftRowCodec.read(in, fileSchema)
-            while (row != null) {
-              pos += 1
-              if (!mask.masked(pos)) {
-                val full = padded(row, fileSchema.length, schema)
-                GraftRowCodec.write(out, types, full)
-                stats.update(full)
-                rows += 1
-              }
-              row = GraftRowCodec.read(in, fileSchema)
-            }
-          } finally in.close()
-        } finally out.close()
+        val merged = GraftPool.write(tableDir, "part-compact", schema) { w =>
+          entries.foreach(e =>
+            GraftPool.foreachRow(tableDir, e, schema)((_, row) => w.write(row)))
+        }
+        val rows = merged.map(_.rows).getOrElse(0L)
         // masks are MATERIALIZED here: conservation counts live rows
         require(rows == entries.map(_.liveRows).sum,
           s"compaction row conservation violated: $rows vs ${entries.map(_.liveRows).sum}")
-        publishLocked(tableDir, Seq(ManifestEntry(newName, rows,
-          schema.length, Files.size(dst), Some(stats.result()))),
-          kind = Kind.Compact)
+        publishLocked(tableDir, merged.toSeq, kind = Kind.Compact)
       }
     }
 
@@ -877,23 +749,8 @@ object GraftCatalog {
       else {
         // read every live row (masks materialized by the rewrite)
         val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-        entries.foreach { e =>
-          val fileSchema =
-            StructType(schema.fields.take(e.colsOr(schema.length)))
-          val mask = GraftDv.cursor(tableDir, e.dv)
-          val in = new DataInputStream(new java.io.BufferedInputStream(
-            Files.newInputStream(tableDir.resolve(DataDir).resolve(e.file))))
-          try {
-            var pos = -1L
-            var row = GraftRowCodec.read(in, fileSchema)
-            while (row != null) {
-              pos += 1
-              if (!mask.masked(pos))
-                rows += padded(row, fileSchema.length, schema)
-              row = GraftRowCodec.read(in, fileSchema)
-            }
-          } finally in.close()
-        }
+        entries.foreach(e =>
+          GraftPool.foreachRow(tableDir, e, schema)((_, row) => rows += row))
         require(rows.length.toLong == entries.map(_.liveRows).sum,
           s"zorder read lost rows: ${rows.length} vs ${entries.map(_.liveRows).sum}")
         // 256 equal-height bucket boundaries per dimension (nulls sort
@@ -945,22 +802,13 @@ object GraftCatalog {
           z
         }
         val sorted = rows.map(r => (zval(r), r)).sortBy(_._1).map(_._2)
-        val types = schema.fields.map(_.dataType)
         val nOut = math.max(1, math.min(outFiles, sorted.length))
-        val out = (0 until nOut).map { i =>
+        val out = (0 until nOut).flatMap { i =>
           val lo = (i.toLong * sorted.length / nOut).toInt
           val hi = ((i + 1).toLong * sorted.length / nOut).toInt
-          val name = s"part-zorder-${UUID.randomUUID().toString.take(12)}.gbin"
-          val dst = tableDir.resolve(DataDir).resolve(name)
-          val stats = new GraftStats.Collector(schema)
-          val os = new DataOutputStream(new BufferedOutputStream(
-            Files.newOutputStream(dst)))
-          try (lo until hi).foreach { j =>
-            GraftRowCodec.write(os, types, sorted(j)); stats.update(sorted(j))
-          } finally os.close()
-          ManifestEntry(name, (hi - lo).toLong, schema.length,
-            Files.size(dst), Some(stats.result()))
-        }.filter(_.rows > 0L)
+          GraftPool.write(tableDir, "part-zorder", schema)(w =>
+            (lo until hi).foreach(j => w.write(sorted(j))))
+        }
         require(out.map(_.rows).sum == sorted.length.toLong,
           "zorder rewrite must conserve rows")
         publishLocked(tableDir, out, kind = Kind.Compact)
@@ -1285,8 +1133,7 @@ private class GraftRowLevelOperation(tableDir: String, schema: StructType,
             val (scanSeq, all, scanned) = pinned.getOrElse(
               throw new IllegalStateException(
                 "row-level write committed without a pinned scan"))
-            val staged = messages.toSeq.collect {
-              case m: GraftFileMsg if m.file.nonEmpty => m.toEntry }
+            val staged = GraftFileMsg.staged(messages)
             // a fully-skipped operation (stats proved no file could
             // match) replaces nothing — publish no version at all
             if (scanned.isEmpty && staged.isEmpty) return
@@ -1298,9 +1145,7 @@ private class GraftRowLevelOperation(tableDir: String, schema: StructType,
               if (curSeq != scanSeq) {
                 // loud serializable-conflict abort: unlink our staged
                 // files, leave the table exactly as the winner left it
-                staged.foreach(e => try Files.deleteIfExists(
-                  dir.resolve(GraftCatalog.DataDir).resolve(e.file))
-                catch { case NonFatal(_) => () })
+                GraftPool.unlinkStaged(dir, staged.map(_.file))
                 throw new IllegalStateException(
                   s"concurrent commit detected: table moved from version " +
                     s"$scanSeq to $curSeq during the row-level operation; retry")
@@ -1323,13 +1168,8 @@ private class GraftRowLevelOperation(tableDir: String, schema: StructType,
             ()
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            messages.foreach {
-              case GraftFileMsg(f, _, _, _, _) if f.nonEmpty =>
-                try Files.deleteIfExists(
-                  Paths.get(tableDir, GraftCatalog.DataDir, f))
-                catch { case NonFatal(_) => () }
-              case _ => ()
-            }
+            GraftPool.unlinkStaged(Paths.get(tableDir),
+              GraftFileMsg.staged(messages).map(_.file))
         }
         override def description(): String =
           s"graft_table_cow dir=$tableDir cmd=$cmd"
@@ -1609,20 +1449,12 @@ private class GraftReaderFactory(schema: StructType,
     }
     val fileName = UTF8String.fromString(
       Paths.get(split.path).getFileName.toString)
-    val mask = new GraftDv.Cursor(split.dvPath
-      .map(p => GraftDv.read(Paths.get(p))).getOrElse(Array.emptyLongArray))
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(split.path))))
+    val pool = new GraftPool.Reader(Paths.get(split.path), fileSchema,
+      new GraftDv.Cursor(GraftPool.mask(split.dvPath.map(Paths.get(_)))))
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
-      private var pos = -1L
       override def next(): Boolean = {
-        var full = GraftRowCodec.read(in, fileSchema)
-        pos += 1
-        while (full != null && mask.masked(pos)) {
-          full = GraftRowCodec.read(in, fileSchema)
-          pos += 1
-        }
+        val full = pool.next()
         if (full == null) false
         else {
           // projection-level pruning: the row format parses every field,
@@ -1643,7 +1475,7 @@ private class GraftReaderFactory(schema: StructType,
         }
       }
       override def get(): InternalRow = current
-      override def close(): Unit = in.close()
+      override def close(): Unit = pool.close()
     }
   }
 }
@@ -1672,20 +1504,14 @@ private class GraftWriteBuilder(tableDir: String, schema: StructType,
         override def commit(epochId: Long,
             messages: Array[WriterCommitMessage]): Unit = {
           GraftCatalog.commitVersion(Paths.get(tableDir),
-            messages.toSeq.collect {
-              case m: GraftFileMsg if m.file.nonEmpty => m.toEntry },
-            truncateFirst, Some(s"epoch-$queryId-$epochId"))
+            GraftFileMsg.staged(messages), truncateFirst,
+            Some(s"epoch-$queryId-$epochId"))
           ()
         }
         override def abort(epochId: Long,
             messages: Array[WriterCommitMessage]): Unit =
-          messages.foreach {
-            case GraftFileMsg(f, _, _, _, _) if f.nonEmpty =>
-              try Files.deleteIfExists(
-                Paths.get(tableDir, GraftCatalog.DataDir, f))
-              catch { case NonFatal(_) => () }
-            case _ => ()
-          }
+          GraftPool.unlinkStaged(Paths.get(tableDir),
+            GraftFileMsg.staged(messages).map(_.file))
       }
     override def description(): String =
       s"graft_table dir=$tableDir truncate=$truncateFirst"
@@ -1711,28 +1537,27 @@ private case class GraftFileMsg(file: String, rows: Long, cols: Int,
       Some(GraftStats.decode(statsB64)))
 }
 
+private object GraftFileMsg {
+  /** The files committed tasks staged (an empty task staged none). */
+  def staged(messages: Array[WriterCommitMessage]): Seq[GraftCatalog.ManifestEntry] =
+    messages.toSeq.collect { case m: GraftFileMsg if m.file.nonEmpty => m.toEntry }
+}
+
 private class GraftBatchWrite(tableDir: String, schema: StructType,
     truncateFirst: Boolean, commitTag: Option[String]) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GraftWriterFactory(tableDir, schema)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     GraftCatalog.commitVersion(Paths.get(tableDir),
-      messages.toSeq.collect {
-        case m: GraftFileMsg if m.file.nonEmpty => m.toEntry },
-      truncateFirst, commitTag)
+      GraftFileMsg.staged(messages), truncateFirst, commitTag)
     ()
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     // unlink what committed tasks staged; files of FAILED tasks were
     // already unlinked by their writer's abort(), and anything a crash
     // left behind is unreferenced and falls to the grace-aged sweep
-    messages.foreach {
-      case GraftFileMsg(f, _, _, _, _) if f.nonEmpty =>
-        try Files.deleteIfExists(
-          Paths.get(tableDir, GraftCatalog.DataDir, f))
-        catch { case NonFatal(_) => () }
-      case _ => ()
-    }
+    GraftPool.unlinkStaged(Paths.get(tableDir),
+      GraftFileMsg.staged(messages).map(_.file))
 }
 
 private class GraftWriterFactory(tableDir: String, schema: StructType)
@@ -1745,44 +1570,25 @@ private class GraftWriterFactory(tableDir: String, schema: StructType)
   * until the driver's commit references it from a manifest. */
 private class GraftDataWriter(tableDir: String, schema: StructType,
     partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
-  private val fileName =
-    s"part-$partitionId-$taskId-${UUID.randomUUID().toString.take(8)}.gbin"
-  private val path = Paths.get(tableDir, GraftCatalog.DataDir, fileName)
-  Files.createDirectories(path.getParent)
-  private var out: DataOutputStream =
-    new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(path)))
-  private val types = schema.fields.map(_.dataType)
-  private val stats = new GraftStats.Collector(schema)
-  private var rows = 0L
+  private val pool = new GraftPool.Writer(Paths.get(tableDir),
+    s"part-$partitionId-$taskId", schema, idChars = 8)
 
-  override def write(row: InternalRow): Unit = {
-    GraftRowCodec.write(out, types, row)
-    stats.update(row)
-    rows += 1
-  }
+  override def write(row: InternalRow): Unit = pool.write(row)
   /** Metadata-carrying write (the row-level operations' carried-over
     * rows arrive here with their origin `_file`): the metadata is
     * lineage, not content — the row lands in THIS writer's file. */
   override def write(metadata: InternalRow, row: InternalRow): Unit =
     write(row)
-  override def commit(): WriterCommitMessage = {
-    out.close(); out = null
-    if (rows == 0L) {
-      // an empty task (common under local[32] fan-out) contributes
-      // nothing: unlink the staged file, report "no file" (empty name)
-      // so the manifest never accumulates zero-row entries
-      Files.deleteIfExists(path)
-      GraftFileMsg("", 0L, schema.length, 0L, "")
-    } else
-      GraftFileMsg(fileName, rows, schema.length, Files.size(path),
-        GraftStats.encode(stats.result()))
+  override def commit(): WriterCommitMessage = pool.finish() match {
+    case Some(e) =>
+      GraftFileMsg(e.file, e.rows, e.cols, e.bytes, GraftStats.encode(e.stats.get))
+    // an empty task (common under local[32] fan-out) contributes
+    // nothing: its file is unlinked, "no file" is an empty name, so the
+    // manifest never accumulates zero-row entries
+    case None => GraftFileMsg("", 0L, schema.length, 0L, "")
   }
-  override def abort(): Unit = {
-    if (out != null) { try out.close() catch { case NonFatal(_) => () }; out = null }
-    Files.deleteIfExists(path)
-  }
-  override def close(): Unit =
-    if (out != null) { try out.close() catch { case NonFatal(_) => () }; out = null }
+  override def abort(): Unit = pool.abort()
+  override def close(): Unit = pool.close()
 }
 
 /** Evaluates pushed v1 [[org.apache.spark.sql.sources.Filter]]s against
@@ -1883,6 +1689,138 @@ private[sources] object GraftFilterEval {
   }
 }
 
+/** The POOL FILE of the graft table format, read and written in one
+  * place. A pool file is a [[GraftRowCodec]] row stream written at a
+  * recorded column width (its manifest entry's `cols`), masked by a
+  * deletion-vector ordinal cursor ([[GraftDv]]), padded to the table's
+  * width on read, and summarised by a [[GraftStats.Collector]] into its
+  * [[GraftCatalog.ManifestEntry]]. The scan and change-feed partition
+  * readers, deletes, compaction, the constraint validator and the task
+  * writers all go through [[Reader]] and [[Writer]]. */
+private[sources] object GraftPool {
+  import GraftCatalog.{DataDir, Dv, ManifestEntry}
+
+  private def file(tableDir: Path, name: String): Path =
+    tableDir.resolve(DataDir).resolve(name)
+
+  /** One pool file's rows in physical order, at the file's write-time
+    * width. `next()` returns the next row whose ordinal `skip` does not
+    * hold — with `keepSkipped`, the next one it does hold — or null at
+    * EOF; `pos` is that row's physical ordinal. */
+  final class Reader(path: Path, fileSchema: StructType,
+      skip: GraftDv.Cursor, keepSkipped: Boolean = false) {
+    private val in = new DataInputStream(new java.io.BufferedInputStream(
+      Files.newInputStream(path)))
+    private var ordinal = -1L
+    def pos: Long = ordinal
+    def next(): InternalRow = {
+      var row = GraftRowCodec.read(in, fileSchema)
+      ordinal += 1
+      while (row != null && skip.masked(ordinal) != keepSkipped) {
+        row = GraftRowCodec.read(in, fileSchema)
+        ordinal += 1
+      }
+      row
+    }
+    def close(): Unit = in.close()
+  }
+
+  /** The sorted ordinals of a DV file (empty without one). */
+  def mask(dvFile: Option[Path]): Array[Long] =
+    dvFile.map(GraftDv.read).getOrElse(Array.emptyLongArray)
+
+  /** The DV mask of a manifest entry. */
+  def mask(tableDir: Path, e: ManifestEntry): Array[Long] =
+    mask(e.dv.map(d => file(tableDir, d.file)))
+
+  /** Writes `sortedOrdinals` as a new immutable DV file. */
+  def writeMask(tableDir: Path, sortedOrdinals: Array[Long]): Dv = {
+    val name = s"part-dv-${UUID.randomUUID().toString.take(12)}.gdv"
+    GraftDv.write(file(tableDir, name), sortedOrdinals)
+    Dv(name, sortedOrdinals.length.toLong)
+  }
+
+  /** Row of the table's FULL current width from a file row of prefix
+    * width `cols` — the evolved tail stays null (ADD COLUMN contract). */
+  private def padded(row: InternalRow, cols: Int,
+      schema: StructType): InternalRow =
+    if (cols == schema.length) row
+    else {
+      val out = new GenericInternalRow(schema.length)
+      var i = 0
+      while (i < cols) {
+        out.update(i, row.get(i, schema.fields(i).dataType))
+        i += 1
+      }
+      out
+    }
+
+  /** Calls `f(pos, row)` for every row of `e` whose ordinal `skip`
+    * (default: the entry's own DV mask) does not hold, padded to
+    * `schema`'s width. */
+  def foreachRow(tableDir: Path, e: ManifestEntry, schema: StructType,
+      skip: Option[Array[Long]] = None)(f: (Long, InternalRow) => Unit): Unit = {
+    val cols = e.colsOr(schema.length)
+    val r = new Reader(file(tableDir, e.file),
+      StructType(schema.fields.take(cols)),
+      new GraftDv.Cursor(skip.getOrElse(mask(tableDir, e))))
+    try {
+      var row = r.next()
+      while (row != null) {
+        f(r.pos, padded(row, cols, schema))
+        row = r.next()
+      }
+    } finally r.close()
+  }
+
+  /** One new pool file `<namePrefix>-<id>.gbin` in the table's data dir,
+    * written at `schema`'s full width. `finish()` closes it and returns
+    * its manifest entry, or unlinks it and returns None when it holds no
+    * row; `abort()` closes and unlinks it. */
+  final class Writer(tableDir: Path, namePrefix: String, schema: StructType,
+      idChars: Int = 12) {
+    private val name =
+      s"$namePrefix-${UUID.randomUUID().toString.take(idChars)}.gbin"
+    private val path = file(tableDir, name)
+    Files.createDirectories(path.getParent)
+    private var out = new DataOutputStream(new BufferedOutputStream(
+      Files.newOutputStream(path)))
+    private val types = schema.fields.map(_.dataType)
+    private val stats = new GraftStats.Collector(schema)
+    private var rows = 0L
+
+    def write(row: InternalRow): Unit = {
+      GraftRowCodec.write(out, types, row)
+      stats.update(row)
+      rows += 1
+    }
+    def finish(): Option[ManifestEntry] = {
+      out.close(); out = null
+      if (rows == 0L) { Files.deleteIfExists(path); None }
+      else Some(ManifestEntry(name, rows, schema.length, Files.size(path),
+        Some(stats.result())))
+    }
+    def abort(): Unit = { close(); Files.deleteIfExists(path) }
+    def close(): Unit =
+      if (out != null) { try out.close() catch { case NonFatal(_) => () }; out = null }
+  }
+
+  /** Fills one new pool file on the driver; a failure unlinks it. */
+  def write(tableDir: Path, namePrefix: String, schema: StructType)(
+      fill: Writer => Unit): Option[ManifestEntry] = {
+    val w = new Writer(tableDir, namePrefix, schema)
+    try { fill(w); w.finish() }
+    catch { case NonFatal(t) => w.abort(); throw t }
+  }
+
+  /** Unlinks pool files a commit staged but will not publish (an abort
+    * or a conflict). Best effort: the orphan sweep reclaims the rest. */
+  def unlinkStaged(tableDir: Path, names: Seq[String]): Unit =
+    names.foreach(n =>
+      try Files.deleteIfExists(file(tableDir, n))
+      catch { case NonFatal(_) => () })
+}
+
 /** DELETION-VECTOR codec + streaming mask cursor. A DV file is a count
   * followed by that many SORTED physical row ordinals (longs). Readers
   * stream rows in physical order, so masking is a single forward cursor
@@ -1918,11 +1856,6 @@ private[sources] object GraftDv {
       i < sorted.length && sorted(i) == ordinal
     }
   }
-  /** A cursor for an optional DV file next to the table's data dir. */
-  def cursor(tableDir: Path, dv: Option[GraftCatalog.Dv]): Cursor =
-    new Cursor(dv.map(d =>
-      read(tableDir.resolve(GraftCatalog.DataDir).resolve(d.file)))
-      .getOrElse(Array.emptyLongArray))
 }
 
 /** Row codec of the graft table format: per row, per field in schema

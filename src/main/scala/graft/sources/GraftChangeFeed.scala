@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.DataInputStream
 import java.nio.file.{Files, Path, Paths}
 import java.util
 
@@ -309,32 +308,21 @@ private class GraftChangeReaderFactory(tableSchema: StructType,
     }
     val tag = UTF8String.fromString(split.changeType)
     val tsMicros: Any = if (split.tsMs > 0L) split.tsMs * 1000L else null
-    // emit(pos): delta mode emits exactly the newly masked ordinals
-    // (new DV minus old DV); normal mode emits everything the mask
-    // (rows dead BEFORE this commit) does not cover
-    val emit: GraftDv.Cursor = split.deltaDv match {
+    // delta mode emits exactly the newly masked ordinals (new DV minus
+    // old DV); normal mode emits everything the mask (rows dead BEFORE
+    // this commit) does not cover
+    val skip: Array[Long] = split.deltaDv match {
       case Some((oldDv, newDv)) =>
-        val old = oldDv.map(p => GraftDv.read(Paths.get(p)))
-          .getOrElse(Array.emptyLongArray).toSet
-        new GraftDv.Cursor(
-          GraftDv.read(Paths.get(newDv)).filterNot(old.contains))
-      case None => new GraftDv.Cursor(split.maskDv
-        .map(p => GraftDv.read(Paths.get(p))).getOrElse(Array.emptyLongArray))
+        val old = GraftPool.mask(oldDv.map(Paths.get(_))).toSet
+        GraftPool.mask(Some(Paths.get(newDv))).filterNot(old.contains)
+      case None => GraftPool.mask(split.maskDv.map(Paths.get(_)))
     }
-    val deltaMode = split.deltaDv.isDefined
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(split.path))))
+    val pool = new GraftPool.Reader(Paths.get(split.path), fileSchema,
+      new GraftDv.Cursor(skip), keepSkipped = split.deltaDv.isDefined)
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
-      private var pos = -1L
       override def next(): Boolean = {
-        var full = GraftRowCodec.read(in, fileSchema)
-        pos += 1
-        // delta mode: keep ordinals IN the delta; normal: keep those OUT
-        while (full != null && emit.masked(pos) != deltaMode) {
-          full = GraftRowCodec.read(in, fileSchema)
-          pos += 1
-        }
+        val full = pool.next()
         if (full == null) false
         else {
           val out = new GenericInternalRow(ordinals.length)
@@ -355,7 +343,7 @@ private class GraftChangeReaderFactory(tableSchema: StructType,
         }
       }
       override def get(): InternalRow = current
-      override def close(): Unit = in.close()
+      override def close(): Unit = pool.close()
     }
   }
 }

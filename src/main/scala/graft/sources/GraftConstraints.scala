@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.io.DataInputStream
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Not, Or}
@@ -253,41 +252,28 @@ private[sources] object GraftConstraints {
       e: GraftCatalog.ManifestEntry, checks: Seq[Check],
       nonNullable: Seq[String]): Unit = {
     scannedFiles += 1L
-    val fileSchema = StructType(schema.fields.take(e.colsOr(schema.length)))
     // a NOT NULL column outside an old file's width would be all-null —
     // but ADD COLUMN is nullable-only, so it cannot be declared NOT NULL
-    val nn = nonNullable.filter(a => fileSchema.fieldNames.contains(a))
-    val mask = GraftDv.cursor(tableDir, e.dv)
-    var pos = -1L
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(tableDir.resolve(GraftCatalog.DataDir).resolve(e.file))))
-    try {
-      var row = GraftRowCodec.read(in, fileSchema)
-      while (row != null) {
-        pos += 1
-        if (mask.masked(pos)) { row = GraftRowCodec.read(in, fileSchema) }
-        else {
-        nn.foreach { a =>
-          if (row.isNullAt(fileSchema.fieldIndex(a)))
+    val cols = e.colsOr(schema.length)
+    val nn = nonNullable.filter(a => schema.fieldIndex(a) < cols)
+    // conjuncts outside an old file's width: the value is null by
+    // evolution, and null passes CHECK — rows arrive padded
+    GraftPool.foreachRow(tableDir, e, schema) { (_, row) =>
+      nn.foreach { a =>
+        if (row.isNullAt(schema.fieldIndex(a)))
+          throw new IllegalStateException(
+            s"NOT NULL violation: column $a is null in a row of ${e.file}; " +
+              "the commit is aborted and the table unchanged")
+      }
+      checks.foreach { c =>
+        c.conjuncts.foreach { conj =>
+          if (violates(conj, row, schema))
             throw new IllegalStateException(
-              s"NOT NULL violation: column $a is null in a row of ${e.file}; " +
+              s"$c violated by a row of ${e.file}; " +
                 "the commit is aborted and the table unchanged")
         }
-        checks.foreach { c =>
-          // conjuncts outside an old file's width: the value is null by
-          // evolution, and null passes CHECK — evaluate on the padded row
-          val full = GraftCatalog.padded(row, fileSchema.length, schema)
-          c.conjuncts.foreach { conj =>
-            if (violates(conj, full, schema))
-              throw new IllegalStateException(
-                s"$c violated by a row of ${e.file}; " +
-                  "the commit is aborted and the table unchanged")
-          }
-        }
-        row = GraftRowCodec.read(in, fileSchema)
-        }
       }
-    } finally in.close()
+    }
   }
 
 }

@@ -435,4 +435,25 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.t2").head().getLong(0) == 2)
     intercept[Exception] { spark.sql(s"SELECT * FROM $cat.t").collect() }
   }
+
+  test("pool-file bytes are read and written only through GraftPool") {
+    // main source with the GraftPool object cut out of GraftCatalog.scala
+    // (the codec, DV and stats objects call their own members unqualified)
+    val outside = graft.MainSources.files.map { p =>
+      val code = graft.MainSources.code(p)
+      val at = code.indexOf("object GraftPool {")
+      p.getFileName.toString ->
+        (if (at < 0) code
+         else code.substring(0, at) + code.substring(code.indexOf("\n}\n", at)))
+    }
+    assert(outside.exists(_._2.contains("GraftPool.Reader")),
+      "no caller of GraftPool found; the scan is void")
+    for (needle <- Seq("GraftRowCodec.read(", "GraftRowCodec.write(",
+        "GraftDv.cursor(", "GraftDv.read(", "GraftDv.write(",
+        "new GraftStats.Collector(")) {
+      val offenders = outside.collect { case (f, c) if c.contains(needle) => f }
+      assert(offenders.isEmpty,
+        s"$needle outside GraftPool: ${offenders.mkString(", ")}")
+    }
+  }
 }
