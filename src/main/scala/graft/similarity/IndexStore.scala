@@ -104,9 +104,9 @@ object IndexStore {
   /** NON-PUBLISHING resolve mode (round 15, VERDICT r14 #2): within
     * `nonPublishing { ... }`, [[ensure]] resolves whatever version is
     * CURRENTLY published — regardless of which sf dir built it — instead
-    * of rebuilding on a marker mismatch, and the snapshot-stress queries
-    * return their pure-scan read plans instead of re-running their commit
-    * storms. This is the plan-ledger path: a plan DIGEST needs the read
+    * of rebuilding on a marker mismatch, and the commit-managed queries
+    * read their published versions instead of re-committing. This is the
+    * plan-ledger path: a plan DIGEST needs the read
     * plan's operator shape (sf-independent), not fresh data, and a ledger
     * regeneration must never swap artifacts under a concurrent
     * verify/bench session at another scale factor. Only when NOTHING is
@@ -116,27 +116,13 @@ object IndexStore {
   @volatile private var nonPublishingMode = false
 
   /** Is the non-publishing resolve mode active? Queried by the
-    * snapshot-protocol stress queries to substitute their pure read
-    * plans for the commit storm under the plan ledger. */
+    * commit-managed queries to read, not re-commit, under the plan
+    * ledger. */
   def nonPublishingActive: Boolean = nonPublishingMode
 
   def nonPublishing[A](body: => A): A = {
     nonPublishingMode = true
     try body finally nonPublishingMode = false
-  }
-
-  /** Escape hatch for a nonPublishing caller that found the SERVED
-    * artifact unusable (round 16, ADVICE r15: under the ledger's resolve
-    * mode [[ensure]] may hand back another build's manifest whose
-    * recorded file paths no longer exist — nothing usable is being
-    * served, so publishing a fresh build is strictly better than
-    * crashing the ledger run). Restores the prior mode; the flag is a
-    * process-wide volatile, which is sound because the ledger runs
-    * queries sequentially on one thread. */
-  private[graft] def withPublishing[A](body: => A): A = {
-    val prev = nonPublishingMode
-    nonPublishingMode = false
-    try body finally nonPublishingMode = prev
   }
 
   /** PHYSICAL version GC of `name` under the caller's grace (round 16,
@@ -231,26 +217,11 @@ object IndexStore {
           if (Files.exists(Paths.get(out))) deleteRecursively(Paths.get(out))
           Files.move(Paths.get(tmp), Paths.get(out),
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          // the marker carries a unique BUILD ID: derived artifacts (the
-          // stats manifests) key their ensure on it, so a layout rebuild
-          // — same sf, new part-file names — invalidates them instead of
-          // leaving them pointing at deleted files (see [[buildId]])
-          Files.writeString(marker, java.util.UUID.randomUUID().toString.take(12))
+          Files.writeString(marker, "")
         }
       }
     out
   }
-
-  /** The build identity of a [[buildOnce]] artifact — the marker's
-    * content ("" for a legacy empty marker, which still forces one
-    * manifest rebuild on first contact because the ensure key changes
-    * shape). Derived artifacts append this to their ensure `dir` key:
-    * two builds of the same layout at the same sf are DIFFERENT
-    * artifacts (their file names differ), and a manifest must never
-    * outlive the exact build it indexed. */
-  def buildId(out: String): String =
-    try Files.readString(Paths.get(out, "_COMPLETE")).trim
-    catch { case NonFatal(_) => "" }
 
   /** Resolve the published version of `name` iff its in-directory marker
     * matches `want`. Returns the immutable REAL path, never the pointer. */
@@ -269,8 +240,8 @@ object IndexStore {
     val want = Paths.get(dir).normalize().toString
     if (nonPublishingMode) {
       // ledger path: prefer the version whose marker matches THIS key
-      // (right sf + right build — its recorded content is valid by
-      // construction); only when no match is published, scan whatever is
+      // (right sf — its recorded content is valid by construction);
+      // only when no match is published, scan whatever is
       // current (plan shape is key-independent). Fall through to a real
       // (publishing) build only when nothing exists at all.
       val matched = try published(name, want) catch { case NonFatal(_) => None }
@@ -286,20 +257,6 @@ object IndexStore {
         published(name, want).getOrElse(buildAndPublish(name, want, build))
       }
     }
-    spark.read.parquet(real.toString)
-  }
-
-  /** [[ensure]] minus the published fast path: rebuild and swap
-    * UNCONDITIONALLY under the per-name lock. For the caller that has
-    * just VALIDATED the served version and found it unusable (recorded
-    * file paths dead) with the marker still matching — ensure's fast
-    * path would re-serve the same dead version forever; this forces the
-    * one rebuild that heals it (or fails loudly in the build if the
-    * underlying data is gone too, which beats serving dead paths). */
-  def republish(spark: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    val want = Paths.get(dir).normalize().toString
-    val real = withPerNameLock(name) { buildAndPublish(name, want, build) }
     spark.read.parquet(real.toString)
   }
 

@@ -1,13 +1,15 @@
 package graft.sources
 
 import java.io.File
+import java.nio.file.{Path, Paths}
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, TempDirs}
-import graft.similarity.IndexStore.{buildId, buildOnce}
+import graft.similarity.IndexStore.buildOnce
 
 /** Source-format coverage beyond parquet/JSON: ORC and CSV ingestion,
   * verified by ROUND-TRIP parity — each query materializes a lineitem
@@ -198,10 +200,12 @@ object Formats {
   /** Inserts ids [0, 12000) SCATTERED by a modular bijection
     * (i·2654435761 mod 12000 — the multiplier is coprime to 12000), so
     * every writer task's file spans essentially the full id and score
-    * ranges: min/max skipping is provably useless on the result. */
+    * ranges: min/max skipping is provably useless on the result. The 4
+    * pinned slices land 4 files at any core count (see [[rowsSql]]), so
+    * the callers' `>= 4` striped-file requirement holds on 2 cores too. */
   private def scatterInsert(spark: SparkSession, table: String): Unit =
-    spark.sql(s"INSERT INTO $table\n" +
-      hashedRows("(SELECT (i * 2654435761) % 12000 AS id FROM range(0, 12000) t(i))"))
+    spark.sql(s"INSERT INTO $table\n" + hashedRows(
+      "(SELECT (i * 2654435761) % 12000 AS id FROM range(0, 12000, 1, 4) t(i))"))
 
   /** (files scanned, files in the manifest) of the graft scan in `q`'s
     * executed plan — the `files=K/N` of its description. */
@@ -961,98 +965,68 @@ object Formats {
       .orderBy("len_bucket")
   }
 
-  /** Compaction target file size. 8 MiB keeps the sf0.1 copy at a few
-    * files and the small SFs at one; a production lake would set
-    * 128 MiB–1 GiB — the budget is the knob, the mechanism is
-    * identical. */
-  val TargetFileBytes: Long = 8L << 20
-
-  /** Test hook: drop the per-JVM memo for `dir`'s compaction so a spec
-    * can force the commit path to re-run (the IndexStore reuse check
-    * still applies — wipe the artifact too to force a real rewrite). */
-  private[graft] def resetCompactionFor(dir: String): Unit =
-    materialized.remove(s"$dir#compact")
-
-  /** Test hook: drop the per-JVM layout memos for `dir` so a spec can
-    * simulate a fresh process rebuilding a wiped physical layout. */
-  private[graft] def resetLayoutsFor(dir: String): Unit = {
-    materialized.remove(s"$dir#zlayout")
-    materialized.remove(s"$dir#hlayout")
+  /** The per-process graft table `<what>_<sf>` under [[catalogRoot]]: its
+    * SQL name (catalog registered on `spark`) and its directory. Two
+    * scale factors never share a table. */
+  private[graft] def srcTable(spark: SparkSession, what: String,
+      dir: String): (String, Path) = {
+    val name = s"${what}_${sfTag(dir).replaceAll("[^A-Za-z0-9]", "_")}"
+    (s"${ensureCatalog(spark)}.$name", Paths.get(catalogRoot, name))
   }
 
-  /** The sf-scoped commit-managed artifact name of `dir`'s compaction
-    * lineage — exposed so specs assert against the exact name. */
-  private[graft] def compactionName(dir: String): String =
-    s"compact_docs_${sfTag(dir)}"
+  /** Tables whose one-time landing has run in this process. */
+  private val landed = scala.collection.mutable.Set.empty[String]
 
-  /** Fragments documents into 64 small files, then compacts by size
-    * budget. Round 15 (VERDICT r14 #5): BOTH layouts land through
-    * `IndexStore.commit` — compaction was the one layout-rewriting
-    * operation not behind the snapshot protocol, so a concurrent reader
-    * could catch a half-compacted directory under a bare marker, and the
-    * rewrite was invisible to time travel. Now the fragmented layout is
-    * version v1 and the compacted rewrite is version v2 with v1 as its
-    * `_GRAFT_PREV`: readers resolve one complete immutable version
-    * (either pre- or post-compaction, never a mixture), and
-    * `previousVersion` time-travels to the pre-compaction layout — the
-    * audit read a table format's OPTIMIZE keeps. Idempotent per sf dir:
-    * a current version tagged `compacted` with its predecessor on disk
-    * is recognized and reused, so the rewrite cost is paid once.
-    * Returns (fragmented, compacted) version paths so the spec can
-    * assert the file-count reduction and the lineage. */
-  def compactionDirs(spark: SparkSession, dir: String): (String, String) = {
-    import graft.similarity.IndexStore
-    val name = compactionName(dir)
-    val pair = materialized.getOrElseUpdate(s"$dir#compact", {
-      val reuse = for {
-        cur <- IndexStore.currentVersion(name)
-        if IndexStore.currentTag(name).contains("compacted")
-        prev <- IndexStore.previousVersion(name)
-      } yield (prev.toString, cur.toString)
-      val (frag, out) = reuse.getOrElse {
-        // same fail-fast as snapshotHistory (ADVICE r15): a published-but-
-        // intermediate state (crashed lineage) must not trigger a commit
-        // storm under nonPublishing — that swaps the pointer under any
-        // concurrent session, the churn the mode exists to prevent
-        if (IndexStore.nonPublishingActive && IndexStore.currentVersion(name).isDefined)
-          throw new IllegalStateException(
-            s"'$name' is published but not in the 'compacted' state " +
-              "(crashed lineage?) — refusing to re-commit under nonPublishing")
-        val fragPath = IndexStore.commit(name, "fragmented")(
-          Tables(spark, dir, "documents").repartition(64))
-        val bytes = Option(fragPath.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("part-")).map(_.length).sum
-        val nOut = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes).toInt
-        // coalesce, not repartition: compaction reads many splits and
-        // writes few without a shuffle
-        val outPath = IndexStore.commit(name, "compacted")(
-          spark.read.parquet(fragPath.toString).coalesce(nOut))
-        (fragPath.toString, outPath.toString)
-      }
-      s"$frag\n$out"
-    }).split('\n')
-    (pair(0), pair(1))
+  /** Runs `land` for `table` once per process, under one lock: the first
+    * caller lands the table, every later call only reads it. */
+  private def landOnce(table: String)(land: => Unit): Unit =
+    landed.synchronized {
+      if (!landed(table)) { land; landed += table }
+    }
+
+  /** (Re)creates `table` from `df` with ONE pool file per value of its
+    * int column `chunk` (in [0, n)), which the table does not keep. A
+    * graft writer task writes one file and an empty task none, so every
+    * chunk needs a task of its own: an RDD `HashPartitioner(n)` sends
+    * int key k to partition k exactly, where `repartition(n, col)`
+    * hashes with Murmur3 (two chunks can share a task) and
+    * `repartitionByRange` samples its bounds. */
+  private def createChunked(spark: SparkSession, table: String,
+      df: DataFrame, n: Int): Unit = {
+    val data = df.drop("chunk")
+    val rows = df.select(col("chunk").cast("int") +: data.columns.map(col): _*)
+      .rdd.keyBy(_.getInt(0)).partitionBy(new HashPartitioner(n))
+      .values.map(r => Row.fromSeq(r.toSeq.tail))
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.createDataFrame(rows, data.schema).writeTo(table).create()
   }
 
-  /** Small-file compaction (the OPTIMIZE pass): documents first
-    * fragmented into 64 tiny files — the pathological layout streaming
-    * ingest leaves behind — then rewritten into size-budgeted files via
-    * `coalesce` (a shuffle-free rewrite: compaction reads many splits
-    * and writes few, it never needs a repartition unless re-clustering
-    * is requested). At 100 TB this pass is what keeps scan task counts
-    * and NameNode/object-store listings sane. The registered result is
-    * the content census of the COMPACTED copy against the
-    * original-table oracle, so row fidelity of the rewrite is under the
-    * hash; the ≥8× file-count reduction itself is asserted in
-    * FormatsSpec. */
+  /** Small-file COMPACTION (the OPTIMIZE pass) on a graft table:
+    * documents land as 64 pool files — the pathological layout streaming
+    * ingest leaves behind — then [[GraftCatalog.compact]] rewrites them
+    * into one file behind the same pointer swap, and the fragmented
+    * commit stays readable by `VERSION AS OF`. At 100 TB this pass is
+    * what keeps scan task counts and object-store listings sane. The
+    * registered result is the content census of the compacted table
+    * against the original-table oracle, so row fidelity of the rewrite
+    * is under the hash; FormatsSpec pins the 64 → 1 file drop and the
+    * lineage. Landed once per process and sf. */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val (_, out) = compactionDirs(spark, dir)
-    spark.read.parquet(out)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_chars").as("sum_chars"),
-        countDistinct("doc_id").as("n_ids"))
-      .orderBy("source")
+    val (t, tdir) = srcTable(spark, "compaction", dir)
+    landOnce(t)(landCompaction(spark, dir, t, tdir))
+    spark.sql(
+      s"""SELECT source, count(*) AS n_docs, sum(n_chars) AS sum_chars,
+         |  count(DISTINCT doc_id) AS n_ids
+         |FROM $t GROUP BY source ORDER BY source""".stripMargin)
+  }
+
+  /** (Re)creates `table` at `tdir` as documents in 64 pool files (one
+    * append commit), then compacts it (one compact commit). */
+  private[graft] def landCompaction(spark: SparkSession, dir: String,
+      table: String, tdir: Path): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    Tables(spark, dir, "documents").repartition(64).writeTo(table).create()
+    GraftCatalog.compact(tdir)
   }
 
   /** The deterministic right-to-be-forgotten set: every 97th user. A
@@ -1060,60 +1034,35 @@ object Formats {
     * DuckDB oracle re-derives the set exactly. */
   val ForgetModulus = 97L
 
-  /** DELETE PROPAGATION through the snapshot protocol (round 15
-    * superset — the GDPR / right-to-be-forgotten shape every lakehouse
-    * runs): the keyed event projection is committed as version `full`,
-    * then the forget-set's rows are removed by ANTI-JOIN rewrite and
-    * the result committed as version `forgotten` with `full` as its
-    * `_GRAFT_PREV`. Readers racing the delete resolve one complete
-    * version (the snapshot guarantee); the registered census runs over
-    * the CURRENT version, and its oracle recomputes from the base table
-    * with the forget predicate — so a row that survived the delete, a
-    * lost innocent row, or a census over the wrong version all
-    * hash-mismatch. FormatsSpec pins the protocol half the oracle can't
-    * see: zero forgotten users in current, the pre-delete version still
-    * on the lineage for audit. COMPLIANCE NOTE (the part that matters
-    * at 100 TB): the predecessor version IS the deletion's audit trail
-    * and also still contains the data — production sets this name's GC
-    * grace to the compliance window, after which the superseded full
-    * version is collected and the deletion becomes physical; here the
-    * default grace keeps it visible to the spec. The anti-join rewrite
-    * is the whole-table spelling; a partitioned deployment prunes the
-    * rewrite to the files whose stats overlap the forget keys (the
-    * [[zorderSkipping]] manifest mechanism), which is exactly how
-    * deletion vectors / OPTIMIZE-style rewrites bound the cost. */
-  def forgetUser(spark: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.IndexStore
-    val name = s"forget_events_${sfTag(dir)}"
-    def events = Tables(spark, dir, "events")
+  /** The keyed event projection the forget queries delete from. */
+  private def forgetEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val reuse = for {
-      cur <- IndexStore.currentVersion(name)
-      if IndexStore.currentTag(name).contains("forgotten")
-      _ <- IndexStore.previousVersion(name)
-    } yield cur
-    val current = reuse.getOrElse {
-      // fail-fast under the ledger, as snapshotHistory/compactionDirs do:
-      // never swap a published pointer from a nonPublishing run
-      if (IndexStore.nonPublishingActive && IndexStore.currentVersion(name).isDefined)
-        throw new IllegalStateException(
-          s"'$name' is published but not in the 'forgotten' state " +
-            "(crashed lineage?) — refusing to re-commit under nonPublishing")
-      val full = IndexStore.commit(name, "full")(events)
-      // the forget list as a TABLE (the request shape), anti-joined —
-      // never a NOT IN subquery that would re-scan per row
-      val forget = events.select(col("user_id"))
-        .filter(col("user_id") % ForgetModulus === 0).distinct()
-      IndexStore.commit(name, "forgotten")(
-        spark.read.parquet(full.toString)
-          .join(broadcast(forget), Seq("user_id"), "left_anti"))
+
+  /** DELETE PROPAGATION on a graft table (the GDPR /
+    * right-to-be-forgotten shape every lakehouse runs): the keyed event
+    * projection lands as one commit, then `DELETE ... WHERE user_id % 97
+    * = 0` — a row-level copy-on-write, a modulus being no stats-skippable
+    * filter — publishes the survivors as the next version. The census
+    * runs over the current version and its oracle recomputes from the
+    * base table under the forget predicate, so a surviving forgotten row,
+    * a lost innocent one or a census over the wrong version
+    * hash-mismatches. FormatsSpec pins zero forgotten users in current
+    * and the pre-delete version still readable by `VERSION AS OF` — the
+    * audit trail, which holds the data until VACUUM; [[forgetGc]] is the
+    * physical reclaim. Landed once per process and sf. */
+  def forgetUser(spark: SparkSession, dir: String): DataFrame = {
+    val (t, _) = srcTable(spark, "forget_user", dir)
+    landOnce(t) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      forgetEvents(spark, dir).writeTo(t).create()
+      spark.sql(s"DELETE FROM $t WHERE user_id % $ForgetModulus = 0")
     }
-    spark.read.parquet(current.toString)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_val"))
-      .orderBy("event_type")
+    spark.sql(
+      s"""SELECT event_type, count(*) AS n_rows,
+         |  count(DISTINCT user_id) AS n_users,
+         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
+         |FROM $t GROUP BY event_type ORDER BY event_type""".stripMargin)
   }
 
   /** The pruned delete's forget range: the 1/32nd-of-key-space bucket
@@ -1125,87 +1074,48 @@ object Formats {
     * from the same extremum. */
   def forgetBucket32(maxu: Long): Long = maxu * 32 / (maxu + 1)
 
-  /** FILE-GRANULAR copy-on-write DELETE (round 15 superset — the
-    * production spelling [[forgetUser]]'s doc promises): the event
-    * projection lives as 16 user-bucketed files; a forget request for a
-    * user-id RANGE consults the bucket arithmetic (≙ the per-file stats
-    * manifest) and REWRITES ONLY the one file whose range overlaps —
-    * every other file is carried into the new layout by HARDLINK, the
-    * local spelling of a table-format manifest that re-references the
-    * previous version's unchanged data files. This is how a deletion at
-    * 100 TB costs O(files containing the keys), not O(table): the
-    * registered row reports (files_total, files_rewritten) next to the
-    * post-delete census, the oracle re-derives all of it from the
-    * bucket arithmetic and the forget predicate (rewriting one file too
-    * many or too few hash-mismatches), and FormatsSpec pins the
-    * physical claim the oracle can't see — untouched files in the new
-    * layout are the SAME inodes as the old one's, and the rewritten
-    * bucket holds exactly its kept rows. */
+  /** FILE-GRANULAR copy-on-write DELETE: the event projection lands as
+    * one pool file per user bucket `ub` (16ths of the key space), and the
+    * forget request for the [[forgetBucket32]] range is a key-range
+    * `DELETE` whose per-file stats skip every file but the overlapping one
+    * — only it is rewritten, the rest carry over BY REFERENCE, so a
+    * deletion at 100 TB costs O(files containing the keys), not O(table).
+    * The row reports files_total (the pre-delete manifest's entries) and
+    * files_rewritten (those the new manifest does not carry over) next to
+    * the post-delete census; the oracle re-derives all of it from the
+    * bucket arithmetic, and FormatsSpec pins the carried file names and
+    * the rewritten file's content. Landed once per process and sf. */
   def forgetPruned(spark: SparkSession, dir: String): DataFrame = {
-    val maxu = Tables(spark, dir, "events")
-      .agg(max("user_id")).collect()(0).getLong(0)
-    val base = buildOnce(s"/tmp/graft-src-ufull-${sfTag(dir)}") { tmp =>
-      Tables(spark, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .withColumn("ub", expr(s"CAST((user_id * 16) div (${maxu + 1}L) AS INT)"))
-        .repartition(col("ub"))
-        .write.mode("overwrite").partitionBy("ub").parquet(tmp)
+    val (t, tdir) = srcTable(spark, "forget_pruned", dir)
+    landOnce(t) {
+      val maxu = Tables(spark, dir, "events")
+        .agg(max("user_id")).collect()(0).getLong(0)
+      createChunked(spark, t, forgetEvents(spark, dir)
+        .withColumn("chunk", expr(s"(user_id * 16) div (${maxu + 1}L)")), 16)
+      // (user_id * 32) div (maxu + 1) = fb32 as the key range
+      // [ceil(fb32 (maxu+1) / 32), ceil((fb32+1) (maxu+1) / 32))
+      def key(b: Long): Long = (b * (maxu + 1) + 31) / 32
+      val fb32 = forgetBucket32(maxu)
+      spark.sql(
+        s"DELETE FROM $t WHERE user_id >= ${key(fb32)} AND user_id < ${key(fb32 + 1)}")
     }
-    val fb32 = forgetBucket32(maxu)
-    val forgetPred = s"(user_id * 32) div (${maxu + 1}L) = $fb32"
-    // the per-chunk stats (the manifest): min/max user id per bucket
-    // file, ONE metadata-sized pass — the rewrite decision is the same
-    // monotone-bucket overlap test the skipping harnesses run, so a
-    // chunk is rewritten iff its stats box can contain forget-range rows
-    val stats = spark.read.parquet(base)
-      .groupBy("ub").agg(min("user_id").as("lo"), max("user_id").as("hi"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    def overlaps(lo: Long, hi: Long): Boolean =
-      hi * 32 / (maxu + 1) >= fb32 && lo * 32 / (maxu + 1) <= fb32
-    val rewriteSet = stats.collect { case (b, lo, hi) if overlaps(lo, hi) => b }.toSet
-    // the derived layout's path carries the BASE's build id (round 16,
-    // ADVICE r15): uforgot hardlinks the base's part files, so a base
-    // rebuild (same sf, new inodes) must invalidate it — a reused pruned
-    // layout over a rebuilt base would keep hardlinks to orphaned inodes
-    // and break the inode-identity property FormatsSpec pins
-    val pruned = buildOnce(
-        s"/tmp/graft-src-uforgot-${sfTag(dir)}-${buildId(base)}") { tmp =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
-      val chunks = Option(new File(base).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("ub=")).sortBy(_.getName)
-      chunks.foreach { d =>
-        val bucket = d.getName.stripPrefix("ub=").toInt
-        val dst = java.nio.file.Paths.get(tmp, d.getName)
-        if (rewriteSet.contains(bucket)) {
-          spark.read.parquet(d.toString)
-            .filter(expr(s"NOT ($forgetPred)"))
-            .coalesce(1).write.mode("overwrite").parquet(dst.toString)
-        } else {
-          java.nio.file.Files.createDirectories(dst)
-          Option(d.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith("part-"))
-            .foreach(f => java.nio.file.Files.createLink(
-              dst.resolve(f.getName), f.toPath))
-        }
-      }
-    }
-    // report: the rewrite-prune counts next to the post-delete census;
-    // the oracle re-derives every column (stats test included)
-    spark.read.parquet(pruned)
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_val"))
-      .select(lit(stats.length.toLong).as("files_total"),
-        lit(rewriteSet.size.toLong).as("files_rewritten"),
-        col("n_rows"), col("n_users"), col("sum_val"))
+    val loaded = GraftCatalog.findVersionBySeq(tdir, "1")
+      .map(GraftCatalog.readManifest)
+      .getOrElse(throw new IllegalStateException(s"$t lost its pre-delete version"))
+    val carried = GraftCatalog.currentManifest(tdir).map(_.file).toSet
+    val rewritten = loaded.count(e => !carried(e.file))
+    spark.sql(
+      s"""SELECT ${loaded.size}L AS files_total, ${rewritten}L AS files_rewritten,
+         |  count(*) AS n_rows, count(DISTINCT user_id) AS n_users,
+         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
+         |FROM $t""".stripMargin)
   }
 
   /** PHYSICAL GDPR reclaim (round 16, VERDICT r15 #3 — the phase
     * [[forgetUser]]'s compliance note promises): the logical delete
-    * lands exactly like `src_forget_user` (commit `full`, anti-join,
-    * commit `forgotten` with `full` as its lineage predecessor), then
-    * the COMPLIANCE WINDOW EXPIRES — spelled as a zero-grace
+    * lands through the index store's snapshot protocol (commit `full`,
+    * anti-join, commit `forgotten` with `full` as its lineage
+    * predecessor), then the COMPLIANCE WINDOW EXPIRES — spelled as a zero-grace
     * [[graft.similarity.IndexStore.gc]] on this name — and the
     * superseded `full` version, the last physical copy of the forgotten
     * rows, is UNLINKED. The registered row reports the protocol's three
@@ -1217,15 +1127,18 @@ object Formats {
     * census from the base table under the forget predicate and pins the
     * three protocol constants; FormatsSpec pins the half the oracle
     * can't see — the predecessor's directory is actually gone from disk
-    * while the current version's content is unchanged. Uses its OWN
-    * commit name: `src_forget_user` deliberately keeps its predecessor
-    * as the audit trail (its spec pins that), this query deliberately
-    * destroys its own — the two halves of the GDPR lifecycle. */
+    * while the current version's content is unchanged.
+    * `src_forget_user` deliberately keeps its predecessor as the audit
+    * trail (its spec pins that), this query deliberately destroys its
+    * own — the two halves of the GDPR lifecycle. It stays on the index
+    * store, not a graft table: [[GraftCatalog.vacuum]] keeps unreferenced
+    * pool files for at least [[GraftCatalog.GraceMs]] to protect files
+    * in-flight writers have staged, so it cannot unlink the forgotten
+    * bytes at once. */
   def forgetGc(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.IndexStore
     val name = s"forget_gc_events_${sfTag(dir)}"
-    def events = Tables(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+    def events = forgetEvents(spark, dir)
     // ledger path: with a published current, digest the pure scan (the
     // gc drama is the correctness gate's and FormatsSpec's business)
     val alreadyDone = IndexStore.currentTag(name).contains("forgotten")
@@ -1282,45 +1195,45 @@ object Formats {
       .groupBy("user_id").agg(count(lit(1)).as("n_events"))
       .withColumn("version", lit(v.toLong))
 
-  /** Transactional snapshot target (round 13, VERDICT r12 #7 — the
-    * manifest-snapshot protocol generalized from the trained-index store):
-    * a writer lands three GROWING versions of a keyed table through
-    * `IndexStore.commit` (immutable version dir + atomic symlink swap +
-    * grace GC — the essence of a Delta/Iceberg snapshot commit), while a
-    * concurrent reader thread hammers `readCurrent` the whole time. Every
-    * read must be ONE complete version — a single `version` tag and that
-    * version's exact row count — or the query throws and the correctness
-    * gate goes red; the registered result is the final snapshot, whose
-    * oracle recomputes version 3 (= the full events table) from the base
-    * table. At 100 TB the writer is a MERGE/OVERWRITE transaction and the
-    * reader is any concurrent job: the guarantee under test — no torn,
-    * mixed, or half-committed scans, ever — is the one a table format
-    * exists to provide. */
+  /** Re-creates the graft census table `<what>_<sf>` with census
+    * version 1 as its first commit; [[commitCensus]] lands the next. */
+  private def freshCensus(spark: SparkSession, dir: String, what: String): String = {
+    val (t, _) = srcTable(spark, what, dir)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (user_id BIGINT, n_events BIGINT, version BIGINT)")
+    commitCensus(spark, dir, t, 1)
+    t
+  }
+
+  /** Commits census version `v` to `table` by INSERT OVERWRITE — commit
+    * seq `v` of a [[freshCensus]] table. */
+  private def commitCensus(spark: SparkSession, dir: String, table: String,
+      v: Int): Unit =
+    userCensusVersion(spark, dir, v).writeTo(table).overwrite(lit(true))
+
+  /** Transactional snapshot target — no torn, mixed or half-committed
+    * scans, ever: a writer lands three GROWING versions of a keyed graft
+    * table by INSERT OVERWRITE (staged files + atomic pointer swap), while a concurrent reader thread hammers
+    * `SELECT version, count(*) ... GROUP BY version` the whole time.
+    * Every read must be ONE complete version — a single `version` tag and
+    * that version's exact row count — or the query throws and the
+    * correctness gate goes red; the registered result is the final
+    * snapshot, whose oracle recomputes version 3 (= the full events
+    * table) from the base table. The deferred-read guarantee rides
+    * along: version 1, two commits behind, must still scan completely
+    * by `VERSION AS OF`. At 100 TB the writer is a MERGE/OVERWRITE
+    * transaction and the reader is any concurrent job. */
   def snapshotReader(spark: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.IndexStore
-    // SF-SCOPED name (ADVICE r13): the reader compares row counts against
-    // THIS run's expected map — a concurrent driver process at another
-    // scale factor committing under the same name would otherwise hand it
-    // a complete-but-differently-sized version and red the gate spuriously
-    val name = s"snap_user_counts_${sfTag(dir)}"
-    // Plan-ledger path (round 15, VERDICT r14 #2): under the non-publishing
-    // resolve mode the REGISTERED plan — the final pure scan of the current
-    // published snapshot — digests without re-running the commit storm,
-    // whose isolation assertions live in the correctness gate and
-    // SnapshotCommitSpec, not the ledger. Falls through (and publishes
-    // once) only when nothing is on disk yet.
-    if (IndexStore.nonPublishingActive && IndexStore.currentVersion(name).isDefined)
-      return IndexStore.readCurrent(spark, name).orderBy("user_id")
-    def version(v: Int): DataFrame = userCensusVersion(spark, dir, v)
-    val expected = (1 to 3).map(v => v.toLong -> version(v).count()).toMap
-    val first = IndexStore.commit(name, "v1")(version(1))
+    val expected = (1 to 3).map(v =>
+      v.toLong -> userCensusVersion(spark, dir, v).count()).toMap
+    val t = freshCensus(spark, dir, "snap_reader")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val torn = new java.util.concurrent.atomic.AtomicReference[String](null)
     val reader = new Thread(() => {
       while (!stop.get() && torn.get() == null) {
         try {
-          val snap = IndexStore.readCurrent(spark, name)
-            .groupBy("version").agg(count(lit(1)).as("n")).collect()
+          val snap = spark.sql(
+            s"SELECT version, count(*) AS n FROM $t GROUP BY version").collect()
           if (snap.length != 1)
             torn.set(s"mixed versions in one read: ${snap.mkString(", ")}")
           else if (expected(snap(0).getLong(0)) != snap(0).getLong(1))
@@ -1333,57 +1246,32 @@ object Formats {
     // stray thread must not block JVM exit after the run is otherwise done
     reader.setDaemon(true)
     reader.start()
-    val last =
-      try { IndexStore.commit(name, "v2")(version(2)); IndexStore.commit(name, "v3")(version(3)) }
-      finally { stop.set(true); reader.join(120000) }
+    try (2 to 3).foreach(commitCensus(spark, dir, t, _))
+    finally { stop.set(true); reader.join(120000) }
     if (torn.get() != null)
       throw new IllegalStateException(s"snapshot isolation violated: ${torn.get()}")
-    // the deferred-read guarantee rides along: version 1, resolved before
-    // two further commits, must still scan completely (GC grace)
-    val v1 = spark.read.parquet(first.toString).count()
+    val v1 = spark.sql(s"SELECT count(*) FROM $t VERSION AS OF '1'").head().getLong(0)
     if (v1 != expected(1L))
       throw new IllegalStateException(s"deferred v1 scan saw $v1 of ${expected(1L)} rows")
-    spark.read.parquet(last.toString).orderBy("user_id")
+    spark.table(t).orderBy("user_id")
   }
 
-  /** Snapshot TIME TRAVEL (round 13): the commit protocol keeps the
-    * superseded predecessor (GC grace + unconditional previous-keep), so
-    * `VERSION AS OF current-1` is a directory read, no log replay. Three
-    * growing versions land through `IndexStore.commit`; the registered
-    * result is current ∪ previous, each tagged — the oracle re-derives
-    * both snapshots' content from the base table, so a GC that eats the
-    * predecessor, a mis-stamped supersession time, or a previousVersion
-    * that resolves the wrong directory all hash-mismatch. At 100 TB this
-    * is the audit/rollback read every table format sells. */
+  /** Snapshot TIME TRAVEL: three growing census versions land as INSERT
+    * OVERWRITE commits on a graft table, and the registered result is
+    * the current version ∪ `VERSION AS OF` its predecessor, each tagged —
+    * the oracle re-derives both snapshots' content from the base table,
+    * so a GC that eats the predecessor or a seq that resolves the wrong
+    * version hash-mismatches. At 100 TB this is the audit/rollback read
+    * every table format sells. */
   def snapshotHistory(spark: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.IndexStore
-    val name = s"snap_history_${sfTag(dir)}" // sf-scoped, same ADVICE r13 reason
-    // ledger path (round 15): the current∪previous read digests from the
-    // versions already on disk — no re-commit under a live session; see
-    // snapshotReader. The unconditional previous-keep guarantees the
-    // predecessor survives as long as the current version does. Round 16
-    // (ADVICE r15): current-but-no-predecessor under nonPublishing FAILS
-    // FAST instead of re-running the commit storm — re-committing would
-    // swap the published pointer under a concurrent session, which is
-    // exactly the artifact churn the mode exists to prevent.
-    if (!IndexStore.nonPublishingActive ||
-        IndexStore.currentVersion(name).isEmpty)
-      (1 to 3).foreach(v =>
-        IndexStore.commit(name, s"v$v")(userCensusVersion(spark, dir, v)))
-    else if (IndexStore.previousVersion(name).isEmpty)
-      throw new IllegalStateException(
-        s"'$name' has a current version but no predecessor on disk (GC'd " +
-          "or crashed lineage) — refusing to re-commit under nonPublishing")
-    val current = IndexStore.readCurrent(spark, name)
-      .withColumn("snap", lit("current"))
-    val prevPath = IndexStore.previousVersion(name).getOrElse(
-      throw new IllegalStateException(
-        "time travel lost the predecessor: no previous version on disk"))
-    val previous = spark.read.parquet(prevPath.toString)
-      .withColumn("snap", lit("previous"))
-    current.unionByName(previous)
-      .select(col("snap"), col("user_id"), col("n_events"), col("version"))
-      .orderBy("snap", "user_id")
+    val t = freshCensus(spark, dir, "snap_history")
+    (2 to 3).foreach(commitCensus(spark, dir, t, _))
+    spark.sql(
+      s"""SELECT 'current' AS snap, user_id, n_events, version FROM $t
+         |UNION ALL
+         |SELECT 'previous' AS snap, user_id, n_events, version
+         |FROM $t VERSION AS OF '2'
+         |ORDER BY snap, user_id""".stripMargin)
   }
 
   /** The three lineitem key extrema as ONE bounded driver row (the
@@ -1397,14 +1285,22 @@ object Formats {
     (ext.getLong(0), ext.getLong(1), ext.getLong(2))
   }
 
-  /** 8-bit interleave of the two 4-bit bucket columns `bxx`/`byy` — the
-    * z-value. Shared by the census and the physical layout writer so the
-    * clustering they report/produce can never drift apart. */
-  private val ZvExpr =
-    """(bxx % 2) * 1 + (byy % 2) * 2 +
-      |((bxx div 2) % 2) * 4 + ((byy div 2) % 2) * 8 +
-      |((bxx div 4) % 2) * 16 + ((byy div 4) % 2) * 32 +
-      |((bxx div 8) % 2) * 64 + ((byy div 8) % 2) * 128""".stripMargin
+  /** Adds the 16×16 grid cell of each lineitem row — the partkey and
+    * suppkey buckets `bxx`/`byy` under the extrema `maxp`/`maxs` — and its
+    * z-value `zv`, the 8-bit interleave of the two 4-bit buckets. Shared
+    * by the censuses and the physical layout writer so the clustering
+    * they report/produce can never drift apart. Keys are 0-based in the
+    * generated tables: bucket k*16 div (max+1) keeps every bucket in
+    * [0,15] with no negative arithmetic (whose div/mod semantics differ
+    * between engines). */
+  private def withGridCell(df: DataFrame, maxp: Long, maxs: Long): DataFrame =
+    df.withColumn("bxx", expr(s"CAST((l_partkey * 16) div (${maxp + 1}L) AS INT)"))
+      .withColumn("byy", expr(s"CAST((l_suppkey * 16) div (${maxs + 1}L) AS INT)"))
+      .withColumn("zv", expr(
+        """(bxx % 2) * 1 + (byy % 2) * 2 +
+          |((bxx div 2) % 2) * 4 + ((byy div 2) % 2) * 8 +
+          |((bxx div 4) % 2) * 16 + ((byy div 4) % 2) * 32 +
+          |((bxx div 8) % 2) * 64 + ((byy div 8) % 2) * 128""".stripMargin))
 
   /** Z-order clustering census (round 13) — the multi-dimensional layout
     * technique behind OPTIMIZE ZORDER BY: bucket two scan dims into 16
@@ -1425,14 +1321,7 @@ object Formats {
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
     val (maxp, maxs, maxo) = keyExtrema(spark, dir)
-    // keys are 0-based in the generated tables: bucket k*16 div (max+1)
-    // keeps every bucket in [0,15] with no negative arithmetic (whose
-    // div/mod semantics differ between engines)
-    val b = li
-      .withColumn("bxx", expr(s"CAST((l_partkey * 16) div (${maxp + 1}L) AS INT)"))
-      .withColumn("byy", expr(s"CAST((l_suppkey * 16) div (${maxs + 1}L) AS INT)"))
-    val z = b.withColumn("zv", expr(ZvExpr))
-    censusPair(z, "zorder" -> "zv div 16",
+    censusPair(withGridCell(li, maxp, maxs), "zorder" -> "zv div 16",
       "linear" -> s"(l_orderkey * 16) div (${maxo + 1}L)")
   }
 
@@ -1474,10 +1363,7 @@ object Formats {
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
     val (maxp, maxs, _) = keyExtrema(spark, dir)
-    val b = withHilbertDistance(li
-      .withColumn("bxx", expr(s"CAST((l_partkey * 16) div (${maxp + 1}L) AS INT)"))
-      .withColumn("byy", expr(s"CAST((l_suppkey * 16) div (${maxs + 1}L) AS INT)"))
-      .withColumn("zv", expr(ZvExpr)))
+    val b = withHilbertDistance(withGridCell(li, maxp, maxs))
     censusPair(b, "hilbert" -> "hd div 24", "zorder24" -> "zv div 24")
   }
 
@@ -1487,7 +1373,7 @@ object Formats {
     * 3·rx + ry − 2·rx·ry so both engines share one arithmetic form),
     * then reflect+swap into the subsquare's frame. Shared by the census
     * ([[hilbertCluster]]) and the physical layout writer
-    * ([[hilbertLayouts]], round 15) so the clustering they
+    * ([[layoutTable]]) so the clustering they
     * report/produce can never drift apart. */
   private def withHilbertDistance(df: DataFrame): DataFrame = {
     var b = df
@@ -1506,206 +1392,97 @@ object Formats {
     b.drop("hx", "hy")
   }
 
-  /** Writes lineitem (partkey, suppkey, quantity) to TWO physical
-    * multi-file layouts once per sf dir (marker guarded): `zorder/`
-    * chunked by z-value prefix, `linear/` chunked by orderkey range —
-    * the exact chunkings [[zorderCluster]] reports on. Each chunk lands
-    * as ONE parquet file in its own `file_id=N` directory: the
-    * `repartition(col)` puts every chunk's rows in a single task, so the
-    * partitioned write emits exactly one file per chunk. This is the
-    * `repartitionByRange`-before-write the census's scale note promises,
-    * made deterministic (range-sampler boundaries would vary run to
-    * run; the explicit `file_id` is exact integer arithmetic both
-    * engines reproduce). */
-  private def zorderLayouts(spark: SparkSession, dir: String): String =
-    materialized.getOrElseUpdate(s"$dir#zlayout", {
-      // locked + atomically-published first build (ADVICE r14 #2) — see
-      // [[buildOnce]]
-      buildOnce(s"/tmp/graft-src-zlayout-${sfTag(dir)}") { tmp =>
-        val (maxp, maxs, maxo) = keyExtrema(spark, dir)
-        val b = Tables(spark, dir, "lineitem")
-          .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
-            col("l_quantity"))
-          .withColumn("bxx", expr(s"CAST((l_partkey * 16) div (${maxp + 1}L) AS INT)"))
-          .withColumn("byy", expr(s"CAST((l_suppkey * 16) div (${maxs + 1}L) AS INT)"))
-        def write(df: DataFrame, fileId: String, sub: String): Unit =
-          df.withColumn("file_id", expr(fileId))
-            .select("l_partkey", "l_suppkey", "l_quantity", "file_id")
-            .repartition(col("file_id"))
-            .write.mode("overwrite").partitionBy("file_id")
-            .parquet(s"$tmp/$sub")
-        write(b.withColumn("zv", expr(ZvExpr)), "zv div 16", "zorder")
-        write(b, s"(l_orderkey * 16) div (${maxo + 1}L)", "linear")
+  /** Lands lineitem (partkey, suppkey, quantity) as the graft table of
+    * `layout`, ONE pool file per chunk — exactly the chunkings
+    * [[zorderCluster]] and [[hilbertCluster]] report on: z-value prefix
+    * and orderkey sixteenths, then 24-cell Hilbert and z-curve chunks,
+    * deliberately unaligned with the curves' power-of-4 blocks because
+    * that is where the curves differ. The per-file min/max stats the
+    * writers record are the manifest the skipping queries prune on.
+    * Landed once per process and sf; returns the table. */
+  private def layoutTable(spark: SparkSession, dir: String, layout: String): String = {
+    val (t, _) = srcTable(spark, s"layout_$layout", dir)
+    landOnce(t) {
+      val (maxp, maxs, maxo) = keyExtrema(spark, dir)
+      val b = withHilbertDistance(
+        withGridCell(Tables(spark, dir, "lineitem"), maxp, maxs))
+      val chunk = layout match {
+        case "zorder" => "zv div 16"
+        case "linear" => s"(l_orderkey * 16) div (${maxo + 1}L)"
+        case "hilbert24" => "hd div 24"
+        case "zorder24" => "zv div 24"
       }
-    })
-
-  /** The per-file min/max STATS MANIFEST over a written layout — exactly
-    * what a table format's metadata layer stores per data file — built
-    * once per (layout, sf dir) and published through the snapshot
-    * protocol ([[graft.similarity.IndexStore.ensure]]): immutable
-    * version + atomic swap, so a republish can never tear a reader's
-    * prune-then-scan. `_metadata.file_path` keys the stats to the
-    * PHYSICAL file, not the logical chunk. */
-  private def zorderManifest(spark: SparkSession, dir: String,
-      layout: String): DataFrame =
-    layoutManifest(spark, dir, zorderLayouts(spark, dir), layout)
-
-  /** The stats manifest over `base/$layout`, published once per
-    * (layout, sf dir, layout BUILD) through the snapshot protocol —
-    * shared by the z-order/linear harness and the Hilbert harness
-    * (round 15). The ensure key appends the layout's [[buildId]]: a
-    * manifest indexes one specific set of physical files, so a layout
-    * rebuild at the same sf (new part-file names) must invalidate it —
-    * a manifest that outlives its build prunes against paths that no
-    * longer exist. FormatsSpec pins the rebuild-coherence. */
-  private def layoutManifest(spark: SparkSession, dir: String,
-      base: String, layout: String): DataFrame = {
-    import graft.similarity.IndexStore
-    val key = s"$dir@${buildId(base)}"
-    val sname = s"zstats_$layout"
-    def statsAgg = spark.read.parquet(s"$base/$layout")
-      .select(col("_metadata.file_path").as("path"),
-        col("l_partkey"), col("l_suppkey"))
-      .groupBy("path")
-      .agg(min("l_partkey").as("min_p"), max("l_partkey").as("max_p"),
-        min("l_suppkey").as("min_s"), max("l_suppkey").as("max_s"),
-        count(lit(1)).as("n_rows"))
-    val df = IndexStore.ensure(spark, key, sname)(statsAgg)
-    if (IndexStore.nonPublishingActive) {
-      // round 16 (ADVICE r15): under the ledger's resolve mode, ensure
-      // may serve another build's manifest (the key is advisory there);
-      // its recorded file paths must still exist or the skipping queries
-      // crash mid-ledger on the parquet read. Validate the (bounded,
-      // ≤16-row) manifest and REPUBLISH when it is unusable — a plain
-      // publishing re-ensure would hit the marker fast path whenever the
-      // stale manifest's key still matches and re-serve the same dead
-      // paths; republish skips the fast path and forces the one rebuild
-      // that heals it. Nothing usable was being served, so the swap is
-      // safe even under the ledger.
-      val paths = df.select("path").collect().map(_.getString(0))
-      val usable = paths.nonEmpty && paths.forall(p =>
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(p.stripPrefix("file:"))))
-      if (!usable) return IndexStore.withPublishing(
-        IndexStore.republish(spark, key, sname)(statsAgg))
+      createChunked(spark, t, b.select(col("l_partkey"), col("l_suppkey"),
+        col("l_quantity"), expr(chunk).as("chunk")), 16)
     }
-    df
+    t
   }
 
-  /** DEMONSTRATED z-order file skipping (round 14, VERDICT r13 #1 — the
-    * census's missing second half): a two-dimensional predicate
-    * (partkey in the bottom quarter AND suppkey in the bottom quarter)
-    * is answered by consulting the stats manifest FIRST — a file is
-    * opened only when its [min,max] box on BOTH dims overlaps the
-    * predicate box (bucket arithmetic on the mins; the buckets are
-    * monotone, so bucket(min) < 4 IS the overlap test for a
-    * bottom-quarter range) — then scanning only the qualifying files.
-    * Under the z layout the quadrant cell (0,0) is one file: 1 of 16
-    * opened. Under the linear layout every orderkey chunk spans both
-    * full key ranges: all files opened. The registered row per layout is
-    * (files_total, files_read, n_rows, sum_qty); the oracle recomputes
-    * the aggregate UNPRUNED from the base table — equality proves the
-    * prune lost no rows — and re-derives both file counts from the same
-    * bucket arithmetic, so opening even one file too many (or too few)
-    * hash-mismatches. The manifest collect is bounded by the file count
-    * (16/layout); at 100 TB it is the format's metadata scan — small by
-    * construction — while the data scan stays distributed. */
+  /** `c`'s bucket `(c * 16) div (m + 1)` in [lo, hi), spelled as the key
+    * range the manifest stats prune on (bucket >= b ⟺ c >= ceil(b (m+1) /
+    * 16)) next to the bucket expression itself. */
+  private def bucketRange(c: String, m: Long, lo: Int, hi: Int): String = {
+    def key(b: Int): Long = (b * (m + 1) + 15) / 16
+    s"$c >= ${key(lo)} AND $c < ${key(hi)} AND " +
+      s"(($c * 16) div ${m + 1}L) BETWEEN $lo AND ${hi - 1}"
+  }
+
+  /** Each layout's row of a skipping census, ordered by layout: the
+    * aggregate of `pred` over the layout's table next to its scan's
+    * `files=K/N` — the files the stats could not skip (files_read) of the
+    * layout's files (files_total). */
+  private def skippingCensus(spark: SparkSession, dir: String,
+      layouts: Seq[String], pred: String): DataFrame =
+    layouts.map { layout =>
+      val q = spark.sql(
+        s"""SELECT count(*) AS n_rows, CAST(sum(l_quantity) AS BIGINT) AS sum_qty
+           |FROM ${layoutTable(spark, dir, layout)} WHERE $pred""".stripMargin)
+      val (read, total) = scannedFiles(q)
+      require(read > 0, s"$layout stats pruned ALL $total files — stats broken")
+      q.select(lit(layout).as("layout"), lit(total.toLong).as("files_total"),
+        lit(read.toLong).as("files_read"), col("n_rows"), col("sum_qty"))
+    }.reduce(_ unionByName _).orderBy("layout")
+
+  /** DEMONSTRATED z-order file skipping (the census's second half): a
+    * two-dimensional predicate (partkey in the bottom quarter AND suppkey
+    * in the bottom quarter) over graft tables whose manifest stats skip
+    * every file whose [min,max] box misses the predicate box. Under the z
+    * layout the quadrant cell (0,0) is one file: 1 of 16 opened. Under
+    * the linear layout every orderkey chunk spans both full key ranges:
+    * all files opened. The registered row per layout is (files_total,
+    * files_read, n_rows, sum_qty); the oracle recomputes the aggregate
+    * UNPRUNED from the base table — equality proves the prune lost no
+    * rows — and re-derives both file counts from the same bucket
+    * arithmetic, so opening even one file too many (or too few)
+    * hash-mismatches. */
   def zorderSkipping(spark: SparkSession, dir: String): DataFrame = {
     val (maxp, maxs, _) = keyExtrema(spark, dir)
-    val sides = Seq("linear", "zorder").map { layout =>
-      val man = zorderManifest(spark, dir, layout)
-        .select("path", "min_p", "min_s").collect()
-      val qualifying = man.filter { r =>
-        r.getLong(1) * 16 / (maxp + 1) < 4 && r.getLong(2) * 16 / (maxs + 1) < 4
-      }.map(_.getString(0)).toIndexedSeq
-      require(qualifying.nonEmpty,
-        s"$layout manifest pruned ALL ${man.length} files — stats broken")
-      spark.read.parquet(qualifying: _*)
-        .filter(expr(s"((l_partkey * 16) div (${maxp + 1}L)) < 4") &&
-          expr(s"((l_suppkey * 16) div (${maxs + 1}L)) < 4"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).cast("long").as("sum_qty"))
-        .select(lit(layout).as("layout"),
-          lit(man.length.toLong).as("files_total"),
-          lit(qualifying.length.toLong).as("files_read"),
-          col("n_rows"), col("sum_qty"))
-    }
-    sides.reduce(_ unionByName _).orderBy("layout")
+    skippingCensus(spark, dir, Seq("linear", "zorder"),
+      bucketRange("l_partkey", maxp, 0, 4) + " AND " +
+        bucketRange("l_suppkey", maxs, 0, 4))
   }
 
-  /** Writes lineitem (partkey, suppkey, quantity) to the 24-cell-chunked
-    * HILBERT and Z-CURVE layouts once per sf dir — the physical twins of
-    * [[hilbertCluster]]'s censuses, same one-file-per-chunk discipline
-    * and locked temp-dir + atomic-rename publication as
-    * [[zorderLayouts]]. 24-cell chunking is deliberately unaligned with
-    * the curves' power-of-4 blocks: that is where the curves differ. */
-  private def hilbertLayouts(spark: SparkSession, dir: String): String =
-    materialized.getOrElseUpdate(s"$dir#hlayout", {
-      buildOnce(s"/tmp/graft-src-hlayout-${sfTag(dir)}") { tmp =>
-        val (maxp, maxs, _) = keyExtrema(spark, dir)
-        val b = withHilbertDistance(Tables(spark, dir, "lineitem")
-          .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-          .withColumn("bxx", expr(s"CAST((l_partkey * 16) div (${maxp + 1}L) AS INT)"))
-          .withColumn("byy", expr(s"CAST((l_suppkey * 16) div (${maxs + 1}L) AS INT)"))
-          .withColumn("zv", expr(ZvExpr)))
-        def write(df: DataFrame, fileId: String, sub: String): Unit =
-          df.withColumn("file_id", expr(fileId))
-            .select("l_partkey", "l_suppkey", "l_quantity", "file_id")
-            .repartition(col("file_id"))
-            .write.mode("overwrite").partitionBy("file_id")
-            .parquet(s"$tmp/$sub")
-        write(b, "hd div 24", "hilbert24")
-        write(b, "zv div 24", "zorder24")
-      }
-    })
-
-  /** DEMONSTRATED Hilbert file skipping (round 15, VERDICT r14 #6 —
-    * [[hilbertCluster]] proves the tighter boxes, [[zorderSkipping]]
-    * proves skipping; this composes them): the predicate is the CENTER
-    * window of the grid — partkey and suppkey buckets both in [6, 9] —
-    * a range that straddles BOTH mid-grid z-jumps (the z-curve leaps
-    * across the whole grid when bit 3 of either dim flips, so the
-    * 24-cell z chunks covering the center carry grid-wide bounding
-    * boxes), while the jump-free Hilbert chunks keep their boxes local.
-    * Same manifest mechanism as [[zorderSkipping]]: consult the
-    * IndexStore-published per-file min/max stats, open only files whose
-    * box overlaps the predicate box on BOTH dims (bucket arithmetic on
-    * the extrema — buckets are monotone, so bucket(min/max key) IS the
-    * file's bucket box). On the full 16×16 grid the Hilbert layout
-    * opens 3 of 11 files, the 24-cell z layout 6 of 11 (FormatsSpec
-    * pins hilbert < zorder24). The registered row per layout is
+  /** DEMONSTRATED Hilbert file skipping ([[hilbertCluster]] proves the
+    * tighter boxes, [[zorderSkipping]] proves skipping; this composes
+    * them): the predicate is the CENTER window of the grid — partkey and
+    * suppkey buckets both in [6, 9] — a range that straddles BOTH
+    * mid-grid z-jumps (the z-curve leaps across the whole grid when bit
+    * 3 of either dim flips, so the 24-cell z chunks covering the center
+    * carry grid-wide bounding boxes), while the jump-free Hilbert chunks
+    * keep their boxes local. On the full 16×16 grid the Hilbert layout
+    * opens 3 of 11 files, the 24-cell z layout 6 of 11 (FormatsSpec pins
+    * hilbert < zorder24). The registered row per layout is
     * (files_total, files_read, n_rows, sum_qty); the oracle recomputes
-    * the aggregate UNPRUNED from the base table — equality proves the
-    * prune lost no rows — and re-derives BOTH file counts from the same
-    * curve arithmetic, so opening one file too many or too few
-    * hash-mismatches. At 100 TB this is the measured decision between
-    * the two clustering writes: same stats manifest, same prune, fewer
+    * the aggregate UNPRUNED from the base table and re-derives BOTH file
+    * counts from the same curve arithmetic, so opening one file too many
+    * or too few hash-mismatches. At 100 TB this is the measured decision
+    * between the two clustering writes: same stats, same prune, fewer
     * opens under the jump-free curve for range predicates. */
   def hilbertSkipping(spark: SparkSession, dir: String): DataFrame = {
     val (maxp, maxs, _) = keyExtrema(spark, dir)
-    val base = hilbertLayouts(spark, dir)
-    val sides = Seq("hilbert24", "zorder24").map { layout =>
-      val man = layoutManifest(spark, dir, base, layout)
-        .select("path", "min_p", "max_p", "min_s", "max_s").collect()
-      def bucketP(k: Long): Long = k * 16 / (maxp + 1)
-      def bucketS(k: Long): Long = k * 16 / (maxs + 1)
-      val qualifying = man.filter { r =>
-        bucketP(r.getLong(1)) <= 9 && bucketP(r.getLong(2)) >= 6 &&
-          bucketS(r.getLong(3)) <= 9 && bucketS(r.getLong(4)) >= 6
-      }.map(_.getString(0)).toIndexedSeq
-      require(qualifying.nonEmpty,
-        s"$layout manifest pruned ALL ${man.length} files — stats broken")
-      spark.read.parquet(qualifying: _*)
-        .filter(expr(s"((l_partkey * 16) div (${maxp + 1}L)) BETWEEN 6 AND 9") &&
-          expr(s"((l_suppkey * 16) div (${maxs + 1}L)) BETWEEN 6 AND 9"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).cast("long").as("sum_qty"))
-        .select(lit(layout).as("layout"),
-          lit(man.length.toLong).as("files_total"),
-          lit(qualifying.length.toLong).as("files_read"),
-          col("n_rows"), col("sum_qty"))
-    }
-    sides.reduce(_ unionByName _).orderBy("layout")
+    skippingCensus(spark, dir, Seq("hilbert24", "zorder24"),
+      bucketRange("l_partkey", maxp, 6, 10) + " AND " +
+        bucketRange("l_suppkey", maxs, 6, 10))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

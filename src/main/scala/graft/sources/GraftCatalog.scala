@@ -625,8 +625,9 @@ object GraftCatalog {
     * drops out, and the rest follow `graft.delete.mode`:
     *
     *  - COPY-ON-WRITE (the default): the file's rows outside (old mask ∪
-    *    matched) stream into a fresh `part-delete-…` pool file — the copy
-    *    loop [[compact]] runs, so the fresh file carries no DV;
+    *    matched) stream into a fresh `part-delete-…` pool file during the
+    *    same scan that finds the matches, so the fresh file carries no DV
+    *    (an unmatched file's copy is discarded);
     *  - MERGE-ON-READ (`dv`, the deletion-vector design every modern
     *    format grew for exactly this reason): a delete touching k rows of
     *    an f-row file writes a DV of the union mask instead of rewriting
@@ -648,22 +649,29 @@ object GraftCatalog {
         filters.forall(f => GraftFilterEval.matches(f, row, schema))
       var changed = false
       val updated = currentManifest(tableDir).flatMap { e =>
-        val matched = Array.newBuilder[Long]
-        if (!statsProveNoMatch(e, schema, filters))
-          GraftPool.foreachRow(tableDir, e, schema) { (pos, row) =>
-            if (hit(row)) matched += pos
-          }
-        val fresh = matched.result()
-        if (fresh.isEmpty) Some(e)
+        if (statsProveNoMatch(e, schema, filters)) Some(e)
         else {
-          changed = true
-          val union = (GraftPool.mask(tableDir, e) ++ fresh).sorted
-          if (union.length.toLong >= e.rows) None // fully masked: drop
-          else if (dvMode)
-            Some(e.copy(dv = Some(GraftPool.writeMask(tableDir, union))))
-          else GraftPool.write(tableDir, "part-delete", schema) { w =>
-            GraftPool.foreachRow(tableDir, e, schema, Some(union))(
-              (_, row) => w.write(row))
+          // COW streams the survivors out in the same pass that collects
+          // the matches; the copy is discarded unless it is needed
+          val out =
+            if (dvMode) None
+            else Some(new GraftPool.Writer(tableDir, "part-delete", schema))
+          val matched = Array.newBuilder[Long]
+          try GraftPool.foreachRow(tableDir, e, schema) { (pos, row) =>
+            if (hit(row)) matched += pos else out.foreach(_.write(row))
+          } catch { case NonFatal(t) => out.foreach(_.abort()); throw t }
+          val fresh = matched.result()
+          if (fresh.isEmpty) { out.foreach(_.abort()); Some(e) }
+          else {
+            changed = true
+            val union = (GraftPool.mask(tableDir, e) ++ fresh).sorted
+            if (union.length.toLong >= e.rows) { // fully masked: drop
+              out.foreach(_.abort()); None
+            } else out match {
+              case Some(w) => w.finish()
+              case None =>
+                Some(e.copy(dv = Some(GraftPool.writeMask(tableDir, union))))
+            }
           }
         }
       }
@@ -1755,15 +1763,14 @@ private[sources] object GraftPool {
       out
     }
 
-  /** Calls `f(pos, row)` for every row of `e` whose ordinal `skip`
-    * (default: the entry's own DV mask) does not hold, padded to
-    * `schema`'s width. */
-  def foreachRow(tableDir: Path, e: ManifestEntry, schema: StructType,
-      skip: Option[Array[Long]] = None)(f: (Long, InternalRow) => Unit): Unit = {
+  /** Calls `f(pos, row)` for every row of `e` its DV mask does not hold,
+    * padded to `schema`'s width. */
+  def foreachRow(tableDir: Path, e: ManifestEntry, schema: StructType)(
+      f: (Long, InternalRow) => Unit): Unit = {
     val cols = e.colsOr(schema.length)
     val r = new Reader(file(tableDir, e.file),
       StructType(schema.fields.take(cols)),
-      new GraftDv.Cursor(skip.getOrElse(mask(tableDir, e))))
+      new GraftDv.Cursor(mask(tableDir, e)))
     try {
       var row = r.next()
       while (row != null) {

@@ -119,15 +119,23 @@ class FormatsSpec extends SparkSpec {
     assert(z.getLong(4) == full.getLong(1))
   }
 
+  /** The compaction table's (fragmented, compacted) history entries,
+    * after asserting their kinds: one append, then one compact. */
+  private def compactionHistory() = {
+    Formats.compaction(spark, sf).collect()
+    val (_, tdir) = Formats.srcTable(spark, "compaction", sf)
+    val hist = GraftCatalog.describeHistory(tdir).sortBy(_.seq)
+    assert(hist.flatMap(_.kind) ==
+      Seq(GraftCatalog.Kind.Append, GraftCatalog.Kind.Compact),
+      s"compaction history kinds: ${hist.map(_.kind)}")
+    (hist(0), hist(1))
+  }
+
   test("compaction collapses the 64-file fragment layout by >=8x, keeping rows") {
-    val (frag, out) = Formats.compactionDirs(spark, sf)
-    def parts(d: String): Int = Option(new java.io.File(d).listFiles())
-      .getOrElse(Array.empty)
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    val (nFrag, nOut) = (parts(frag), parts(out))
-    assert(nFrag == 64, s"fragment layout has $nFrag files")
-    assert(nOut * 8 <= nFrag, s"compacted to $nOut files from $nFrag")
-    assert(spark.read.parquet(out).count() == spark.read.parquet(frag).count())
+    val (frag, out) = compactionHistory()
+    assert(frag.files == 64, s"fragment layout has ${frag.files} files")
+    assert(out.files * 8 <= frag.files, s"compacted to ${out.files} files from ${frag.files}")
+    assert(out.rows == frag.rows)
   }
 
   test("hilbert skipping opens strictly fewer files than the 24-cell z " +
@@ -145,16 +153,18 @@ class FormatsSpec extends SparkSpec {
 
   test("delete propagation (r15): the current snapshot holds zero " +
       "forgotten users; the pre-delete version stays on the lineage for audit") {
-    import graft.similarity.IndexStore
-    Formats.forgetUser(spark, sf).collect() // ensures both versions
-    val name = "forget_events_" + sf.replaceAll("[^A-Za-z0-9.]", "_")
-    assert(IndexStore.currentTag(name).contains("forgotten"))
-    val cur = spark.read.parquet(IndexStore.currentVersion(name).get.toString)
+    Formats.forgetUser(spark, sf).collect() // lands load + delete
+    val (t, tdir) = Formats.srcTable(spark, "forget_user", sf)
+    val hist = GraftCatalog.describeHistory(tdir).sortBy(_.seq)
+    assert(hist.flatMap(_.kind) ==
+      Seq(GraftCatalog.Kind.Append, GraftCatalog.Kind.Delete),
+      s"forget history kinds: ${hist.map(_.kind)}")
+    val cur = spark.table(t)
     assert(cur.filter(col("user_id") % Formats.ForgetModulus === 0).count() == 0,
       "a forgotten user's rows survived the delete")
     // audit read: the predecessor still carries the deleted rows (until
-    // the compliance-window GC collects it)
-    val prev = spark.read.parquet(IndexStore.previousVersion(name).get.toString)
+    // a VACUUM past its retention collects it)
+    val prev = spark.sql(s"SELECT * FROM $t VERSION AS OF '${hist(0).seq}'")
     val forgotten = prev.filter(col("user_id") % Formats.ForgetModulus === 0).count()
     assert(forgotten > 0, "the fixture must actually exercise the delete")
     assert(prev.count() == cur.count() + forgotten,
@@ -195,7 +205,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("pruned delete (r15): untouched bucket files are carried by " +
-      "HARDLINK, only the overlapping bucket is rewritten") {
+      "REFERENCE, only the overlapping bucket is rewritten") {
     val row = Formats.forgetPruned(spark, sf).collect()(0)
     assert(row.getLong(1) == 1L,
       s"exactly one bucket overlaps the forget range, got ${row.getLong(1)}")
@@ -203,70 +213,92 @@ class FormatsSpec extends SparkSpec {
     val maxu = graft.Tables(spark, sf, "events")
       .agg(max("user_id")).collect()(0).getLong(0)
     val fb32 = Formats.forgetBucket32(maxu)
-    val rewrittenUb = (fb32 / 2).toInt
-    val tag = sf.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = new java.io.File(s"/tmp/graft-src-ufull-$tag")
-    // the derived layout is keyed on the base's build id (r16, ADVICE
-    // r15): resolve it from the base's marker, exactly as Formats does
-    val baseBuild = java.nio.file.Files.readString(
-      new java.io.File(base, "_COMPLETE").toPath).trim
-    val pruned = new java.io.File(s"/tmp/graft-src-uforgot-$tag-$baseBuild")
-    def parts(d: java.io.File) = Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("part-"))
-    // an untouched bucket: same physical inode in both layouts (the
-    // local spelling of manifest file-reuse — the delete never copied it)
-    val untouched = parts(new java.io.File(base, "ub=0"))
-    assert(untouched.nonEmpty)
-    untouched.foreach { f =>
-      val twin = new java.io.File(new java.io.File(pruned, "ub=0"), f.getName)
-      assert(twin.exists, s"carried file missing: ${twin}")
-      assert(java.nio.file.Files.isSameFile(f.toPath, twin.toPath),
-        "untouched bucket must be hardlinked, not copied")
-    }
-    // the rewritten bucket: fresh file(s), and zero forget-range rows
-    val rewritten = new java.io.File(pruned, s"ub=$rewrittenUb")
-    assert(parts(rewritten).forall(f =>
-      !parts(new java.io.File(base, s"ub=$rewrittenUb")).exists(_.getName == f.getName)),
-      "the overlapping bucket must be a fresh rewrite")
-    val survivors = spark.read.parquet(rewritten.toString)
-      .filter(expr(s"(user_id * 32) div (${maxu + 1}L) = $fb32"))
-    assert(survivors.count() == 0, "forget-range rows survived the rewrite")
+    val forgetRange = expr(s"(user_id * 32) div (${maxu + 1}L) = $fb32")
+    val (t, tdir) = Formats.srcTable(spark, "forget_pruned", sf)
+    val before = GraftCatalog.findVersionBySeq(tdir, "1")
+      .map(GraftCatalog.readManifest).get
+    val after = GraftCatalog.currentManifest(tdir)
+    // untouched entries: the SAME pool files in both manifests (the
+    // delete never copied them)
+    val carried = before.map(_.file).toSet.intersect(after.map(_.file).toSet)
+    assert(carried.size == before.size - 1,
+      s"${carried.size} of ${before.size} files carried over by reference")
+    // the rewritten bucket: one fresh file (none when every row of the
+    // bucket was forgotten) holding zero forget-range rows
+    val fresh = after.map(_.file).filterNot(carried)
+    assert(fresh.size <= 1, s"more than one fresh file: $fresh")
+    assert(spark.table(t).filter(col("_file").isin(fresh: _*) && forgetRange)
+      .count() == 0, "forget-range rows survived the rewrite")
+    assert(spark.table(t).filter(forgetRange).count() == 0)
+    assert(spark.sql(s"SELECT * FROM $t VERSION AS OF '1'").filter(forgetRange)
+      .count() > 0, "the fixture must actually exercise the delete")
   }
 
-  test("stats manifests follow a layout REBUILD (r15): wiping and " +
-      "rebuilding the physical layout invalidates the published manifest") {
-    val before = Formats.hilbertSkipping(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSeq
-    // simulate an operator /tmp cleanup that takes the side layout but
-    // not the index store, followed by a fresh process: the layout
-    // rebuilds with NEW part-file names, and a manifest keyed only by sf
-    // would keep pruning against the deleted old files (PATH_NOT_FOUND)
-    val layout = new java.io.File(s"/tmp/graft-src-hlayout-" +
-      sf.replaceAll("[^A-Za-z0-9.]", "_"))
-    assert(layout.isDirectory, "the first run must have built the layout")
-    graft.similarity.IndexStore.deleteRecursively(layout.toPath)
-    Formats.resetLayoutsFor(sf)
-    val after = Formats.hilbertSkipping(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSeq
-    assert(after == before,
-      s"rebuilt layout must re-derive the same skipping census: $after vs $before")
+  test("one pool file per chunk: each layout table holds as many files as " +
+      "its census has chunks") {
+    val chunks = (Formats.zorderCluster(spark, sf).collect() ++
+      Formats.hilbertCluster(spark, sf).collect())
+      .groupBy(_.getString(0)).map { case (l, rs) => l -> rs.length.toLong }
+    def files(q: String, rows: Array[org.apache.spark.sql.Row]): Unit =
+      rows.foreach { r =>
+        val layout = r.getString(0)
+        val census = chunks(if (layout == "hilbert24") "hilbert" else layout)
+        assert(r.getLong(1) == census,
+          s"$q: layout $layout has ${r.getLong(1)} files for $census chunks")
+      }
+    files("src_zorder_skipping", Formats.zorderSkipping(spark, sf).collect())
+    files("src_hilbert_skipping", Formats.hilbertSkipping(spark, sf).collect())
+    val maxu = graft.Tables(spark, sf, "events")
+      .agg(max("user_id")).collect()(0).getLong(0)
+    val buckets = graft.Tables(spark, sf, "events")
+      .select(expr(s"(user_id * 16) div (${maxu + 1}L)")).distinct().count()
+    val pruned = Formats.forgetPruned(spark, sf).collect()(0).getLong(0)
+    assert(pruned == buckets,
+      s"src_forget_pruned: $pruned files for $buckets user buckets")
+  }
+
+  test("the scattered inserts stripe 4 files on a 2-core session too " +
+      "(src_dsv2_cluster, src_dsv2_zorder)") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+    // dsv2Zorder runs on the shared extensions session: pin it there too
+    val ext = graft.Sessions.withExtensions(s)
+    val prior = ext.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+    ext.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+    try {
+      assert(Formats.dsv2Cluster(s, sf).count() > 0, "src_dsv2_cluster")
+      assert(Formats.dsv2Zorder(s, sf).count() > 0, "src_dsv2_zorder")
+    } finally prior match {
+      case Some(v) => ext.conf.set("spark.sql.leafNodeDefaultParallelism", v)
+      case None => ext.conf.unset("spark.sql.leafNodeDefaultParallelism")
+    }
+  }
+
+  test("the seven catalog-backed src_* queries commit no index-store " +
+      "version and hardlink nothing: only forgetGc may") {
+    val code = graft.MainSources.code(
+      java.nio.file.Paths.get("src/main/scala/graft/sources/Formats.scala"))
+    val at = code.indexOf("def forgetGc(")
+    val end = code.indexOf("\n  }\n", at)
+    assert(at >= 0 && end > at, "forgetGc not found in Formats.scala")
+    val (inside, outside) =
+      (code.substring(at, end), code.substring(0, at) + code.substring(end))
+    assert(inside.contains("IndexStore.commit("), "the guard is void")
+    for (needle <- Seq("IndexStore.commit(", "Files.createLink(")) {
+      assert(!outside.contains(needle),
+        s"$needle in Formats.scala outside forgetGc")
+    }
   }
 
   test("compaction rides the snapshot lineage: time travel reads the " +
       "pre-compaction layout (r15)") {
-    import graft.similarity.IndexStore
-    val (frag, out) = Formats.compactionDirs(spark, sf)
-    val name = Formats.compactionName(sf)
-    // current = the compacted rewrite, previous = the fragmented layout
-    assert(IndexStore.currentTag(name).contains("compacted"))
-    assert(IndexStore.currentVersion(name).map(_.toString).contains(out))
-    assert(IndexStore.previousVersion(name).map(_.toString).contains(frag),
-      "OPTIMIZE must keep the pre-compaction version on the lineage")
-    // the audit read: VERSION AS OF pre-compaction is a directory scan
-    // with full row fidelity
-    val prev = spark.read.parquet(
-      IndexStore.previousVersion(name).get.toString)
-    assert(prev.count() == spark.read.parquet(out).count(),
+    val (frag, out) = compactionHistory()
+    assert(out.isCurrent && !frag.isCurrent)
+    // the audit read: VERSION AS OF pre-compaction holds the same rows
+    val (t, _) = Formats.srcTable(spark, "compaction", sf)
+    val prev = spark.sql(s"SELECT * FROM $t VERSION AS OF '${frag.seq}'")
+    val cur = spark.table(t)
+    assert(prev.exceptAll(cur).isEmpty && cur.exceptAll(prev).isEmpty,
       "the pre-compaction snapshot must hold the same rows")
   }
 }

@@ -169,35 +169,41 @@ class SnapshotCommitSpec extends SparkSpec
   test("a reader racing compaction always sees one complete layout, " +
       "pre- or post-rewrite (r15, VERDICT r14 #5)") {
     val dir = "/root/testdata/sf0.001"
-    val name = Formats.compactionName(dir)
-    wipe(name)
-    Formats.resetCompactionFor(dir)
+    val (table, tdir) = Formats.srcTable(spark, "race_compaction", dir)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
     val expected = graft.Tables(spark, dir, "documents").count()
     val stop = new AtomicBoolean(false)
     val torn = new AtomicReference[String](null)
     val reader = new Thread(() => {
       while (!stop.get() && torn.get() == null) {
+        // before the first commit there is no table, or an empty one —
+        // not a tear; once a version is committed every read is complete
+        val committed = GraftCatalog.describeHistory(tdir).nonEmpty
         try {
-          val n = IndexStore.readCurrent(spark, name).count()
-          if (n != expected)
+          val n = spark.table(table).count()
+          if (n != expected && (committed || n != 0L))
             torn.set(s"torn compaction read: $n of $expected rows")
         } catch {
-          // before the first commit there is nothing to read — not a tear
-          case e: IllegalStateException
-            if String.valueOf(e.getMessage).contains("no published version") => ()
+          case e: org.apache.spark.sql.AnalysisException
+            if !committed && String.valueOf(e.getMessage)
+              .contains("TABLE_OR_VIEW_NOT_FOUND") => ()
           case e: Throwable => torn.set(s"reader threw: $e")
         }
       }
     })
     reader.start()
-    val (frag, out) =
-      try Formats.compactionDirs(spark, dir)
-      finally { stop.set(true); reader.join(120000) }
+    try Formats.landCompaction(spark, dir, table, tdir)
+    finally { stop.set(true); reader.join(120000) }
     assert(torn.get() == null, String.valueOf(torn.get()))
-    // the rewrite is a snapshot commit: current = compacted,
-    // previous = the fragmented layout it replaced
-    assert(IndexStore.currentVersion(name).map(_.toString).contains(out))
-    assert(IndexStore.previousVersion(name).map(_.toString).contains(frag))
+    // the rewrite is a snapshot commit: current = compacted, the
+    // fragmented load it replaced stays readable by VERSION AS OF
+    val hist = GraftCatalog.describeHistory(tdir).sortBy(_.seq)
+    assert(hist.flatMap(_.kind) ==
+      Seq(GraftCatalog.Kind.Append, GraftCatalog.Kind.Compact))
+    assert(hist.map(_.files) == Seq(64, 1), s"files per version: ${hist.map(_.files)}")
+    assert(spark.sql(s"SELECT * FROM $table VERSION AS OF '${hist.head.seq}'")
+      .count() == expected)
+    spark.sql(s"DROP TABLE $table")
   }
 
   test("src_snapshot_reader: final snapshot equals the direct full-table census") {
